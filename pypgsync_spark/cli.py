@@ -138,6 +138,8 @@ def _stats_dict(stats) -> dict:
         "low": stats.low,
         "high": stats.high,
         "delta_rows": stats.delta_rows,
+        "rows_changed": stats.rows_changed,
+        "wrote": stats.wrote,
         "slices": len(stats.plan.slices) if stats.plan else None,
     }
 

@@ -9,7 +9,7 @@ version column, source beating destination on ties. This removes the
 order-dependence entirely (same fixed point, no sequencing needed) —
 a property tested in tests/test_merge.py.
 
-Two physical formulations, both shuffle-once on the merge key:
+Physical formulations:
 
 - ``upsert_merge``: ``unionByName`` + ``row_number() over (partition by
   pk order by version desc, source-priority desc) == 1``. One shuffle,
@@ -22,6 +22,10 @@ Two physical formulations, both shuffle-once on the merge key:
   broadcast). ``join_merge`` is the version-GUARDED join form whose
   full-outer sort-merge exploits a bucketed destination (only the
   delta shuffles).
+- ``delta_wins_merge``: the sync loop's form. Under the low-watermark
+  invariant (every delta version >= the destination's MAX) the delta
+  wins every key it carries, so the destination needs no shuffle at
+  all: a left-anti join against the delta's keys, plus the delta.
 
 At 100 TB the winning strategy is to keep the destination bucketed (or
 Delta/Iceberg-partitioned) on the merge key so the union-window shuffle
@@ -147,6 +151,54 @@ def join_merge(
         if c not in keys
     ]
     return joined.select(*[F.col(k) for k in keys], *picked).select(*cols)
+
+
+def delta_wins_merge(
+    dst: DataFrame,
+    delta: DataFrame,
+    keys: Sequence[str],
+    version_col: str,
+    broadcast_keys: bool = False,
+) -> DataFrame:
+    """The sync loop's upsert: every key the delta carries takes its
+    latest delta row, every other destination row stays as it is.
+
+    PRECONDITION: every delta version is >= the destination's MAX
+    version — exactly what the low-watermark read guarantees (the delta
+    is ``version >= MAX(dst.version)``). The delta then wins every key
+    it carries, ties included, so with ``dst`` unique per key the
+    result equals :func:`upsert_merge`'s row for row
+    (tests/test_merge.py::test_delta_wins_merge_matches_upsert_merge).
+    Unlike :func:`coalesce_merge` it replaces whole rows, so a NULL in
+    a delta column is written as NULL.
+
+    Plan: ``dst`` left-anti ``keys(latest_per_key(delta))`` union
+    ``latest_per_key(delta)``, keys matched null-safely the way the
+    window in :func:`upsert_merge` groups NULL keys. Only the delta
+    shuffles (the window) when the key set is broadcast: the planner
+    does so when its estimate fits the threshold, and
+    ``broadcast_keys`` forces it for a caller that knows the delta is
+    small (sync_once, from its exact row count). The destination then
+    streams through a map-side anti-join instead of being re-shuffled
+    with the union.
+    """
+    if not keys:
+        raise ValueError("merge requires at least one key column")
+    cols = dst.columns
+    if set(cols) != set(delta.columns):
+        raise ValueError(f"schema mismatch: dst={cols} delta={delta.columns}")
+    latest = latest_per_key(delta.select(*cols), keys, version_col)
+    delta_keys = latest.select(*keys)
+    if broadcast_keys:
+        delta_keys = F.broadcast(delta_keys)
+    hit = [F.col(f"d.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
+    kept = dst.alias("d").join(delta_keys.alias("s"), hit, "left_anti")
+    # The union appends the delta's partitions to the destination's; a
+    # narrow coalesce back to the destination's file count (never below
+    # the default parallelism) keeps a store's file count flat pass
+    # after pass instead of growing by the delta's partitions.
+    parts = max(len(dst.inputFiles()), dst.sparkSession.sparkContext.defaultParallelism)
+    return kept.select(*cols).unionByName(latest).coalesce(parts)
 
 
 def latest_per_key(df: DataFrame, keys: Sequence[str], version_col: str) -> DataFrame:

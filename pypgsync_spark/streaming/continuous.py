@@ -37,17 +37,22 @@ def _merge_stream_writer(
     """The ONE foreachBatch merge body both streaming syncs share (r10
     review: it was duplicated verbatim between stream_sync and
     stream_sync_cdc, the copy-with-slight-variation drift shape).
-    Dedup inside the batch first (a batch may carry several versions of
-    one key), then LWW-merge onto the store — idempotent, so epoch
-    replays after a crash are safe. ``batch_rows`` optionally collects
-    per-epoch input row counts (test/observability hook)."""
+    LWW-merge each batch onto the store — idempotent, so epoch replays
+    after a crash are safe. ``upsert_merge`` itself resolves several
+    versions of one key inside a batch, so only the first batch into an
+    empty store needs ``latest_per_key``. The merge stays
+    version-guarded (not ``delta_wins_merge``): a file stream delivers
+    late rows older than the store's MAX. ``batch_rows`` optionally
+    collects per-epoch input row counts (test/observability hook)."""
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
         if batch_rows is not None:
             batch_rows.append(batch.count())
-        delta = latest_per_key(batch, keys, version_col)
         dst = store.read()
-        merged = delta if dst is None else upsert_merge(dst, delta, keys, version_col)
+        if dst is None:
+            merged = latest_per_key(batch, keys, version_col)
+        else:
+            merged = upsert_merge(dst, batch, keys, version_col)
         store.write(merged)
 
     writer = src.writeStream.foreachBatch(merge_batch).option(

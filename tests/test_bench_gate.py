@@ -25,6 +25,8 @@ def _block_spark(monkeypatch):
 
 
 def test_round_artifact_refuses_on_high_load(monkeypatch, capsys):
+    # no start-of-run quiet wait: it would sleep out its whole budget
+    monkeypatch.setenv("SPARK_GRAFT_START_QUIET_BUDGET", "0")
     monkeypatch.setattr(bench.os, "getloadavg", lambda: (4.2, 3.0, 2.0))
     monkeypatch.setattr(bench.sys, "argv", ["bench.py", "--round-artifact"])
     _block_spark(monkeypatch)
@@ -38,6 +40,7 @@ def test_round_artifact_refuses_on_high_load(monkeypatch, capsys):
 def test_scratch_run_not_gated_by_load(monkeypatch):
     """No flag -> the gate must not trip; Spark startup is the next
     thing main() does, so the sentinel raising IS the pass signal."""
+    monkeypatch.setenv("SPARK_GRAFT_START_QUIET_BUDGET", "0")
     monkeypatch.setattr(bench.os, "getloadavg", lambda: (9.9, 9.9, 9.9))
     monkeypatch.setattr(bench.sys, "argv", ["bench.py"])
     _block_spark(monkeypatch)

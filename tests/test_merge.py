@@ -8,10 +8,13 @@ from __future__ import annotations
 import random
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import types as T
 
 from pypgsync_spark.operators.merge import (
     coalesce_merge,
+    delta_wins_merge,
     latest_per_key,
     new_keys_only,
     upsert_merge,
@@ -182,3 +185,99 @@ def test_bucket_checksums_identical_sides_all_in_sync(spark):
     out = diff_buckets(df, df, "k", "v", num_buckets=8)
     assert out.filter("NOT in_sync").count() == 0
     assert out.count() == 8
+
+
+KEYED = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("k2", T.StringType()),
+        T.StructField("updated", T.LongType()),
+        T.StructField("val", T.StringType()),
+    ]
+)
+KEYS2 = ["id", "k2"]
+
+
+def rows_multiset(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+@st.composite
+def _sync_invariant_cases(draw):
+    """A destination unique per (nullable) composite key and a delta
+    whose every version is >= the destination's MAX: ties with the MAX,
+    several versions of one key, NULL key parts, NULL payloads."""
+    key = st.tuples(st.sampled_from([None, 0, 1, 2, 3]), st.sampled_from([None, "a", "b"]))
+    val = st.one_of(st.none(), st.sampled_from(["x", "y", "z"]))
+    dst_keys = draw(st.lists(key, max_size=12, unique=True))
+    dst = [(i, k, draw(st.integers(0, 20)), draw(val)) for i, k in dst_keys]
+    top = max((r[2] for r in dst), default=0)
+    # unique (key, version) inside the delta: which of two equal-version
+    # rows of one key wins is arbitrary in both merges
+    delta_kv = draw(
+        st.lists(
+            st.tuples(key, st.integers(top, top + 3)),
+            min_size=1, max_size=12, unique=True,
+        )
+    )
+    delta = [(i, k, v, draw(val)) for (i, k), v in delta_kv]
+    return dst, delta, draw(st.booleans())
+
+
+@given(case=_sync_invariant_cases())
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_delta_wins_merge_matches_upsert_merge(spark, case):
+    """Under the sync invariant (every delta version >= the
+    destination's MAX) the delta-wins merge equals upsert_merge row for
+    row, broadcast key set or not."""
+    dst_rows, delta_rows, bcast = case
+    dst = spark.createDataFrame(dst_rows, KEYED)
+    delta = spark.createDataFrame(delta_rows, KEYED)
+    got = delta_wins_merge(dst, delta, KEYS2, "updated", broadcast_keys=bcast)
+    assert rows_multiset(got) == rows_multiset(upsert_merge(dst, delta, KEYS2, "updated"))
+
+
+def test_delta_wins_merge_never_shuffles_destination(spark, tmp_path):
+    """Only the delta shuffles: the destination scan reaches the
+    anti-join and the union with no exchange above it, and the result
+    has no more partitions (files, once written) than the destination
+    had files, or the default parallelism if that is larger."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "dst")
+    spark.range(0, 2000).select(
+        F.col("id"), F.lit(1).cast("long").alias("updated"), F.lit("v").alias("val")
+    ).repartition(6).write.parquet(path)
+    # one scan partition per file, as for a store of multi-MB files
+    # (small files would otherwise be packed into fewer partitions)
+    conf = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "1k")
+    try:
+        dst = spark.read.parquet(path)
+        delta = spark.createDataFrame(
+            [(5, 2, "new"), (5, 3, "newer"), (9000, 2, "ins")], SCHEMA
+        )
+        merged = delta_wins_merge(dst, delta, ["id"], "updated", broadcast_keys=True)
+        n_parts = merged.rdd.getNumPartitions()
+    finally:
+        spark.conf.set(conf, before)
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan, plan
+    # walk up from the destination scan: no exchange on its path
+    lines = plan.splitlines()
+    i = next(n for n, ln in enumerate(lines) if "FileScan" in ln and path in ln)
+    depth = len(lines[i]) - len(lines[i].lstrip(" :+-"))
+    for ln in reversed(lines[:i]):
+        d = len(ln) - len(ln.lstrip(" :+-"))
+        if d < depth:
+            assert "Exchange" not in ln, plan
+            depth = d
+    assert n_parts <= max(6, spark.sparkContext.defaultParallelism)
+    out = {r["id"]: (r["updated"], r["val"]) for r in merged.collect()}
+    assert len(out) == 2001
+    assert out[5] == (3, "newer") and out[9000] == (2, "ins") and out[6] == (1, "v")

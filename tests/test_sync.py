@@ -478,3 +478,177 @@ def test_is_file_not_found_string_probe():
     assert not _is_file_not_found(
         Exception("org.apache.hadoop.security.AccessControlException: denied")
     )
+
+
+def _tree(root) -> dict:
+    """Every file under ``root`` with its size and mtime."""
+    import os
+
+    out = {}
+    for d, _dirs, files in os.walk(root):
+        for fn in files:
+            st = os.stat(os.path.join(d, fn))
+            out[os.path.join(d, fn)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def test_idle_pass_writes_nothing(spark, sf_small, tmp_path):
+    """A pass whose delta is only the re-read boundary rows leaves
+    _CURRENT and both generation directories untouched."""
+    src = events_ms(spark, sf_small)
+    early = src.filter(F.col(VER) < 1704844800000)
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
+    first = sync_table(early, store, KEYS, VER)
+    assert first.wrote and first.rows_changed == early.count()
+    assert sync_table(src, store, KEYS, VER).wrote  # second generation
+    before = _tree(tmp_path / "dst")
+    assert {p.rsplit("/", 2)[-2] for p in before} >= {"a", "b"}
+    stats = sync_table(src, store, KEYS, VER)
+    assert stats.delta_rows > 0  # the boundary rows are re-read ...
+    assert stats.rows_changed == 0 and not stats.wrote  # ... and change nothing
+    assert _tree(tmp_path / "dst") == before
+
+
+def test_boundary_rows_at_watermark_still_apply(spark, sf_small, tmp_path):
+    """Rows sharing the watermark's version are applied when they carry
+    a new key, and when an existing row's content changed in place."""
+    src = events_ms(spark, sf_small)
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
+    sync_table(src, store, KEYS, VER)
+    wm = store.committed_max(VER)
+    assert wm == src.agg(F.max(VER)).first()[0]
+    at_wm = src.filter(F.col(VER) == wm).limit(1)
+    old_id = at_wm.first()["event_id"]
+    new_id = src.agg(F.max("event_id")).first()[0] + 1
+
+    # a new key at exactly the watermark version
+    src1 = src.unionByName(at_wm.withColumn("event_id", F.lit(new_id).cast("long")))
+    s1 = sync_table(src1, store, KEYS, VER)
+    assert s1.wrote and s1.rows_changed == 1 and s1.delta_max == wm
+    assert store.read().filter(F.col("event_id") == new_id).count() == 1
+
+    # an existing watermark row whose content changed, version unchanged
+    src2 = src1.withColumn(
+        "value",
+        F.when(F.col("event_id") == old_id, F.lit(-1.0)).otherwise(F.col("value")),
+    )
+    s2 = sync_table(src2, store, KEYS, VER)
+    assert s2.wrote and s2.rows_changed == 1
+    assert store.read().filter(F.col("event_id") == old_id).first()["value"] == -1.0
+    assert {tuple(r) for r in store.read().collect()} == {tuple(r) for r in src2.collect()}
+    assert not sync_table(src2, store, KEYS, VER).wrote
+
+
+def test_store_read_schema_matches_inference(spark, sf_small, tmp_path):
+    src = events_ms(spark, sf_small)
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
+    sync_table(src, store, KEYS, VER)
+    assert store.commit_meta()["version_col"] == VER
+    assert store.read().schema == spark.read.parquet(store._current()).schema
+
+
+def test_generation_without_commit_file_reads_and_syncs(spark, sf_small, tmp_path):
+    """A generation with no commit file (older stores, other writers)
+    falls back to schema inference and a watermark scan."""
+    import os
+
+    from pypgsync_spark.sync import COMMIT_FILE
+
+    src = events_ms(spark, sf_small)
+    cutoff = 1704844800000
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
+    sync_table(src.filter(F.col(VER) < cutoff), store, KEYS, VER)
+    gen = store._current()
+    os.remove(os.path.join(gen, COMMIT_FILE))
+    assert store.commit_meta() is None and store.committed_max(VER) is None
+    assert store.read().schema == spark.read.parquet(gen).schema
+    stats = sync_table(src, store, KEYS, VER)
+    assert stats.low == src.filter(F.col(VER) < cutoff).agg(F.max(VER)).first()[0]
+    assert stats.wrote
+    assert {tuple(r) for r in store.read().collect()} == {tuple(r) for r in src.collect()}
+    assert store.committed_max(VER) == src.agg(F.max(VER)).first()[0]
+
+
+def test_crash_before_pointer_flip_keeps_old_generation(spark, sf_small, tmp_path, monkeypatch):
+    """A write that dies after its parquet files and commit file but
+    before the pointer flip leaves the old generation current, readable
+    and with its own commit file."""
+    import pytest
+
+    src = events_ms(spark, sf_small)
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
+    sync_table(src, store, KEYS, VER)
+    cur, meta = store._current(), store.commit_meta()
+    rows = sorted(map(tuple, store.read().collect()))
+
+    real_jpath = store._jpath
+
+    def crash_on_pointer(uri):
+        if uri == store._ptr + ".tmp":
+            raise RuntimeError("crash before pointer flip")
+        return real_jpath(uri)
+
+    monkeypatch.setattr(store, "_jpath", crash_on_pointer)
+    newer = src.limit(3).withColumn(VER, F.col(VER) + 10**9)
+    with pytest.raises(RuntimeError, match="crash before pointer flip"):
+        store.write(newer, VER, 1)
+    monkeypatch.setattr(store, "_jpath", real_jpath)
+    assert store._current() == cur
+    assert store.commit_meta() == meta
+    assert sorted(map(tuple, store.read().collect())) == rows
+
+
+def test_compact_carries_watermark(spark, sf_small, tmp_path):
+    from pypgsync_spark.sync import compact_store
+
+    src = events_ms(spark, sf_small)
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
+    store.write(src.repartition(8), VER, src.agg(F.max(VER)).first()[0])
+    meta = store.commit_meta()
+    assert compact_store(store, target_file_bytes=256 << 20)["compacted"]
+    assert store.commit_meta() == meta
+    assert store.committed_max(VER) == src.agg(F.max(VER)).first()[0]
+
+
+def test_cold_start_keeps_latest_version_per_key(spark, sf_small, tmp_path):
+    """A source holding several versions of one key (an append log)
+    loads as one row per key, the latest: later delta-wins passes only
+    replace the keys they carry, so no duplicate may enter at the start."""
+    src = events_ms(spark, sf_small)
+    older = src.filter(F.col("event_id") % 3 == 0).withColumn(VER, F.col(VER) - 1)
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
+    stats = sync_table(src.unionByName(older), store, KEYS, VER)
+    assert stats.delta_rows == src.count() + older.count()
+    assert stats.rows_changed == src.count()
+    assert {tuple(r) for r in store.read().collect()} == {tuple(r) for r in src.collect()}
+    assert store.read().count() == src.count()
+
+
+def test_boundary_check_handles_map_columns(spark, tmp_path):
+    """Spark has no equality on maps: the boundary check compares a
+    map-bearing column by its JSON text, so an idle pass over a table
+    with a map column still writes nothing, and a changed map still
+    applies."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("event_id", T.LongType()),
+            T.StructField(VER, T.LongType()),
+            T.StructField("tags", T.MapType(T.StringType(), T.TimestampType())),
+        ]
+    )
+    import datetime as dt
+
+    ts = dt.datetime(2024, 1, 1, 0, 0, 0, 1)
+    rows = [(1, 10, {"a": ts}), (2, 20, {"b": ts}), (3, 20, None)]
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
+    sync_table(spark.createDataFrame(rows, schema), store, KEYS, VER)
+    idle = sync_table(spark.createDataFrame(rows, schema), store, KEYS, VER)
+    assert idle.delta_rows == 2 and not idle.wrote
+    # a sub-millisecond change inside the map is still a change
+    moved = rows[:1] + [(2, 20, {"b": ts + dt.timedelta(microseconds=1)}), rows[2]]
+    s = sync_table(spark.createDataFrame(moved, schema), store, KEYS, VER)
+    assert s.wrote and s.rows_changed == 1
+    got = {r["event_id"]: r["tags"] for r in store.read().collect()}
+    assert got[2] == {"b": ts + dt.timedelta(microseconds=1)}
