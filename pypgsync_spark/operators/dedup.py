@@ -197,16 +197,6 @@ def doc_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _md5_u64(s: str) -> int:
-    """Top 8 bytes of md5 as an unsigned 64-bit int — the kernels'
-    string-hash primitive (hashlib runs at C speed; no xxhash module
-    exists in this environment and none is needed: these hashes never
-    leave Spark, so any deterministic 64-bit hash serves)."""
-    import hashlib
-
-    return int.from_bytes(hashlib.md5(s.encode("utf-8")).digest()[:8], "big")
-
-
 def _smix64(z):
     """splitmix64 finalizer over a numpy uint64 array — a bijection on
     u64, used to combine the n token hashes of a shingle window."""
@@ -488,7 +478,17 @@ def ppjoin_prefixes_bcast(
             lengths, offsets, flat = _flat_tokens(sh)
             vals = flat.to_numpy(zero_copy_only=False).astype(np.int64)
             ki = np.searchsorted(keys, vals)
-            f = freqs[ki]  # every shingle is in the map by construction
+            hit = ki < len(keys)
+            hit[hit] = keys[ki[hit]] == vals[hit]
+            if not hit.all():
+                # a missing key would silently take a neighbour's rank
+                raise ValueError(
+                    f"ppjoin_prefixes_bcast: {int((~hit).sum())} shingle(s) "
+                    "missing from the broadcast frequency map, e.g. "
+                    f"{int(vals[~hit][0])}; the map must cover every "
+                    "shingle of the input"
+                )
+            f = freqs[ki]
             doc_of = np.repeat(np.arange(ndocs), lengths)
             # doc_of is the (already grouped) primary key, so the
             # sorted doc sequence equals doc_of itself and rank within
@@ -631,9 +631,10 @@ def ngram_jaccard_pairs(
         # fused Arrow kernel (r15): tokenize in the JVM, build the
         # distinct hashed shingle sets vectorized — replaces the
         # interpreted-HOF shingling + per-element xxhash64 chain
-        # (guide §4.2; bit-equal Jaccard pinned by test). The env
-        # switch exists for A/B measurement and as a production guard;
-        # both paths return identical rows (pinned by test).
+        # (guide §4.2). The env switch exists for A/B measurement and
+        # as a production guard; both paths give equal set sizes and
+        # Jaccard, hence identical rows (pinned by
+        # tests/test_kernel_parity.py::test_hashed_shingles_match_string_shingles).
         s = hashed_shingles(df, id_col, text_col, n)
     else:
         s = with_shingles(df.select(id_col, text_col), text_col, n)
@@ -677,14 +678,15 @@ def ngram_jaccard_pairs(
         freq = ex.groupBy("sh").agg(F.count(F.lit(1)).alias("__freq"))
         freq_np = (
             _collect_freq_if_small(freq, PPJOIN_FREQ_BROADCAST_MAX)
-            if hashed_verify
+            if use_kernel
             else None
         )
         if freq_np is not None:
             # vocabulary fits the broadcast cap: the prefix table is a
             # map-side kernel over the shingle rows — no freq join, no
             # rank-window shuffle (r15; guide §2.4). Rows identical to
-            # ppjoin_prefixes by construction (pinned by test).
+            # ppjoin_prefixes by construction (pinned by
+            # tests/test_kernel_parity.py::test_ppjoin_prefixes_bcast_matches_join_path).
             pref = ppjoin_prefixes_bcast(sp, freq_np, threshold, id_col)
             if materialize_shingles:
                 # both candidate-join sides reference pref — same
@@ -795,7 +797,8 @@ def minhash_signatures_text(
 ) -> DataFrame:
     """(id, sig) — :func:`minhash_signatures` fused with the shingle
     construction (r15; guide §4.2). BIT-IDENTICAL signatures to
-    ``minhash_signatures(with_shingles(df), ...)`` — pinned by test —
+    ``minhash_signatures(with_shingles(df), ...)`` — pinned by
+    tests/test_kernel_parity.py::test_minhash_signatures_text_match_legacy —
     but the shingle strings are assembled by Arrow's vectorized
     ``binary_join_element_wise`` over the JVM-tokenized stream
     (:func:`doc_tokens`) instead of Spark's interpreted HOF evaluator,
@@ -937,7 +940,8 @@ def minhash_signatures(
     runs the fold at C speed (guide §4.2; the r13 ivf_assign kernel
     precedent). Docs with NULL/empty shingle sets produce no row,
     exactly as explode did. Bit-equality against the legacy
-    formulation is pinned by test.
+    formulation is pinned by
+    tests/test_dedup.py::test_minhash_signature_kernel_matches_legacy_columns.
     """
     import numpy as np
     import pandas as pd
@@ -1105,8 +1109,8 @@ def minhash_lsh_pairs(
     if os.environ.get("SPARK_GRAFT_SHINGLE_KERNEL", "1") != "0":
         # fused kernels (r15, guide §4.2): ONE JVM tokenization pass,
         # cached, feeds both the signer (bit-identical signatures —
-        # pinned by test) and a hashed verify side (Jaccard equal on
-        # 64-bit shingle hashes, the d2 hashed-verify precedent).
+        # see minhash_signatures_text) and a hashed verify side
+        # (Jaccard equal on 64-bit shingle hashes, see hashed_shingles).
         tk = single_slot_persist(
             _SHINGLE_CACHE, doc_tokens(df, id_col, text_col)
         )

@@ -176,7 +176,8 @@ def cross_jaccard_pairs(
         if freq_np is not None:
             # union vocabulary fits the broadcast cap: map-side prefix
             # kernel, no freq join / rank-window shuffle per side (r15
-            # — see ngram_jaccard_pairs; rows identical by test)
+            # — see ngram_jaccard_pairs; rows identical, pinned by
+            # tests/test_kernel_parity.py::test_ppjoin_prefixes_bcast_matches_join_path)
             src = sd if side == "d" else sc
             return ppjoin_prefixes_bcast(
                 src, freq_np, threshold, id_col
@@ -429,7 +430,8 @@ def lsh_index_screen(
     False positives from the Bloom gate only widen the join input;
     false negatives are impossible (same-key rows hash to the same bit
     positions), so the result is bit-identical to the index-less,
-    gate-less screen — pinned by test against exactly that formulation.
+    gate-less screen — pinned against exactly that formulation by
+    tests/test_r14_queries.py::test_d17_matches_indexless_screen_and_recrawl_hits.
 
     Two documented degrade edges: (1) the Bloom gate is a no-op past
     ``bloom_prune``'s ``max_keys`` cap (|delta| × bands keys — ~125k

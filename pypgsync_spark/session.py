@@ -11,6 +11,8 @@ and a real multi-executor cluster:
 - shuffle partitions sized to cores locally; on a cluster AQE's
   coalescing makes the initial number far less critical.
 - Arrow enabled for the Pandas-UDF paths (similarity/multimodal).
+- Python workers forked by ``pyworker`` (skips the per-task re-read of
+  ``pyspark.zip``); workers must be able to import ``pypgsync_spark``.
 """
 
 from __future__ import annotations
@@ -84,6 +86,7 @@ def get_spark(
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "pypgsync_spark.pyworker")
         # Fixture files are small; don't let tiny files fragment scans.
         # At 100 TB this would be 128m+ and driven by the real file sizes.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
