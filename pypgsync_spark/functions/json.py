@@ -16,9 +16,3 @@ def json_get_long(col: Column | str, key: str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.get_json_object(c, f"$.{key}").cast(T.LongType())
 
-
-def json_to_map(col: Column | str) -> Column:
-    """Parse a JSON object column into ``map<string,string>`` for
-    generic key access (``from_json`` with map schema)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.from_json(c, T.MapType(T.StringType(), T.StringType()))

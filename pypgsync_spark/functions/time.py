@@ -28,16 +28,6 @@ def to_millis(ts: Column | str) -> Column:
     return F.unix_millis(c.cast("timestamp"))
 
 
-def from_millis(ms: Column | str) -> Column:
-    """BIGINT epoch millis → timestamp (F5)."""
-    return F.timestamp_millis(F.col(ms) if isinstance(ms, str) else ms)
-
-
-def now_millis_col() -> Column:
-    """``extract(epoch from now()) * 1000`` (README.md:148)."""
-    return F.unix_millis(F.current_timestamp())
-
-
 def ts_range_pred(
     ts: Column | str,
     lo_ms: int | None = None,
@@ -134,9 +124,3 @@ def events_range_pred(
         return nanos_range_pred("ts_nanos", lo_ms, hi_ms, hi_inclusive)
     return ts_range_pred("ts", lo_ms, hi_ms, hi_inclusive)
 
-
-def millis_age_seconds(later_ms: Column, earlier_ms: Column) -> Column:
-    """``(later - earlier) / 1000`` seconds — the README Q3c interval
-    arithmetic (README.md:299,306) done as integer math, which is the
-    DuckDB-oracle-friendly normalization chosen in SURVEY §2.8/F4."""
-    return (later_ms - earlier_ms) / F.lit(1000)

@@ -17,15 +17,16 @@ Five dedup families, each a first-class operator designed for 100 TB:
   for the kernel).
 
 Hashing uses Spark's ``xxhash64`` with per-permutation seed mixing —
-deterministic across runs/partitionings, JVM-side, no Python UDFs.
+deterministic across runs/partitionings, JVM-side: the n-gram/PPJoin
+family (shingling, prefix build, verify) runs no Python UDF. The one
+Python kernel is the MinHash signer (:func:`minhash_signatures`, a
+``mapInPandas`` over md5 — the hash DuckDB shares bit-for-bit).
 """
 
 from __future__ import annotations
 
-import os
 import warnings
 
-import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -181,186 +182,6 @@ def spread_if_underpartitioned(df: DataFrame) -> DataFrame:
     return df.repartition(par)
 
 
-def doc_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, __tk) — JVM-side tokenization, spread across cores.
-
-    The split stays in the JVM (one codegen'd regex pass, bit-identical
-    to :func:`functions.text.tokens` because it IS that expression);
-    the token ARRAYS then cross the Arrow boundary into the fused
-    shingle kernels below. Keeping tokenization out of Python is what
-    removes the Java-vs-Python regex/lowercase parity question the r8
-    md5/sqrt lesson warns about — the kernels only ever re-assemble
-    tokens the JVM produced.
-    """
-    return spread_if_underpartitioned(df.select(id_col, text_col)).select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("__tk")
-    )
-
-
-def _smix64(z):
-    """splitmix64 finalizer over a numpy uint64 array — a bijection on
-    u64, used to combine the n token hashes of a shingle window."""
-    z = (z ^ (z >> 30)) * np.uint64(0xBF58476D1CE4E5B9)
-    z = (z ^ (z >> 27)) * np.uint64(0x94D049BB133111EB)
-    return z ^ (z >> 31)
-
-
-def _flat_tokens(tk_col):
-    """(lengths, offsets, flat) for a list<string> Arrow column: null
-    entries contribute length 0 so offsets stay aligned with
-    ``pc.list_flatten`` (which skips null slots)."""
-    import pyarrow.compute as pc
-
-    lengths = pc.fill_null(pc.list_value_length(tk_col), 0).to_numpy(
-        zero_copy_only=False
-    ).astype(np.int64)
-    offsets = np.concatenate(([0], np.cumsum(lengths)))
-    flat = pc.list_flatten(tk_col)
-    return lengths, offsets, flat
-
-
-def hashed_shingles(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    out: str = "shingles",
-) -> DataFrame:
-    """(id, distinct 64-bit shingle hashes) — the fused replacement for
-    ``with_shingles`` + ``array_distinct(transform(·, xxhash64))`` on
-    every ``hashed_verify`` path (r15; guide §4.2, the r14 minhash
-    kernel precedent).
-
-    Jaccard, prefix ranks and set sizes depend only on shingle
-    IDENTITY, so any injective-enough 64-bit hash of the shingle
-    serves (collision odds ~|sh|²/2⁶⁴, the same accepted class as the
-    r14 xxhash64 hashed-verify). The old chain evaluated the shingle
-    construction in Spark's interpreted HOF evaluator — measured
-    4.3 s of the 5000-doc fixture's CPU, the largest single block in
-    the d-family (r15 profile) — and then hashed the strings anyway.
-    Here the JVM only tokenizes (:func:`doc_tokens`); one map-only
-    ``mapInArrow`` kernel then computes, fully vectorized: one md5
-    per DISTINCT token (Arrow ``dictionary_encode``; the token
-    vocabulary is tiny next to the token stream), a splitmix64
-    window combine over the per-doc token-hash stream, and a per-doc
-    sort-unique. Shingle equality is preserved exactly: tokens carry
-    no whitespace, so the n-token window (the join-with-space string)
-    and the token tuple determine each other, and equal tuples hash
-    equal. Docs shorter than ``n`` tokens keep the short-slice
-    semantics (ONE shingle = all tokens joined, hashed via md5 so
-    equal short docs collide exactly); NULL token arrays yield NULL,
-    as ``word_shingles`` does.
-    """
-    return hashed_shingles_from_tokens(
-        doc_tokens(df, id_col, text_col), n, out
-    ).withColumnRenamed("id", id_col)
-
-
-def hashed_shingles_from_tokens(
-    tk_df: DataFrame, n: int = 3, out: str = "shingles"
-) -> DataFrame:
-    """:func:`hashed_shingles` over a pre-tokenized (id, __tk) frame —
-    callers that feed several kernels from one token pass (d3's signer
-    + verify, d17's delta side) persist the token frame once and call
-    the ``_from_tokens`` forms."""
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    df = tk_df
-    id_field = df.schema["id"]
-
-    def kernel(batches):
-        import hashlib
-
-        md5 = hashlib.md5
-
-        def md5_u64(s: str) -> int:
-            return int.from_bytes(md5(s.encode("utf-8")).digest()[:8], "big")
-
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            ids = batch.column("id")
-            tk = batch.column("__tk")
-            ndocs = len(ids)
-            valid = tk.is_valid().to_numpy(zero_copy_only=False)
-            lengths, offsets, flat = _flat_tokens(tk)
-            # one md5 per DISTINCT token in the batch
-            enc = pc.dictionary_encode(flat)
-            vocab = enc.dictionary.to_pylist()
-            uh = np.fromiter(
-                (md5_u64(t) for t in vocab), dtype=np.uint64, count=len(vocab)
-            )
-            idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            h_flat = uh[idx] if len(idx) else np.empty(0, dtype=np.uint64)
-            # sliding n-window combine over the whole flat stream;
-            # windows crossing doc boundaries are simply never selected
-            total = len(h_flat)
-            if total >= n:
-                acc = _smix64(h_flat[: total - n + 1])
-                for j in range(1, n):
-                    acc = _smix64(acc ^ h_flat[j : total - n + j + 1])
-            else:
-                acc = np.empty(0, dtype=np.uint64)
-            long_doc = valid & (lengths >= n)
-            wc = np.where(long_doc, lengths - (n - 1), 0)
-            doc_of_w = np.repeat(np.arange(ndocs), wc)
-            within = np.arange(wc.sum()) - np.repeat(np.cumsum(wc) - wc, wc)
-            gpos = offsets[:-1][doc_of_w] + within
-            acc_sel = acc[gpos]
-            # per-doc distinct: one global lexsort, drop adjacent dups
-            order = np.lexsort((acc_sel, doc_of_w))
-            d_sorted = doc_of_w[order]
-            a_sorted = acc_sel[order]
-            keep = np.ones(len(order), dtype=bool)
-            if len(order) > 1:
-                keep[1:] = (d_sorted[1:] != d_sorted[:-1]) | (
-                    a_sorted[1:] != a_sorted[:-1]
-                )
-            d_kept = d_sorted[keep]
-            a_kept = a_sorted[keep]
-            counts = np.bincount(d_kept, minlength=ndocs).astype(np.int64)
-            # short docs (valid, < n tokens): ONE shingle = all tokens
-            # joined — hashed from the STRING so equal short docs match
-            short_idx = np.nonzero(valid & (lengths < n))[0]
-            short_hash = {}
-            for i in short_idx:
-                s = " ".join(
-                    flat.slice(offsets[i], lengths[i]).to_pylist()
-                )
-                short_hash[i] = md5_u64(s)
-                counts[i] = 1
-            # assemble per-doc value runs in doc order: d_kept is
-            # sorted, so each doc's survivors are contiguous
-            out_offsets = np.concatenate(([0], np.cumsum(counts)))
-            values = np.zeros(out_offsets[-1], dtype=np.uint64)
-            run_start = np.searchsorted(d_kept, np.arange(ndocs))
-            within_run = np.arange(len(d_kept)) - run_start[d_kept]
-            values[out_offsets[d_kept] + within_run] = a_kept
-            for i, h in short_hash.items():
-                values[out_offsets[i]] = h
-            off_list = [None if not valid[i] else int(out_offsets[i]) for i in range(ndocs)]
-            off_list.append(int(out_offsets[-1]))
-            # null docs: a null offset marks the list entry null; their
-            # counts are 0 so the values layout is unaffected
-            shingle_arr = pa.ListArray.from_arrays(
-                pa.array(off_list, type=pa.int32()),
-                pa.array(values.view(np.int64), type=pa.int64()),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [ids, shingle_arr], names=["id", out]
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("id", id_field.dataType, id_field.nullable),
-            T.StructField(out, T.ArrayType(T.LongType())),
-        ]
-    )
-    return df.mapInArrow(kernel, schema)
-
-
 def ppjoin_prefixes(
     ex: DataFrame,
     freq: DataFrame,
@@ -401,120 +222,6 @@ def ppjoin_prefixes(
             <= F.col(sz_col) - F.ceil(F.lit(threshold) * F.col(sz_col)) + 1
         )
         .select(id_col, sz_col, sh_col, "__rk")
-    )
-
-
-# Degrade cap for the collected PPJoin frequency table (r15, guide
-# §3.2's "broadcast less" + the r14 verdict's own suggestion): at or
-# under this many DISTINCT shingles the canonical-frequency map is
-# collected once (Arrow toPandas — the bloom_prune 2M-key driver-
-# boundedness class, ~32 MB of (key, freq) int64 pairs) and broadcast
-# into a map-side prefix kernel, removing the freq join and the
-# per-doc rank window's shuffle outright. Past the cap the classic
-# explode → freq join → window chain runs unchanged — that path's
-# partial aggregation and AQE skew-join handling are what a 100 TB
-# vocabulary needs, so the cap is a data-size decision, never a
-# core-count one.
-PPJOIN_FREQ_BROADCAST_MAX = int(
-    os.environ.get("SPARK_GRAFT_PPJOIN_FREQ_MAX", "2000000")
-)
-
-
-def _collect_freq_if_small(freq: DataFrame, cap: int):
-    """(sorted keys, freqs) numpy pair when the frequency table holds
-    ≤ ``cap`` rows, else None. One Arrow-path action: ``limit(cap+1)``
-    either returns the WHOLE table (fewer rows than the limit ⟹
-    nothing was cut) or proves it exceeds the cap."""
-    if cap <= 0:
-        return None  # disabled: never spend the probe job
-    pdf = freq.limit(cap + 1).toPandas()
-    if len(pdf) > cap:
-        return None
-    keys = pdf.iloc[:, 0].to_numpy(dtype=np.int64)
-    vals = pdf.iloc[:, 1].to_numpy(dtype=np.int64)
-    order = np.argsort(keys)
-    return keys[order], vals[order]
-
-
-def ppjoin_prefixes_bcast(
-    s: DataFrame,
-    freq_np,
-    threshold: float,
-    id_col: str = "id",
-    sh_col: str = "shingles",
-) -> DataFrame:
-    """Map-side prefix build: same (id, sz, sh, __rk) rows as
-    :func:`ppjoin_prefixes`, computed per document inside one
-    ``mapInArrow`` kernel against the broadcast frequency map — no
-    explode, no freq join, no rank-window shuffle (the shingle array
-    is already a row; ranking within it never needed a shuffle). The
-    canonical order is bit-the-same: ascending frequency, ties by
-    shingle value, ranks dense from 1. Only the ≤-cap path uses this
-    (see :data:`PPJOIN_FREQ_BROADCAST_MAX`)."""
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    spark = s.sparkSession
-    bc = spark.sparkContext.broadcast(freq_np)
-    id_field = s.schema[id_col]
-    schema = T.StructType(
-        [
-            T.StructField("id", id_field.dataType, id_field.nullable),
-            T.StructField("sz", T.IntegerType()),
-            T.StructField("sh", T.LongType()),
-            T.StructField("__rk", T.IntegerType()),
-        ]
-    )
-    theta = float(threshold)
-
-    def kernel(batches):
-        keys, freqs = bc.value
-        for batch in batches:
-            ids = batch.column("id")
-            sh = batch.column("__sh")
-            ndocs = len(ids)
-            valid = sh.is_valid().to_numpy(zero_copy_only=False)
-            lengths, offsets, flat = _flat_tokens(sh)
-            vals = flat.to_numpy(zero_copy_only=False).astype(np.int64)
-            ki = np.searchsorted(keys, vals)
-            hit = ki < len(keys)
-            hit[hit] = keys[ki[hit]] == vals[hit]
-            if not hit.all():
-                # a missing key would silently take a neighbour's rank
-                raise ValueError(
-                    f"ppjoin_prefixes_bcast: {int((~hit).sum())} shingle(s) "
-                    "missing from the broadcast frequency map, e.g. "
-                    f"{int(vals[~hit][0])}; the map must cover every "
-                    "shingle of the input"
-                )
-            f = freqs[ki]
-            doc_of = np.repeat(np.arange(ndocs), lengths)
-            # doc_of is the (already grouped) primary key, so the
-            # sorted doc sequence equals doc_of itself and rank within
-            # doc = sorted position − the doc's run start + 1
-            order = np.lexsort((vals, f, doc_of))
-            run_start = np.searchsorted(doc_of, np.arange(ndocs))
-            rk = (np.arange(len(doc_of)) - run_start[doc_of]) + 1
-            # prefix filter: rk <= sz - ceil(theta*sz) + 1
-            sz = lengths[doc_of]
-            k_pref = sz - np.ceil(theta * sz).astype(np.int64) + 1
-            keep = (rk <= k_pref) & valid[doc_of] & (sz > 0)
-            sel = order[keep]
-            out_ids = ids.take(pa.array(doc_of[sel], type=pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    out_ids,
-                    pa.array(sz[keep].astype(np.int32), type=pa.int32()),
-                    pa.array(vals[sel], type=pa.int64()),
-                    pa.array(rk[keep].astype(np.int32), type=pa.int32()),
-                ],
-                names=["id", "sz", "sh", "__rk"],
-            )
-
-    return (
-        s.select(F.col(id_col).alias("id"), F.col(sh_col).alias("__sh"))
-        .mapInArrow(kernel, schema)
     )
 
 
@@ -575,7 +282,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.3,
     blocking: str | None = "prefix",
-    hashed_verify: bool = True,
     materialize_shingles: bool = False,
 ) -> DataFrame:
     """Pairs (id_a < id_b, jaccard) above ``threshold`` — exact AND
@@ -617,34 +323,17 @@ def ngram_jaccard_pairs(
     ``blocking=None`` does the raw triangular cross join (tests/tiny
     inputs only).
 
-    ``hashed_verify`` replaces each shingle string with its xxhash64
-    before the pairwise intersections: Jaccard depends only on set
+    Shingle strings are replaced by their xxhash64 before the prefix
+    build and the pairwise intersections: Jaccard depends only on set
     sizes, which 64-bit hashing preserves (collision odds ~|sh|²/2⁶⁴),
     and long-array intersects run ~2× faster than string-array ones.
     """
     import math
 
-    use_kernel = hashed_verify and os.environ.get(
-        "SPARK_GRAFT_SHINGLE_KERNEL", "1"
-    ) != "0"
-    if use_kernel:
-        # fused Arrow kernel (r15): tokenize in the JVM, build the
-        # distinct hashed shingle sets vectorized — replaces the
-        # interpreted-HOF shingling + per-element xxhash64 chain
-        # (guide §4.2). The env switch exists for A/B measurement and
-        # as a production guard; both paths give equal set sizes and
-        # Jaccard, hence identical rows (pinned by
-        # tests/test_kernel_parity.py::test_hashed_shingles_match_string_shingles).
-        s = hashed_shingles(df, id_col, text_col, n)
-    else:
-        s = with_shingles(df.select(id_col, text_col), text_col, n)
-        if hashed_verify:
-            s = s.withColumn(
-                "shingles",
-                F.array_distinct(
-                    F.transform("shingles", lambda x: F.xxhash64(x))
-                ),
-            )
+    s = with_shingles(df.select(id_col, text_col), text_col, n).withColumn(
+        "shingles",
+        F.array_distinct(F.transform("shingles", lambda x: F.xxhash64(x))),
+    )
     if materialize_shingles:
         # The shingle table feeds the prefix build once and the verify
         # join twice; without materialization each branch re-runs the
@@ -652,11 +341,10 @@ def ngram_jaccard_pairs(
         # the fixture). localCheckpoint stores at MEMORY_AND_DISK, so
         # at scale it spills to local disk rather than OOM; the trade
         # is lineage truncation (an executor loss mid-query fails the
-        # job instead of recomputing) — opt-in for that reason. LAZY
-        # as of r15: the frequency probe (or, on the join path, the
-        # first branch of the main action) materializes it as a side
-        # effect — eager=True paid one extra driver-barrier job per
-        # query for blocks the very next action would store anyway
+        # job instead of recomputing) — opt-in for that reason. LAZY:
+        # the first branch of the main action materializes it as a
+        # side effect — eager=True paid one extra driver-barrier job
+        # per query for blocks the very next action would store anyway
         # (the r8 lazy-checkpoint rule).
         s = s.localCheckpoint(eager=False)
     if blocking is None:
@@ -676,41 +364,22 @@ def ngram_jaccard_pairs(
             F.explode("shingles").alias("sh"),
         )
         freq = ex.groupBy("sh").agg(F.count(F.lit(1)).alias("__freq"))
-        freq_np = (
-            _collect_freq_if_small(freq, PPJOIN_FREQ_BROADCAST_MAX)
-            if use_kernel
-            else None
-        )
-        if freq_np is not None:
-            # vocabulary fits the broadcast cap: the prefix table is a
-            # map-side kernel over the shingle rows — no freq join, no
-            # rank-window shuffle (r15; guide §2.4). Rows identical to
-            # ppjoin_prefixes by construction (pinned by
-            # tests/test_kernel_parity.py::test_ppjoin_prefixes_bcast_matches_join_path).
-            pref = ppjoin_prefixes_bcast(sp, freq_np, threshold, id_col)
-            if materialize_shingles:
-                # both candidate-join sides reference pref — same
-                # storage-vs-recompute trade as the join path below
-                pref = pref.localCheckpoint(eager=False)
-        else:
-            # shared AllPairs/PPJoin kernel — see ppjoin_prefixes /
-            # ppjoin_length_filter for the lemmas. This is the 100 TB
-            # path: partial aggregation + AQE skew handling on the
-            # freq join, no driver-side vocabulary.
-            pref = ppjoin_prefixes(ex, freq, threshold)
-            if materialize_shingles:
-                # BOTH sides of the candidate self-join below
-                # reference pref, and Spark plans the two references
-                # as two full copies of the explode → freq aggregate →
-                # freq join → rank window chain (r14 plan audit: zero
-                # ReusedExchange, Window appears twice, ~20 s of the
-                # query's ~45 s task CPU at sf0.1 was the second
-                # copy). A lazy localCheckpoint computes the prefix
-                # table once — the same storage-vs-recompute trade as
-                # the shingle checkpoint above (guide §5.2; the
-                # d10/d11 winnow-pair-index precedent), so it rides
-                # the same opt-in flag.
-                pref = pref.localCheckpoint(eager=False)
+        # shared AllPairs/PPJoin kernel — see ppjoin_prefixes /
+        # ppjoin_length_filter for the lemmas. Partial aggregation + AQE
+        # skew handling on the freq join, no driver-side vocabulary.
+        pref = ppjoin_prefixes(ex, freq, threshold)
+        if materialize_shingles:
+            # BOTH sides of the candidate self-join below reference
+            # pref, and Spark plans the two references as two full
+            # copies of the explode → freq aggregate → freq join → rank
+            # window chain (r14 plan audit: zero ReusedExchange, Window
+            # appears twice, ~20 s of the query's ~45 s task CPU at
+            # sf0.1 was the second copy). A lazy localCheckpoint
+            # computes the prefix table once — the same
+            # storage-vs-recompute trade as the shingle checkpoint above
+            # (the d10/d11 winnow-pair-index precedent), so it rides the
+            # same opt-in flag.
+            pref = pref.localCheckpoint(eager=False)
         # candidate dedup doubles as the positional-filter aggregation:
         # min(__rk) per side lands on the pair's min-order common
         # prefix shingle (see ppjoin_positional_filter), pruning
@@ -786,123 +455,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") > threshold)
         .select("id_a", "id_b", "jaccard")
     )
-
-
-def minhash_signatures_text(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_perm: int = 64,
-) -> DataFrame:
-    """(id, sig) — :func:`minhash_signatures` fused with the shingle
-    construction (r15; guide §4.2). BIT-IDENTICAL signatures to
-    ``minhash_signatures(with_shingles(df), ...)`` — pinned by
-    tests/test_kernel_parity.py::test_minhash_signatures_text_match_legacy —
-    but the shingle strings are assembled by Arrow's vectorized
-    ``binary_join_element_wise`` over the JVM-tokenized stream
-    (:func:`doc_tokens`) instead of Spark's interpreted HOF evaluator,
-    which was the single largest CPU block left in the d-family (r15
-    profile: 4.3 s of the sf0.1 fixture's shingle+checkpoint stage).
-
-    The md5-top-60-bit base hash and the seed-42 permutation family
-    are byte-for-byte the legacy kernel's (and the DuckDB oracle's).
-    Window strings are hashed WITHOUT per-doc dedup — a min over a
-    multiset equals the min over its support, so signatures are
-    unchanged. Docs with NULL token arrays produce no row, exactly as
-    the legacy kernel skipped NULL/empty shingle sets.
-    """
-    return minhash_signatures_from_tokens(
-        doc_tokens(df, id_col, text_col), n, num_perm
-    )
-
-
-def minhash_signatures_from_tokens(
-    tk_df: DataFrame, n: int = 3, num_perm: int = 64
-) -> DataFrame:
-    """:func:`minhash_signatures_text` over a pre-tokenized (id, __tk)
-    frame (see :func:`hashed_shingles_from_tokens`)."""
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    df = tk_df
-    a, b = _perm_coeffs(num_perm)
-    a_arr = np.asarray(a, dtype=np.int64)
-    b_arr = np.asarray(b, dtype=np.int64)
-    id_field = df.schema["id"]
-    schema = T.StructType(
-        [
-            T.StructField("id", id_field.dataType, id_field.nullable),
-            T.StructField("sig", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def kernel(batches):
-        import hashlib
-
-        import pyarrow.compute as pc
-
-        md5 = hashlib.md5
-
-        def h60(s: str) -> int:
-            return int(md5(s.encode("utf-8")).hexdigest()[:15], 16) % _MERSENNE_31
-
-        for batch in batches:
-            ids = batch.column("id")
-            tk = batch.column("__tk")
-            ndocs = len(ids)
-            valid = tk.is_valid().to_numpy(zero_copy_only=False)
-            lengths, offsets, flat = _flat_tokens(tk)
-            total = len(flat)
-            # all n-token window strings over the flat stream (windows
-            # crossing doc boundaries exist but are never selected)
-            if total >= n:
-                parts = [flat.slice(j, total - n + 1) for j in range(n)]
-                win = pc.binary_join_element_wise(*parts, " ")
-            else:
-                win = pa.array([], type=flat.type)
-            long_doc = valid & (lengths >= n)
-            wc = np.where(long_doc, lengths - (n - 1), 0)
-            doc_of_w = np.repeat(np.arange(ndocs), wc)
-            within = np.arange(wc.sum()) - np.repeat(np.cumsum(wc) - wc, wc)
-            gpos = offsets[:-1][doc_of_w] + within
-            sel = pc.take(win, pa.array(gpos, type=pa.int64())).to_pylist()
-            counts = wc.copy()
-            short_idx = np.nonzero(valid & (lengths < n))[0]
-            counts[short_idx] = 1
-            out_offsets = np.concatenate(([0], np.cumsum(counts)))
-            h_all = np.zeros(out_offsets[-1], dtype=np.int64)
-            run_start = np.searchsorted(doc_of_w, np.arange(ndocs))
-            pos = out_offsets[doc_of_w] + (np.arange(len(doc_of_w)) - run_start[doc_of_w])
-            h_all[pos] = np.fromiter(
-                (h60(s) for s in sel), dtype=np.int64, count=len(sel)
-            )
-            for i in short_idx:
-                s = " ".join(flat.slice(offsets[i], lengths[i]).to_pylist())
-                h_all[out_offsets[i]] = h60(s)
-            doc_sel = np.nonzero(counts > 0)[0]
-            if len(doc_sel) == 0:
-                continue
-            starts = out_offsets[doc_sel]
-            sig = np.empty((len(doc_sel), num_perm), dtype=np.int64)
-            for p in range(num_perm):
-                sig[:, p] = np.minimum.reduceat(
-                    (h_all * a_arr[p] + b_arr[p]) % _MERSENNE_31, starts
-                )
-            sig_arr = pa.ListArray.from_arrays(
-                pa.array(
-                    np.arange(len(doc_sel) + 1, dtype=np.int64) * num_perm,
-                    type=pa.int32(),
-                ),
-                pa.array(sig.ravel(), type=pa.int64()),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [ids.take(pa.array(doc_sel, type=pa.int64())), sig_arr],
-                names=["id", "sig"],
-            )
-
-    return df.mapInArrow(kernel, schema)
 
 
 def minhash_signatures(
@@ -1053,14 +605,8 @@ def lsh_band_index_write(
     import json
     import os
 
-    if os.environ.get("SPARK_GRAFT_SHINGLE_KERNEL", "1") != "0":
-        # fused signer (r15): tokenize → shingle strings → md5 → mins
-        # in one Arrow kernel, bit-identical signatures (see
-        # minhash_signatures_text)
-        sig = minhash_signatures_text(df, id_col, text_col, n, num_perm)
-    else:
-        s = with_shingles(df.select(id_col, text_col), text_col, n)
-        sig = minhash_signatures(s, id_col, "shingles", num_perm)
+    s = with_shingles(df.select(id_col, text_col), text_col, n)
+    sig = minhash_signatures(s, id_col, "shingles", num_perm)
     # lazy checkpoint: repartitionByRange SAMPLES its input in a
     # separate job before the write — without this the whole
     # shingle+signature pipeline (the expensive pass the index exists
@@ -1106,26 +652,12 @@ def minhash_lsh_pairs(
     """
     from pypgsync_spark.operators.multimodal import single_slot_persist
 
-    if os.environ.get("SPARK_GRAFT_SHINGLE_KERNEL", "1") != "0":
-        # fused kernels (r15, guide §4.2): ONE JVM tokenization pass,
-        # cached, feeds both the signer (bit-identical signatures —
-        # see minhash_signatures_text) and a hashed verify side
-        # (Jaccard equal on 64-bit shingle hashes, see hashed_shingles).
-        tk = single_slot_persist(
-            _SHINGLE_CACHE, doc_tokens(df, id_col, text_col)
-        )
-        sig = minhash_signatures_from_tokens(tk, n, num_perm)
-        s = hashed_shingles_from_tokens(tk, n).withColumnRenamed(
-            "id", id_col
-        )
-    else:
-        s = with_shingles(df.select(id_col, text_col), text_col, n)
-        # Cache the (id, shingles) side: it feeds both the signature
-        # build and the final exact-Jaccard verification (single-slot
-        # convention: bench runs every query twice; at most ONE
-        # shingle cache lives).
-        s = single_slot_persist(_SHINGLE_CACHE, s)
-        sig = minhash_signatures(s, id_col, "shingles", num_perm)
+    s = with_shingles(df.select(id_col, text_col), text_col, n)
+    # Cache the (id, shingles) side: it feeds both the signature build
+    # and the final exact-Jaccard verification (single-slot convention:
+    # bench runs every query twice; at most ONE shingle cache lives).
+    s = single_slot_persist(_SHINGLE_CACHE, s)
+    sig = minhash_signatures(s, id_col, "shingles", num_perm)
     buckets = band_bucket_keys(sig, num_perm, bands)
     cand = (
         buckets.alias("l")
@@ -1244,8 +776,7 @@ def _min_label_rounds(
 # 500k edges ≈ 8 MB collected — the same order a broadcast-join build
 # side ships to the driver anyway; past the cutoff the distributed
 # path runs unchanged. Override per call (`driver_max_edges=0` forces
-# the distributed path) or per deployment via
-# $SPARK_GRAFT_CC_DRIVER_MAX_EDGES.
+# the distributed path).
 #
 # The byte intuition behind the count assumes FIXED-WIDTH ids (two
 # 8-byte longs per edge). The driver path is therefore gated on both
@@ -1324,7 +855,7 @@ def connected_components_hybrid(
     small-graph driver path fired).
 
     Small graphs (≤ ``driver_max_edges`` raw edges, default
-    :data:`CC_DRIVER_MAX_EDGES`, env-overridable) skip the distributed
+    :data:`CC_DRIVER_MAX_EDGES`) skip the distributed
     rounds entirely: the edge list — materialized exactly once either
     way — is collected and closed with a driver-side union-find. Every
     distributed round is a full Spark job whose cost on a small graph
@@ -1335,11 +866,7 @@ def connected_components_hybrid(
     (see the :data:`CC_DRIVER_MAX_EDGES` comment).
     """
     if driver_max_edges is None:
-        driver_max_edges = int(
-            os.environ.get(
-                "SPARK_GRAFT_CC_DRIVER_MAX_EDGES", CC_DRIVER_MAX_EDGES
-            )
-        )
+        driver_max_edges = CC_DRIVER_MAX_EDGES
     # materialize the (possibly expensive) pair-finding pipeline ONCE;
     # both paths reuse this checkpoint. LAZY as of r15: the count probe
     # below is a full scan, so it stores the blocks as a side effect —

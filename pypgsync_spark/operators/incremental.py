@@ -27,7 +27,7 @@ pairs get verified — still delta-proportional work.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pypgsync_spark.functions.text import content_fingerprint
@@ -64,7 +64,6 @@ def cross_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.3,
     materialize_shingles: bool = True,
-    hashed_verify: bool = True,
 ) -> DataFrame:
     """Exact cross-collection near-dup pairs: every (delta doc, corpus
     doc) pair with n-gram Jaccard > ``threshold`` — the NEAR-dup
@@ -80,43 +79,30 @@ def cross_jaccard_pairs(
     never delta × corpus. The PPJoin length filter prunes cross-size
     collisions inside the join; the exact Jaccard verify finishes.
 
-    ``hashed_verify`` (r14 optimization round) mirrors the self-join
-    form's flag verbatim: each shingle string is replaced by its
+    As in the self-join form, each shingle string is replaced by its
     xxhash64 before the prefix build and the pairwise intersections —
     Jaccard depends only on set sizes, which 64-bit hashing preserves
     (collision odds ~|sh|²/2⁶⁴), the PPJoin lemma only needs SOME
-    shared total order (frequency ties now break by hash value
-    instead of string value — a different, equally total order), and
-    long-array intersects run ~2× faster than string-array ones.
+    shared total order (frequency ties break by hash value — an equally
+    total order), and long-array intersects run ~2× faster than
+    string-array ones.
 
     Output: (delta_id, corpus_id, jaccard).
     """
-    import os
-
     from pypgsync_spark.operators.dedup import (
-        hashed_shingles,
         jaccard,
+        ppjoin_length_filter,
+        ppjoin_positional_filter,
+        ppjoin_prefixes,
         with_shingles,
     )
 
-    use_kernel = hashed_verify and os.environ.get(
-        "SPARK_GRAFT_SHINGLE_KERNEL", "1"
-    ) != "0"
-
     def sh(side: DataFrame) -> DataFrame:
-        if use_kernel:
-            # fused Arrow kernel (r15) — see ngram_jaccard_pairs
-            s = hashed_shingles(side, id_col, text_col, n)
-        else:
-            s = with_shingles(side.select(id_col, text_col), text_col, n)
-            if hashed_verify:
-                s = s.withColumn(
-                    "shingles",
-                    F.array_distinct(
-                        F.transform("shingles", lambda x: F.xxhash64(x))
-                    ),
-                )
-        return s.filter(F.size("shingles") > 0)
+        s = with_shingles(side.select(id_col, text_col), text_col, n)
+        return s.withColumn(
+            "shingles",
+            F.array_distinct(F.transform("shingles", lambda x: F.xxhash64(x))),
+        ).filter(F.size("shingles") > 0)
 
     sd = sh(delta)
     sc = sh(corpus)
@@ -157,36 +143,7 @@ def cross_jaccard_pairs(
     # shared AllPairs/PPJoin kernel (r10 review: this was a second
     # inline copy of the prefix build; a bound/tie-order fix in one
     # place would have silently left the other incomplete)
-    from pypgsync_spark.operators.dedup import (
-        PPJOIN_FREQ_BROADCAST_MAX,
-        _collect_freq_if_small,
-        ppjoin_length_filter,
-        ppjoin_positional_filter,
-        ppjoin_prefixes,
-        ppjoin_prefixes_bcast,
-    )
-
-    freq_np = (
-        _collect_freq_if_small(freq, PPJOIN_FREQ_BROADCAST_MAX)
-        if use_kernel
-        else None
-    )
-
     def prefixes(ex: DataFrame, side: str) -> DataFrame:
-        if freq_np is not None:
-            # union vocabulary fits the broadcast cap: map-side prefix
-            # kernel, no freq join / rank-window shuffle per side (r15
-            # — see ngram_jaccard_pairs; rows identical, pinned by
-            # tests/test_kernel_parity.py::test_ppjoin_prefixes_bcast_matches_join_path)
-            src = sd if side == "d" else sc
-            return ppjoin_prefixes_bcast(
-                src, freq_np, threshold, id_col
-            ).select(
-                F.col("id").alias(f"id_{side}"),
-                F.col("sz").alias(f"sz_{side}"),
-                "sh",
-                F.col("__rk").alias(f"__rk_{side}"),
-            )
         return ppjoin_prefixes(
             ex, freq, threshold, id_col=f"id_{side}", sz_col=f"sz_{side}"
         ).withColumnRenamed("__rk", f"__rk_{side}")
@@ -392,7 +349,6 @@ def lsh_index_screen(
     num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.3,
-    hashed_verify: bool = True,
 ) -> DataFrame:
     """Near-dup pairs (delta_id, corpus_id, jaccard) between an ingest
     DELTA and a standing corpus, probed through the corpus's
@@ -400,16 +356,15 @@ def lsh_index_screen(
     — the near-dup analogue this module's header promises, composed
     with the v15 materialized-index and d16 Bloom-gate precedents.
 
-    ``hashed_verify`` (r14 optimization round) is the d2/d8 flag with a
-    TWO-COLUMN carry: the delta's STRING shingles must still feed the
-    md5 minhash signer (the oracle-shared base hash), so only the two
-    verify-side projections replace each shingle with its xxhash64 —
-    Jaccard depends on set sizes alone, which 64-bit hashing preserves
-    (collision odds ~|sh|²/2⁶⁴), long-array intersects run ~2× faster
-    than string-array ones, and the verify joins ship 8-byte elements
-    instead of n-gram strings. The signature/banding chain is
-    bit-identical to the unhashed form; equality against the
-    string-verify reference chain is pinned by
+    The verify is hashed, as in d2/d8, with a TWO-COLUMN carry: the
+    delta's STRING shingles must still feed the md5 minhash signer (the
+    oracle-shared base hash), so only the two verify-side projections
+    replace each shingle with its xxhash64 — Jaccard depends on set
+    sizes alone, which 64-bit hashing preserves (collision odds
+    ~|sh|²/2⁶⁴), long-array intersects run ~2× faster than string-array
+    ones, and the verify joins ship 8-byte elements instead of n-gram
+    strings. Equality against the string-verify reference chain is
+    pinned by
     tests/test_r14_queries.py::test_d17_matches_indexless_screen_and_recrawl_hits.
 
     Work is delta-proportional end to end:
@@ -448,12 +403,8 @@ def lsh_index_screen(
 
     from pypgsync_spark.operators.dedup import (
         band_bucket_keys,
-        doc_tokens,
-        hashed_shingles,
-        hashed_shingles_from_tokens,
         jaccard,
         minhash_signatures,
-        minhash_signatures_from_tokens,
         with_shingles,
     )
 
@@ -470,26 +421,11 @@ def lsh_index_screen(
                 "probe with its geometry"
             )
 
-    use_kernel = hashed_verify and os.environ.get(
-        "SPARK_GRAFT_SHINGLE_KERNEL", "1"
-    ) != "0"
-    if use_kernel:
-        # fused kernels (r15): ONE JVM tokenization of the delta —
-        # lazy-checkpointed, materialized by bloom_prune's key count —
-        # feeds the signer (bit-identical signatures) and the hashed
-        # verify side; corpus candidates get the hashed-shingle kernel
-        # directly. Replaces the r14 two-column carry (string shingles
-        # + per-element xxhash64 on both verify projections).
-        tk_d = doc_tokens(
-            delta.select(id_col, text_col), id_col, text_col
-        ).localCheckpoint(eager=False)
-        sig_d = minhash_signatures_from_tokens(tk_d, n, num_perm)
-    else:
-        s_d = with_shingles(delta.select(id_col, text_col), text_col, n)
-        # feeds both the signature build and the exact verify: lazy
-        # checkpoint, materialized by bloom_prune's key count
-        s_d = s_d.localCheckpoint(eager=False)
-        sig_d = minhash_signatures(s_d, id_col, "shingles", num_perm)
+    s_d = with_shingles(delta.select(id_col, text_col), text_col, n)
+    # feeds both the signature build and the exact verify: lazy
+    # checkpoint, materialized by bloom_prune's key count
+    s_d = s_d.localCheckpoint(eager=False)
+    sig_d = minhash_signatures(s_d, id_col, "shingles", num_perm)
     keys_d = band_bucket_keys(sig_d, num_perm, bands).localCheckpoint(
         eager=False
     )
@@ -522,31 +458,11 @@ def lsh_index_screen(
         how="left_semi",
     )
 
-    def verify_form(sh: Column) -> Column:
-        if hashed_verify:
-            return F.array_distinct(F.transform(sh, lambda x: F.xxhash64(x)))
-        return sh
-
-    if use_kernel:
-        sh_c = hashed_shingles(
-            corpus_cand.select(id_col, text_col), id_col, text_col, n
-        ).select(
-            F.col(id_col).alias("corpus_id"), F.col("shingles").alias("sh_c")
-        )
-        sh_d = hashed_shingles_from_tokens(tk_d, n).select(
-            F.col("id").alias("delta_id"), F.col("shingles").alias("sh_d")
-        )
-    else:
-        sh_c = with_shingles(
-            corpus_cand.select(id_col, text_col), text_col, n
-        ).select(
-            F.col(id_col).alias("corpus_id"),
-            verify_form(F.col("shingles")).alias("sh_c"),
-        )
-        sh_d = s_d.select(
-            F.col(id_col).alias("delta_id"),
-            verify_form(F.col("shingles")).alias("sh_d"),
-        )
+    hashed = F.array_distinct(F.transform("shingles", lambda x: F.xxhash64(x)))
+    sh_c = with_shingles(
+        corpus_cand.select(id_col, text_col), text_col, n
+    ).select(F.col(id_col).alias("corpus_id"), hashed.alias("sh_c"))
+    sh_d = s_d.select(F.col(id_col).alias("delta_id"), hashed.alias("sh_d"))
     return (
         cand.join(sh_d, on="delta_id")
         .join(sh_c, on="corpus_id")

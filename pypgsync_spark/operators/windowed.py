@@ -131,22 +131,3 @@ def window_boundaries(
         return df.stat.approxQuantile(column, probs, 0.001)
     return [r[column] for r in row_number_boundaries(df, column, window_size).collect()]
 
-
-def half_open_ranges(
-    boundaries: list[int | float],
-) -> list[tuple[int | float, int | float | None]]:
-    """Boundary values → half-open ``[start, end)`` ranges, final range
-    unbounded (reference session.py:264-271, ``interval_to_expr``)."""
-    out: list[tuple[int | float, int | float | None]] = []
-    for i, start in enumerate(boundaries):
-        end = boundaries[i + 1] if i + 1 < len(boundaries) else None
-        out.append((start, end))
-    return out
-
-
-def filter_half_open(df: DataFrame, column: str, start, end) -> DataFrame:
-    """``column >= start AND (column < end OR end IS None)`` — P4."""
-    cond = F.col(column) >= start
-    if end is not None:
-        cond = cond & (F.col(column) < end)
-    return df.filter(cond)

@@ -13,14 +13,10 @@ needs no table format.
 
 Implementation notes:
 
-- Each column is first rank-normalized onto a ``bits``-bit grid with
-  ``percent_rank()`` (value distributions are arbitrary; raw values
-  would let one wide column dominate the interleave). That costs one
-  window over an empty partition spec, i.e. a single-partition sort of
-  the distinct grid — at 100 TB replace with ``approxQuantile``-derived
-  cut points computed once per table (same grid, sample-driven); the
-  expression interleave below is unchanged. ``zorder_key_fixed`` is
-  that production variant: explicit [lo, hi] per column, zero windows.
+- Each column is first scaled onto a ``bits``-bit grid from explicit
+  [lo, hi] bounds (``zorder_key_fixed``; bounds from table stats or
+  ``approxQuantile`` cut points computed once per table, zero windows)
+  — raw values would let one wide column dominate the interleave.
 - The interleave itself is a pure, codegen'd integer expression:
   bit i of column j lands at position ``i * n_cols + j``.
 - ``write_zordered`` = ``repartitionByRange(z)`` (range-partitioned
@@ -31,7 +27,7 @@ Implementation notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -75,21 +71,6 @@ def zorder_key_fixed(
             F.least(
                 (clamped * ((1 << bits) - 1)).cast("long"),
                 F.lit((1 << bits) - 1),
-            )
-        )
-    return _interleave(grids, bits)
-
-
-def zorder_key_ranked(df: DataFrame, cols: list[str], bits: int = 16) -> Column:
-    """Z-value from rank-normalized columns (distribution-free; costs
-    one window per column — fixture/derivation use; see module notes
-    for the 100 TB variant)."""
-    grids = []
-    for name in cols:
-        pr = F.percent_rank().over(Window.orderBy(F.col(name)))
-        grids.append(
-            F.least(
-                (pr * ((1 << bits) - 1)).cast("long"), F.lit((1 << bits) - 1)
             )
         )
     return _interleave(grids, bits)

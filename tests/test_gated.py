@@ -183,34 +183,6 @@ def test_gated_balance_rocksdb_provider(spark, tmp_path):
     )
 
 
-def test_tws_gate_runs_or_is_cleanly_gated(spark, sf_small):
-    """transformWithState variant of the gate: executes where the
-    protobuf state-client runtime exists; otherwise the module must
-    report unavailability instead of crashing mid-query."""
-    import tempfile
-
-    import pytest as _pytest
-
-    from pypgsync_spark.catalog import table_path
-    from pypgsync_spark.queries.streamq import _events_stream_source
-    from pypgsync_spark.streaming.gated_tws import HAS_TWS_RUNTIME, gated_balance_tws
-
-    if not HAS_TWS_RUNTIME:
-        _pytest.skip("google.protobuf absent: transformWithState runtime unavailable")
-    schema = _events_stream_source(spark, sf_small)
-    ck = tempfile.mkdtemp(prefix="tws_gate_ck_")
-    got = gated_balance_tws(
-        spark, table_path(sf_small, "events"), schema, checkpoint_dir=ck
-    )
-    from pypgsync_spark.streaming.balance import batch_balance, qualifying
-    from pypgsync_spark.catalog import load_table
-
-    want = batch_balance(
-        qualifying(load_table(spark, sf_small, "events"))
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-
 def test_gated_balance_scheme_qualified_uris(spark, tmp_path):
     """r10 review: the contrib-dir existence probe and _file_stream's
     single-file probe go through the Hadoop FileSystem for the URI's
@@ -234,50 +206,6 @@ def test_gated_balance_scheme_qualified_uris(spark, tmp_path):
     )
     got = {(r["user_id"], r["balance"], r["n_events"]) for r in bal.collect()}
     assert got == {(1, 10.0, 1)}
-
-
-def test_tws_gate_handler_exact_semantics():
-    """The transformWithState runtime cannot execute in this container
-    (no protobuf), but the handler is plain pandas — unit-test it with
-    a fake ValueState. r10 review found two divergences from gated.py:
-    arbitrary-first-row emission (nondeterministic when one batch holds
-    two qualifying versions) and no TTL refresh-on-touch."""
-    import pandas as pd
-
-    from pypgsync_spark.streaming.gated_tws import _GateProcessor
-
-    class FakeState:
-        def __init__(self):
-            self.value = None
-            self.updates = 0
-
-        def exists(self):
-            return self.value is not None
-
-        def update(self, v):
-            self.value = v
-            self.updates += 1
-
-    p = _GateProcessor(ttl_ms=None)
-    p._seen = FakeState()
-    # two qualifying versions of id 7 in ONE batch, later-ts row first
-    # in the Arrow chunk AND an earlier-ts row in a LATER chunk — the
-    # earliest ts across all chunks must win
-    chunk1 = pd.DataFrame(
-        {"event_id": [7], "user_id": [1], "value": [99.0], "ts": [200]}
-    )
-    chunk2 = pd.DataFrame(
-        {"event_id": [7], "user_id": [1], "value": [10.0], "ts": [100]}
-    )
-    out = list(p.handleInputRows((7,), iter([chunk1, chunk2]), None))
-    assert len(out) == 1
-    assert out[0]["value"].iloc[0] == 10.0  # earliest-ts version, not first-seen
-    assert p._seen.exists() and p._seen.updates == 1
-
-    # re-delivery: suppressed, and the flag is REFRESHED (TTL reset)
-    out2 = list(p.handleInputRows((7,), iter([chunk1]), None))
-    assert out2 == []
-    assert p._seen.updates == 2  # refresh-on-touch
 
 
 def test_compact_store_dangling_pointer_noop(spark, sf_small, tmp_path):

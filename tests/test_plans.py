@@ -278,6 +278,38 @@ def test_incremental_dedup_plan_shape(spark, sf_small):
     assert "struct<doc_id:bigint,text:string>" in plan  # pruned corpus read
 
 
+def test_ngram_jaccard_joins_start_no_python_worker(spark, sf_small):
+    """The n-gram/PPJoin family (d2, d8 and every query built on
+    ngram_jaccard_pairs / cross_jaccard_pairs) shingles, ranks and
+    verifies in JVM expressions: no optimized plan — with or without
+    the shingle checkpoints — may carry a Python-evaluation node."""
+    from pyspark.sql import functions as F
+
+    from pypgsync_spark.catalog import load_table
+    from pypgsync_spark.operators.dedup import ngram_jaccard_pairs
+    from pypgsync_spark.operators.incremental import cross_jaccard_pairs
+
+    docs = load_table(spark, sf_small, "documents")
+    corpus = docs.filter(F.col("doc_id") % 10 != 0)
+    delta = docs.filter(F.col("doc_id") % 10 == 0)
+    frames = {}
+    for m in (True, False):
+        frames[f"ngram_jaccard_pairs(materialize_shingles={m})"] = ngram_jaccard_pairs(
+            docs, materialize_shingles=m
+        )
+        frames[f"cross_jaccard_pairs(materialize_shingles={m})"] = cross_jaccard_pairs(
+            corpus, delta, materialize_shingles=m
+        )
+    python_nodes = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+    offenders = {}
+    for key, df in frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        hits = [node for node in python_nodes if node in plan]
+        if hits:
+            offenders[key] = hits
+    assert not offenders, f"Python-evaluation nodes found: {offenders}"
+
+
 def test_unpivot_is_map_only_expand(spark, sf_small):
     """a19 (UNPIVOT) must plan as Expand inside the scan stage: a
     map-only 3x row emission with NO exchange, reading only the five
