@@ -207,14 +207,6 @@ def latest_per_key(df: DataFrame, keys: Sequence[str], version_col: str) -> Data
     return df.withColumn(_RN, F.row_number().over(w)).filter(F.col(_RN) == 1).drop(_RN)
 
 
-def new_keys_only(src: DataFrame, dst: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Rows of ``src`` whose key is absent from ``dst`` — the keyed form
-    of the reference's "rows not yet synced" watermark comparison
-    (reference session.py:57-64). Plans as a left-anti join; Catalyst
-    broadcasts the key set when small."""
-    return src.join(dst.select(*keys).distinct(), on=list(keys), how="left_anti")
-
-
 def bucket_checksums(
     df: DataFrame,
     id_col: str,

@@ -16,7 +16,6 @@ from pypgsync_spark.operators.merge import (
     coalesce_merge,
     delta_wins_merge,
     latest_per_key,
-    new_keys_only,
     upsert_merge,
 )
 
@@ -107,12 +106,6 @@ def test_coalesce_merge_matches_upsert(spark):
 def test_latest_per_key(spark):
     df = spark.createDataFrame([(1, 1, "a"), (1, 3, "c"), (1, 2, "b")], SCHEMA)
     assert rows_set(latest_per_key(df, ["id"], "updated")) == {(1, 3, "c")}
-
-
-def test_new_keys_only(spark):
-    src = spark.createDataFrame([(1, 1, "a"), (2, 1, "b"), (3, 1, "c")], SCHEMA)
-    dst = spark.createDataFrame([(2, 99, "x")], SCHEMA)
-    assert {r[0] for r in new_keys_only(src, dst, ["id"]).collect()} == {1, 3}
 
 
 def test_merge_schema_mismatch_raises(spark):
