@@ -172,11 +172,13 @@ def delta_wins_merge(
     Unlike :func:`coalesce_merge` it replaces whole rows, so a NULL in
     a delta column is written as NULL.
 
-    Plan: ``dst`` left-anti ``keys(latest_per_key(delta))`` union
+    Plan: ``dst`` left-anti ``keys(delta)`` union
     ``latest_per_key(delta)``, keys matched null-safely the way the
-    window in :func:`upsert_merge` groups NULL keys. Only the delta
-    shuffles (the window) when the key set is broadcast: the planner
-    does so when its estimate fits the threshold, and
+    window in :func:`upsert_merge` groups NULL keys. The anti-join side
+    takes the delta's keys as they are: a left-anti join ignores
+    duplicate keys, so the window runs once, for the union side. Only
+    the delta shuffles (the window) when the key set is broadcast: the
+    planner does so when its estimate fits the threshold, and
     ``broadcast_keys`` forces it for a caller that knows the delta is
     small (sync_once, from its exact row count). The destination then
     streams through a map-side anti-join instead of being re-shuffled
@@ -188,7 +190,7 @@ def delta_wins_merge(
     if set(cols) != set(delta.columns):
         raise ValueError(f"schema mismatch: dst={cols} delta={delta.columns}")
     latest = latest_per_key(delta.select(*cols), keys, version_col)
-    delta_keys = latest.select(*keys)
+    delta_keys = delta.select(*keys)
     if broadcast_keys:
         delta_keys = F.broadcast(delta_keys)
     hit = [F.col(f"d.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]

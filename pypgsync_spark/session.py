@@ -193,17 +193,24 @@ def _only_templates(conf_dir: str) -> bool:
         return True
 
 
-def _archive_key(spark_home: str, driver_mem: str) -> str:
+def _archive_key(spark_home: str, driver_mem: str, extra_classpath: str = "") -> str:
     """Hash of what an archive depends on, taken without starting a
     process: the JDK spark-class runs (binary path and mtime, ``release``
-    file), the name, size and mtime of each jar, and the driver heap
-    (above 32 GB the JVM drops the compressed oops the archive needs)."""
+    file), the name, size and mtime of each jar, the driver heap (above
+    32 GB the JVM drops the compressed oops the archive needs), and the
+    classpath entries added outside the jars directory
+    (``$SPARK_DIST_CLASSPATH`` and ``spark.driver.extraClassPath``): the
+    JVM refuses an archive dumped under another classpath, silently
+    under ``-Xshare:auto``, so a different classpath needs its own."""
     java_home = os.environ.get("JAVA_HOME")
     java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
     if not java:
         raise FileNotFoundError("java")
     java = os.path.realpath(java)
     h = hashlib.sha256(f"{java}\0{os.stat(java).st_mtime_ns}\0{driver_mem}".encode())
+    classpath = (os.environ.get("SPARK_DIST_CLASSPATH", ""), extra_classpath)
+    if any(classpath):  # none: the key an archive of the jars alone has always had
+        h.update("\0{}\0{}".format(*classpath).encode())
     try:
         with open(os.path.join(os.path.dirname(os.path.dirname(java)), "release"), "rb") as f:
             h.update(f.read())
@@ -297,7 +304,9 @@ def _cds_launch(master: str | None, conf: dict[str, str]) -> _Cds | None:
         os.makedirs(conf_dir, exist_ok=True)
         if not os.access(cache, os.W_OK):
             return None
-        key = _archive_key(spark_home, conf["spark.driver.memory"])
+        key = _archive_key(
+            spark_home, conf["spark.driver.memory"], conf.get("spark.driver.extraClassPath", "")
+        )
         archive = _settle(cache, key)
     except OSError:
         return None

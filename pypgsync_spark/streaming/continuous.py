@@ -42,7 +42,10 @@ def _merge_stream_writer(
     versions of one key inside a batch, so only the first batch into an
     empty store needs ``latest_per_key``. The merge stays
     version-guarded (not ``delta_wins_merge``): a file stream delivers
-    late rows older than the store's MAX. ``batch_rows`` optionally
+    late rows older than the store's MAX. Each write records the
+    merged table's MAX ``version_col`` in the commit, observed while
+    the write runs (no extra job), so a later ``sync_table`` pass on
+    the store needs no watermark scan. ``batch_rows`` optionally
     collects per-epoch input row counts (test/observability hook)."""
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
@@ -53,7 +56,7 @@ def _merge_stream_writer(
             merged = latest_per_key(batch, keys, version_col)
         else:
             merged = upsert_merge(dst, batch, keys, version_col)
-        store.write(merged)
+        store.write(merged, version_col)
 
     writer = src.writeStream.foreachBatch(merge_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -31,6 +31,19 @@ deploy time. Like a table format's commit log, each parquet generation
 carries a small commit file (``_commit.json``: the written schema and,
 from ``sync_table``, the version column's MAX), so reading the store
 infers no schema and the next pass's low watermark needs no scan.
+
+The commit also lists the source files the pass consumed, as
+``{path: [size, mtime]}`` (the seen-files log of Spark's own
+``FileStreamSource``, kept in the commit the way Delta Lake keeps its
+file list). When the source is a plain parquet scan, the next pass
+compares its listing with the record: an unchanged listing ends the pass
+with no Spark job (``delta_rows`` 0), and a listing that only gained
+files reads just the new ones. Skipping a consumed file is exact: a
+pass records its listing only when no row of its files lies above its
+high watermark, so every row of a recorded file is at or below the
+committed MAX (or below an earlier low watermark, which the protocol
+skips anyway), and a re-read would find only boundary rows already
+merged.
 """
 
 from __future__ import annotations
@@ -39,7 +52,7 @@ import json
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -79,11 +92,16 @@ def low_watermark(dst: DataFrame | None, src: DataFrame, column: str) -> int | N
 @dataclass
 class SyncStats:
     """One pass. ``delta_rows``: source rows read (boundary re-reads
-    included). ``delta_max``: their MAX version — the destination's new
-    watermark. ``rows_changed``: delta rows the destination does not
-    already hold (see :func:`sync_once`); 0 when the delta changes
-    nothing. ``wrote``: whether :func:`sync_table` committed a new
-    generation (:func:`sync_once` itself never writes)."""
+    included); 0 when :func:`sync_table` finds the source's file listing
+    unchanged since the last commit, and only the new files' rows when
+    it only gained files. ``delta_max``: their MAX version — the
+    destination's new watermark. ``rows_changed``: delta rows the
+    destination does not already hold (see :func:`sync_once`); 0 when
+    the delta changes nothing. ``wrote``: whether :func:`sync_table`
+    committed a new generation (:func:`sync_once` itself never writes).
+    ``rows_above_high``: source rows newer than ``high``, left for a
+    later pass; None when not counted (a ``pushdown_cond`` bounds the
+    scan, or no delta was read)."""
 
     low: int | None
     high: int
@@ -92,6 +110,7 @@ class SyncStats:
     delta_max: int | None = None
     rows_changed: int = 0
     wrote: bool = False
+    rows_above_high: int | None = None
 
 
 def extract_delta(
@@ -187,8 +206,11 @@ def sync_once(
     ``dst_max``: the destination's ``MAX(version_col)`` when the caller
     already knows it (a store's commit file); skips that scan.
 
-    One aggregate over the delta gives its row count, its MAX version
-    and how many rows are newer than the low watermark. When the MAX
+    One aggregate over the source's rows at or above the low watermark
+    gives the delta's row count, its MAX version, how many of its rows
+    are newer than the low watermark and how many source rows lie above
+    ``high``; the scan filter keeps only the low bound, so a parquet
+    source still skips row groups below it. When the MAX
     equals the low watermark the delta holds only boundary rows, and
     :func:`_boundary_changes` counts those the destination lacks; if
     there are none, ``rows_changed`` is 0 and the returned frame is
@@ -208,22 +230,30 @@ def sync_once(
         # no-op short-circuit (reference session.py:216-218)
         empty = dst if dst is not None else src.limit(0)
         return empty, SyncStats(low=low, high=high, delta_rows=0, plan=None)
-    delta = extract_delta(src, version_col, low, high, pushdown_cond=pushdown_cond)
+    in_window = F.col(version_col) <= F.lit(high)
+    if pushdown_cond is None:
+        scan = src.filter(F.col(version_col) >= F.lit(low))
+        delta = scan.filter(in_window)
+    else:
+        # the raw predicate bounds both ends; rows above ``high`` are
+        # not counted
+        scan = delta = extract_delta(src, version_col, low, high, pushdown_cond)
     # ONE aggregate feeds the stats, the change test and the slice
     # plan (the plan is informational for JDBC-faithful callers, who
     # apply its range predicates via spark.read.jdbc(predicates=...);
     # the DataFrame path lets the source's own partitioning bound
     # per-task work).
     aggs = [
-        F.count(F.lit(1)).alias("n"),
-        F.max(version_col).alias("mx"),
-        F.count(F.when(F.col(version_col) > F.lit(low), 1)).alias("newer"),
+        F.count(F.when(in_window, 1)).alias("n"),
+        F.max(F.when(in_window, F.col(version_col))).alias("mx"),
+        F.count(F.when(in_window & (F.col(version_col) > F.lit(low)), 1)).alias("newer"),
+        F.count(F.when(~in_window, 1)).alias("above"),
     ]
     if dst is None:
         # a cold start must not commit two versions of one key; the
         # distinct-key count says whether the delta holds any
-        aggs.append(F.count_distinct(F.struct(*keys)).alias("keys"))
-    agg = delta.agg(*aggs).first()
+        aggs.append(F.count_distinct(F.when(in_window, F.struct(*keys))).alias("keys"))
+    agg = scan.agg(*aggs).first()
     delta_rows, delta_max = agg["n"], agg["mx"]
     plan = (
         plan_slices(low, high, delta_rows, target_rows_per_slice)
@@ -250,6 +280,7 @@ def sync_once(
         low=low, high=high, delta_rows=delta_rows, plan=plan,
         delta_max=None if delta_max is None else int(delta_max),
         rows_changed=rows_changed,
+        rows_above_high=None if pushdown_cond is not None else agg["above"],
     )
     return merged, stats
 
@@ -322,8 +353,14 @@ class ParquetSyncedTable:
     :meth:`committed_max` hands ``sync_table`` its low watermark
     without a scan — Delta Lake's design of keeping schema and
     statistics in the commit instead of re-deriving them from the data
-    files. A generation without the file (older stores, other writers)
-    is read by inference and its watermark comes from a scan.
+    files. ``sync_table`` also records the source files the generation
+    consumed (``source_files``, ``{path: [size, mtime]}``), so its next
+    pass can skip an unchanged source or read only new files, and
+    ``compact_store`` carries both records over. A generation without
+    the file (older stores, other writers) is read by inference, its
+    watermark comes from a scan, and its next pass reads the whole
+    source. :meth:`head` reads ``_CURRENT`` and the commit file once
+    for a whole pass.
 
     All ``_CURRENT`` pointer I/O goes through the Hadoop FileSystem
     resolved for the destination URI's scheme (r6 verdict #6 — the last
@@ -342,12 +379,25 @@ class ParquetSyncedTable:
         self.spark = spark
         self.path = path.rstrip("/")
         self._ptr = f"{self.path}/_CURRENT"
+        # JVM classes resolved once per store: each step of a
+        # ``spark._jvm`` walk is a Py4J round trip
+        jvm = spark._jvm
+        self._Path = jvm.org.apache.hadoop.fs.Path
+        self._BufferedReader = jvm.java.io.BufferedReader
+        self._InputStreamReader = jvm.java.io.InputStreamReader
+        self._FileContext = jvm.org.apache.hadoop.fs.FileContext
+        self._Rename = jvm.org.apache.hadoop.fs.Options.Rename
+        self._hconf = spark._jsc.hadoopConfiguration()
+        self._filesystem = None
 
     def _jpath(self, uri: str):
-        return self.spark._jvm.org.apache.hadoop.fs.Path(uri)
+        return self._Path(uri)
 
     def _fs(self, jpath):
-        return jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        # every path a store touches lies under its root: one FileSystem
+        if self._filesystem is None:
+            self._filesystem = jpath.getFileSystem(self._hconf)
+        return self._filesystem
 
     def _read_line(self, uri: str) -> str | None:
         """First line of a small file, or None when it does not exist."""
@@ -355,8 +405,7 @@ class ParquetSyncedTable:
         fs = self._fs(p)
         if not fs.exists(p):
             return None
-        jvm = self.spark._jvm
-        reader = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(fs.open(p)))
+        reader = self._BufferedReader(self._InputStreamReader(fs.open(p)))
         try:
             return reader.readLine()
         finally:
@@ -379,25 +428,30 @@ class ParquetSyncedTable:
         text = self._read_line(f"{gen}/{COMMIT_FILE}")
         return json.loads(text) if text else None
 
+    def head(self) -> tuple[str | None, dict | None]:
+        """The current generation's path and its commit file, each read
+        once: ``(None, None)`` with no generation, ``(gen, None)`` for
+        one written without a commit file."""
+        cur = self._current()
+        return cur, None if cur is None else self._commit(cur)
+
     def commit_meta(self) -> dict | None:
         """The current generation's commit file, or None (no generation,
         or one written without it)."""
-        cur = self._current()
-        return None if cur is None else self._commit(cur)
+        return self.head()[1]
 
     def committed_max(self, version_col: str) -> int | None:
         """``MAX(version_col)`` as recorded at the current generation's
         commit; None when no commit file records it for that column."""
-        meta = self.commit_meta() or {}
-        if meta.get("version_col") != version_col:
-            return None
-        return meta.get("max_version")
+        return _recorded(self.commit_meta(), version_col, "max_version")
 
-    def read(self) -> DataFrame | None:
-        cur = self._current()
+    def read(self, head: tuple[str | None, dict | None] | None = None) -> DataFrame | None:
+        """The current generation, or None. ``head``: a :meth:`head`
+        result the caller already holds, so neither small file is read
+        again."""
+        cur, meta = self.head() if head is None else head
         if cur is None:
             return None
-        meta = self._commit(cur)
         if meta is not None:
             schema = T.StructType.fromJson(meta["schema"])
             return self.spark.read.schema(schema).parquet(cur)
@@ -411,31 +465,45 @@ class ParquetSyncedTable:
         df: DataFrame,
         version_col: str | None = None,
         max_version: int | None = None,
+        source_files: dict[str, list[int]] | None = None,
     ) -> None:
         """Commit ``df`` as the next generation. ``version_col`` and
         ``max_version`` (its MAX over ``df``, which the caller vouches
-        for) go into the commit file when both are given."""
+        for) go into the commit file; given ``version_col`` alone, the
+        write observes the MAX while it writes (``DataFrame.observe``:
+        no extra job) and records it when it is an integer.
+        ``source_files``: the source listing this generation has
+        consumed (see :func:`sync_table`), recorded with the
+        watermark."""
         cur = self._current()
         nxt = "a" if cur is None or cur.endswith("b") else "b"
         gen = f"{self.path}/{nxt}"
+        observed = None
+        if version_col is not None and max_version is None:
+            observed = Observation()
+            df = df.observe(observed, F.max(version_col).alias("mx"))
         df.write.mode("overwrite").parquet(gen)
+        if observed is not None:
+            mx = observed.get["mx"]
+            # a watermark is an integral version (a timestamp column
+            # streams fine but records none)
+            max_version = mx if isinstance(mx, int) else None
         meta = {"schema": df.schema.jsonValue()}
         if version_col is not None and max_version is not None:
             meta.update(version_col=version_col, max_version=int(max_version))
+            if source_files:
+                meta["source_files"] = source_files
         self._put(self._jpath(f"{gen}/{COMMIT_FILE}"), json.dumps(meta))
-        jvm = self.spark._jvm
         tmp = self._jpath(self._ptr + ".tmp")
         fs = self._fs(tmp)
         self._put(tmp, nxt)
         try:
             # HDFS/local: FileContext rename(OVERWRITE) flips the
             # pointer atomically.
-            fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-                self.spark._jsc.hadoopConfiguration()
-            )
+            fc = self._FileContext.getFileContext(self._hconf)
             gw = self.spark.sparkContext._gateway
-            overwrite = gw.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
-            overwrite[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
+            overwrite = gw.new_array(self._Rename, 1)
+            overwrite[0] = self._Rename.OVERWRITE
             fc.rename(tmp, self._jpath(self._ptr), overwrite)
         except Exception as exc:
             # The fallback is ONLY for schemes with no AbstractFileSystem
@@ -452,6 +520,44 @@ class ParquetSyncedTable:
                 raise
             self._put(self._jpath(self._ptr), nxt)
             fs.delete(tmp, False)
+
+
+def _recorded(meta: dict | None, version_col: str, field: str):
+    """A commit-file field that is only meaningful for the version
+    column it was recorded with; None when absent or recorded for
+    another column."""
+    if not meta or meta.get("version_col") != version_col:
+        return None
+    return meta.get(field)
+
+
+def _source_files(src: DataFrame) -> dict[str, list[int]] | None:
+    """``{path: [size, mtime]}`` of the files ``src`` scans, read off its
+    own file index (no Spark job); None unless ``src`` is a plain,
+    unpartitioned parquet scan that lists at least one file. Anything
+    derived (a filter, a projection, a join), in-memory or partitioned
+    is None, and its passes take the watermark path. The listing costs
+    a few Py4J round trips per file."""
+    jdf = getattr(src, "_jdf", None)
+    if jdf is None:
+        return None
+    plan = jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+        or rel.partitionSchema().length() > 0
+        or rel.location().getClass().getSimpleName() != "InMemoryFileIndex"
+    ):
+        return None
+    statuses = rel.location().allFiles()
+    out = {}
+    for i in range(statuses.length()):
+        st = statuses.apply(i)
+        out[st.getPath().toString()] = [st.getLen(), st.getModificationTime()]
+    return out or None
 
 
 def sync_table(
@@ -472,15 +578,40 @@ def sync_table(
     records one (else a scan), and the new generation's commit records
     the delta's MAX as the next one. A pass whose delta changes nothing
     writes nothing: ``_CURRENT`` and the generation directories stay
-    untouched (``stats.wrote`` is False)."""
-    dst = store.read()
+    untouched (``stats.wrote`` is False).
+
+    When ``src`` is a plain parquet scan, the commit also records its
+    file listing, provided no row of the scan lies above ``high``. The
+    next pass compares the listing with that record: the same listing
+    returns ``delta_rows == 0`` with no Spark job; a listing that only
+    gained files reads just those files, with the same ``low <= v <=
+    high`` window; any other difference (a file changed in place or
+    removed) reads the whole source. A file is compared by size and
+    modification time, as Spark's own file index does."""
+    head = store.head()
+    meta = head[1]
+    committed = _recorded(meta, version_col, "max_version")
+    files = _source_files(src)
+    seen = _recorded(meta, version_col, "source_files")
+    scan = src
+    if files and seen:
+        if files == seen:
+            # the per-file form of the reference's low > high skip
+            # (session.py:216-218)
+            high = high if high is not None else now_millis()
+            return SyncStats(low=committed, high=high, delta_rows=0, plan=None)
+        if all(files.get(p) == v for p, v in seen.items()):
+            new = [p for p in files if p not in seen]
+            scan = src.sparkSession.read.schema(src.schema).parquet(*new)
+    dst = store.read(head)
     merged, stats = sync_once(
-        src, dst, keys, version_col, high=high,
+        scan, dst, keys, version_col, high=high,
         target_rows_per_slice=target_rows_per_slice,
-        dst_max=None if dst is None else store.committed_max(version_col),
+        dst_max=None if dst is None else committed,
     )
     if stats.rows_changed > 0 or dst is None:
-        store.write(merged, version_col, stats.delta_max)
+        consumed = files if stats.rows_above_high == 0 else None
+        store.write(merged, version_col, stats.delta_max, source_files=consumed)
         stats.wrote = True
     return stats
 
@@ -535,7 +666,8 @@ def compact_store(
     """
     import math
 
-    cur = store._current()
+    head = store.head()
+    cur, meta = head
     if cur is None:
         return {"files_before": 0, "files_after": 0, "bytes": 0, "compacted": False}
     p = store._jpath(cur)
@@ -565,11 +697,14 @@ def compact_store(
             "bytes": total,
             "compacted": False,
         }
-    # same rows, same MAX: carry the watermark so the next pass needs
-    # no scan
-    meta = store.commit_meta() or {}
+    # same rows, same MAX: carry the watermark and the consumed source
+    # listing, so the next pass needs no scan and reads no old file
+    meta = meta or {}
     store.write(
-        store.read().coalesce(n_target), meta.get("version_col"), meta.get("max_version")
+        store.read(head).coalesce(n_target),
+        meta.get("version_col"),
+        meta.get("max_version"),
+        meta.get("source_files"),
     )
     new = store._jpath(store._current())
     n_after = sum(

@@ -87,6 +87,26 @@ def test_key_covers_jars_and_heap(tmp_path):
     assert session._archive_key(str(tmp_path), "8g") != key
 
 
+def test_key_covers_classpath_outside_the_jars(cds_env, monkeypatch):
+    """An archive dumped under another classpath is refused by the JVM,
+    so ``$SPARK_DIST_CLASSPATH`` and ``spark.driver.extraClassPath`` are
+    part of the key; with neither set the key is the jars-only one."""
+    (cds_env / "jars").mkdir()
+    monkeypatch.delenv("SPARK_DIST_CLASSPATH", raising=False)
+    key = session._archive_key(str(cds_env), "8g")
+    assert session._archive_key(str(cds_env), "8g", "") == key
+    extra = session._archive_key(str(cds_env), "8g", "/opt/extra.jar")
+    monkeypatch.setenv("SPARK_DIST_CLASSPATH", "/opt/hadoop/lib/*")
+    dist = session._archive_key(str(cds_env), "8g")
+    assert len({key, extra, dist}) == 3
+    # the launch keys on the session's own extraClassPath
+    plain = session._cds_launch("local[1]", CONF).archive
+    with_cp = session._cds_launch(
+        "local[1]", {**CONF, "spark.driver.extraClassPath": "/opt/extra.jar"}
+    ).archive
+    assert os.path.basename(plain).split(".")[0] != os.path.basename(with_cp).split(".")[0]
+
+
 def test_build_is_promoted_only_once_its_writer_exited(tmp_path):
     cache, key = str(tmp_path), "k"
     final = os.path.join(cache, "k.jsa")

@@ -242,10 +242,11 @@ def test_cli_continuous_delegates_to_sync_continuous(spark, sf_small, tmp_path, 
     runs = run_continuous(args, spark, sleep=lambda s: None)
     assert calls.get("hit")
     assert len(runs) == 2 and runs[0]["delta_rows"] > 0
-    # the first pass loads the table; the second re-reads only the
-    # boundary rows, changes nothing and writes nothing
+    # the first pass loads the table; the second finds the source's
+    # file listing unchanged since that commit, reads nothing and
+    # writes nothing
     assert runs[0]["wrote"] and runs[0]["rows_changed"] == runs[0]["delta_rows"]
-    assert runs[1]["delta_rows"] > 0
+    assert runs[1]["delta_rows"] == 0
     assert not runs[1]["wrote"] and runs[1]["rows_changed"] == 0
 
 

@@ -274,3 +274,15 @@ def test_delta_wins_merge_never_shuffles_destination(spark, tmp_path):
     out = {r["id"]: (r["updated"], r["val"]) for r in merged.collect()}
     assert len(out) == 2001
     assert out[5] == (3, "newer") and out[9000] == (2, "ins") and out[6] == (1, "v")
+
+
+def test_delta_wins_merge_runs_the_delta_window_once(spark):
+    """The anti-join takes the delta's raw keys (a left-anti join
+    ignores duplicates), so only the union side runs the window."""
+    dst = spark.createDataFrame([(1, 1, "a"), (2, 1, "b")], SCHEMA)
+    delta = spark.createDataFrame([(1, 2, "x"), (1, 3, "y"), (3, 2, "z")], SCHEMA)
+    for bcast in (False, True):
+        merged = delta_wins_merge(dst, delta, ["id"], "updated", broadcast_keys=bcast)
+        plan = merged._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Window [") == 1, plan
+        assert rows_multiset(merged) == rows_multiset(upsert_merge(dst, delta, ["id"], "updated"))

@@ -603,8 +603,10 @@ def test_compact_carries_watermark(spark, sf_small, tmp_path):
 
     src = events_ms(spark, sf_small)
     store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
-    store.write(src.repartition(8), VER, src.agg(F.max(VER)).first()[0])
+    listing = {"file:/landing/part-0.parquet": [1024, 1700000000000]}
+    store.write(src.repartition(8), VER, src.agg(F.max(VER)).first()[0], listing)
     meta = store.commit_meta()
+    assert meta["source_files"] == listing
     assert compact_store(store, target_file_bytes=256 << 20)["compacted"]
     assert store.commit_meta() == meta
     assert store.committed_max(VER) == src.agg(F.max(VER)).first()[0]
@@ -652,3 +654,232 @@ def test_boundary_check_handles_map_columns(spark, tmp_path):
     assert s.wrote and s.rows_changed == 1
     got = {r["event_id"]: r["tags"] for r in store.read().collect()}
     assert got[2] == {"b": ts + dt.timedelta(microseconds=1)}
+
+
+# --- the consumed-source listing: unchanged, added-only and full passes
+
+LSCHEMA = "id long, v long, val string"
+
+
+def _job_ids(spark) -> set[int]:
+    """Every job id the status tracker holds, once the listener bus has
+    delivered the events posted so far."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup())
+
+
+def _land(spark, src_dir, rows) -> str:
+    """Append ``rows`` to the source directory as one new parquet file;
+    returns its path."""
+    import glob
+
+    before = set(glob.glob(f"{src_dir}/*.parquet"))
+    spark.createDataFrame(rows, LSCHEMA).coalesce(1).write.mode("append").parquet(str(src_dir))
+    (new,) = set(glob.glob(f"{src_dir}/*.parquet")) - before
+    return new
+
+
+def _rows(store) -> set:
+    return {tuple(r) for r in store.read().collect()}
+
+
+def _spy_sync_once(monkeypatch) -> list:
+    """The ``src`` each ``sync_once`` call receives, in order."""
+    from pypgsync_spark import sync as sync_mod
+
+    seen, real = [], sync_mod.sync_once
+
+    def spy(src, *a, **k):
+        seen.append(src)
+        return real(src, *a, **k)
+
+    monkeypatch.setattr(sync_mod, "sync_once", spy)
+    return seen
+
+
+def test_unchanged_listing_runs_no_job(spark, tmp_path):
+    d = tmp_path / "src"
+    _land(spark, d, [(1, 1, "a"), (2, 2, "b")])
+    _land(spark, d, [(3, 2, "c")])
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
+    assert sync_table(spark.read.parquet(str(d)), store, ["id"], "v").wrote
+    assert len(store.commit_meta()["source_files"]) == 2
+    src = spark.read.parquet(str(d))
+    before = _job_ids(spark)
+    stats = sync_table(src, store, ["id"], "v")
+    assert _job_ids(spark) - before == set()
+    assert stats.delta_rows == 0 and stats.rows_changed == 0 and not stats.wrote
+    assert stats.low == 2
+
+
+def test_added_files_read_only_the_new_rows(spark, tmp_path, monkeypatch):
+    d = tmp_path / "src"
+    _land(spark, d, [(i, 5, "old") for i in range(20)])
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
+    sync_table(spark.read.parquet(str(d)), store, ["id"], "v")
+    new = [_land(spark, d, [(3, 6, "upd"), (100, 7, "ins")]), _land(spark, d, [(101, 6, "ins")])]
+    seen = _spy_sync_once(monkeypatch)
+    stats = sync_table(spark.read.parquet(str(d)), store, ["id"], "v")
+    (scan,) = seen
+    assert sorted(p.rsplit("/", 1)[1] for p in scan.inputFiles()) == sorted(
+        p.rsplit("/", 1)[1] for p in new
+    )
+    assert scan.count() == stats.delta_rows == 3
+    assert stats.wrote and stats.rows_changed == 3 and store.committed_max("v") == 7
+    want = {(i, 5, "old") for i in range(20) if i != 3} | {
+        (3, 6, "upd"), (100, 7, "ins"), (101, 6, "ins")
+    }
+    assert _rows(store) == want
+    assert len(store.commit_meta()["source_files"]) == 3
+
+
+def test_file_rewritten_in_place_takes_the_full_path(spark, tmp_path, monkeypatch):
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "src"
+    first = _land(spark, d, [(1, 1, "a"), (2, 2, "b")])
+    _land(spark, d, [(3, 2, "c")])
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
+    sync_table(spark.read.parquet(str(d)), store, ["id"], "v")
+    table = pa.table({"id": [1, 2, 4], "v": [9, 2, 9], "val": ["a2", "b", "new"]})
+    pq.write_table(table, first)
+    os.remove(os.path.join(os.path.dirname(first), f".{os.path.basename(first)}.crc"))
+    seen = _spy_sync_once(monkeypatch)
+    src = spark.read.parquet(str(d))
+    stats = sync_table(src, store, ["id"], "v")
+    assert seen == [src]
+    assert stats.wrote and stats.rows_changed == 2
+    assert _rows(store) == {(1, 9, "a2"), (2, 2, "b"), (3, 2, "c"), (4, 9, "new")}
+
+
+def test_removed_file_takes_the_full_path(spark, tmp_path, monkeypatch):
+    import os
+
+    d = tmp_path / "src"
+    gone = _land(spark, d, [(1, 1, "a")])
+    _land(spark, d, [(2, 2, "b")])
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
+    sync_table(spark.read.parquet(str(d)), store, ["id"], "v")
+    os.remove(gone)
+    _land(spark, d, [(3, 3, "c")])
+    seen = _spy_sync_once(monkeypatch)
+    src = spark.read.parquet(str(d))
+    stats = sync_table(src, store, ["id"], "v")
+    assert seen == [src]
+    assert stats.wrote and stats.delta_rows == 2  # the boundary row and the new one
+    assert _rows(store) == {(1, 1, "a"), (2, 2, "b"), (3, 3, "c")}
+
+
+def test_boundary_version_row_in_a_new_file_applies(spark, tmp_path):
+    """A new file whose rows all sit at the committed MAX: a new key and
+    a changed row, both at the watermark version, are applied; the
+    unchanged boundary row in the old file is not read again."""
+    d = tmp_path / "src"
+    _land(spark, d, [(1, 4, "a"), (2, 5, "b"), (3, 5, "c")])
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
+    sync_table(spark.read.parquet(str(d)), store, ["id"], "v")
+    _land(spark, d, [(9, 5, "new"), (3, 5, "c2")])
+    stats = sync_table(spark.read.parquet(str(d)), store, ["id"], "v")
+    assert stats.delta_rows == 2 and stats.delta_max == 5
+    assert stats.wrote and stats.rows_changed == 2
+    assert _rows(store) == {(1, 4, "a"), (2, 5, "b"), (3, 5, "c2"), (9, 5, "new")}
+
+
+def test_row_above_high_in_a_consumed_file_applies_later(spark, tmp_path):
+    """A pass that leaves rows above its ``high`` unread records no
+    listing, so a later pass over the same files still reads them."""
+    d = tmp_path / "src"
+    _land(spark, d, [(1, 1, "a"), (2, 100, "future")])
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
+    first = sync_table(spark.read.parquet(str(d)), store, ["id"], "v", high=50)
+    assert first.rows_above_high == 1 and "source_files" not in store.commit_meta()
+    assert _rows(store) == {(1, 1, "a")}
+    later = sync_table(spark.read.parquet(str(d)), store, ["id"], "v", high=200)
+    assert later.wrote and later.rows_above_high == 0
+    assert _rows(store) == {(1, 1, "a"), (2, 100, "future")}
+    assert len(store.commit_meta()["source_files"]) == 1
+
+
+def test_non_plain_sources_take_the_full_path(spark, tmp_path, monkeypatch):
+    """A filtered scan, an in-memory frame, a partitioned directory and
+    an empty listing record no listing and read the whole source on
+    every pass."""
+    import shutil
+
+    d = tmp_path / "src"
+    _land(spark, d, [(1, 1, "a"), (2, 2, "b")])
+    parted = tmp_path / "parted"
+    spark.createDataFrame([(1, 1, "a"), (2, 2, "b")], LSCHEMA).withColumn(
+        "p", F.col("id") % 2
+    ).write.partitionBy("p").parquet(str(parted))
+    empty = tmp_path / "empty"
+    sources = {
+        "filtered": lambda: spark.read.parquet(str(d)).filter(F.col("id") > 0),
+        "in_memory": lambda: spark.createDataFrame([(1, 1, "a"), (2, 2, "b")], LSCHEMA),
+        "partitioned": lambda: spark.read.parquet(str(parted)),
+    }
+    for name, make in sources.items():
+        store = ParquetSyncedTable(spark, str(tmp_path / f"dst_{name}"))
+        sync_table(make(), store, ["id"], "v")
+        assert "source_files" not in store.commit_meta(), name
+        seen = _spy_sync_once(monkeypatch)
+        src = make()
+        assert sync_table(src, store, ["id"], "v").delta_rows == 1, name
+        assert seen == [src], name
+        monkeypatch.undo()
+
+    # a listing that empties after a recorded pass
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst_empty"))
+    shutil.copytree(d, empty)
+    sync_table(spark.read.parquet(str(empty)), store, ["id"], "v")
+    assert store.commit_meta()["source_files"]
+    for f in empty.glob("*.parquet"):
+        f.unlink()
+    seen = _spy_sync_once(monkeypatch)
+    src = spark.read.schema(LSCHEMA).parquet(str(empty))
+    stats = sync_table(src, store, ["id"], "v")
+    assert seen == [src] and stats.delta_rows == 0 and not stats.wrote
+    assert _rows(store) == {(1, 1, "a"), (2, 2, "b")}
+
+
+def test_stream_sync_commits_its_watermark(spark, tmp_path):
+    """Each drain's write records the merged MAX in the commit, observed
+    during the write: a drain runs as many jobs as writing its batch
+    with no watermark does."""
+    from pypgsync_spark.operators.merge import latest_per_key
+    from pypgsync_spark.streaming.continuous import stream_sync
+
+    d = tmp_path / "landing"
+    first = _land(spark, d, [(1, 3, "a"), (2, 7, "b")])
+    schema = spark.read.parquet(str(d)).schema
+    sc = spark.sparkContext
+
+    def drain(name: str) -> int:
+        """Drain the landing directory into store ``name``; the number
+        of jobs the stream ran."""
+        q = stream_sync(
+            spark, str(d), schema, ParquetSyncedTable(spark, str(tmp_path / name)),
+            ["id"], "v", str(tmp_path / f"ckpt_{name}"),
+        )
+        q.awaitTermination()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+
+    first_jobs = drain("dst")
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
+    assert store.committed_max("v") == 7
+    _land(spark, d, [(1, 9, "a2")])
+    drain("dst")
+    assert store.committed_max("v") == 9
+    assert _rows(store) == {(1, 9, "a2"), (2, 7, "b")}
+
+    # the first drain's one batch, merged and written by hand with no
+    # watermark: the same number of jobs
+    by_hand = latest_per_key(spark.read.schema(schema).parquet(first), ["id"], "v")
+    before = _job_ids(spark)
+    ParquetSyncedTable(spark, str(tmp_path / "plain")).write(by_hand)
+    assert first_jobs == len(_job_ids(spark) - before) > 0
