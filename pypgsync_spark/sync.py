@@ -538,10 +538,7 @@ def _source_files(src: DataFrame) -> dict[str, list[int]] | None:
     derived (a filter, a projection, a join), in-memory or partitioned
     is None, and its passes take the watermark path. The listing costs
     a few Py4J round trips per file."""
-    jdf = getattr(src, "_jdf", None)
-    if jdf is None:
-        return None
-    plan = jdf.queryExecution().analyzed()
+    plan = src._jdf.queryExecution().analyzed()
     if plan.getClass().getSimpleName() != "LogicalRelation":
         return None
     rel = plan.relation()
