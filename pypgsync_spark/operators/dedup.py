@@ -43,6 +43,11 @@ _MERSENNE_31 = (1 << 31) - 1
 # At most one live persisted shingle DataFrame (see minhash_lsh_pairs).
 _SHINGLE_CACHE: list[DataFrame] = []
 
+# Float slack of the Jaccard bound tests (ppjoin_positional_filter,
+# jaccard_verify): it rounds toward keeping a pair, which the exact test
+# then drops, never toward losing one.
+_EPS = 1e-9
+
 
 def _perm_coeffs(num_perm: int, seed: int = 42) -> tuple[list[int], list[int]]:
     """Deterministic (a_i, b_i) pairs for the universal hash family
@@ -226,31 +231,34 @@ def ppjoin_prefixes(
 
 
 def ppjoin_positional_filter(
-    sz_a: str, sz_b: str, min_rk_a: str, min_rk_b: str, threshold: float
+    sz_a: str, sz_b: str, rk_a: str, rk_b: str, threshold: float
 ) -> Column:
-    """PPJoin positional filter (Xiao et al., WWW'08), applied per
-    candidate PAIR after aggregating the matched prefix rows to
-    ``min(__rk)`` per side.
+    """PPJoin positional filter (Xiao et al., WWW'08), applied to each
+    matching prefix ROW of a candidate join, with that row's own
+    full-set ranks ``(rk_a, rk_b)`` of the shingle it matched on.
 
-    Let w be the pair's minimum-canonical-order common prefix shingle,
-    at full-set ranks (i, j). No common shingle precedes w: an earlier
-    common shingle u would sit at ranks < i and < j, hence inside BOTH
-    prefixes (prefixes are rank-prefixes), contradicting w's
-    minimality — and because one shared total order ranks every doc's
-    set, ``min(rank_a)`` and ``min(rank_b)`` over the matched rows are
-    achieved at that same w. So the overlap is at most
-    ``o_ub = 1 + min(|A| − i, |B| − j)``, and the pair can only reach
-    jaccard > θ when ``o_ub·(1+θ) > θ·(|A|+|B|)`` (from
-    J = o/(|A|+|B|−o)). The ε guards float rounding toward UNDER-
-    pruning: a kept non-qualifying candidate just gets vetoed by the
-    exact verify, while over-pruning would lose a true pair.
+    A row at ranks (i, j) bounds the overlap of any pair it belongs to
+    from the shingle onward: at most ``o_ub = 1 + min(|A| − i, |B| − j)``
+    common shingles rank at or after it on both sides. Per row this is
+    weaker than per pair, but a pair keeps at least one row exactly when
+    the bound holds at the pair's first common prefix shingle w: both
+    documents rank by one shared total order, so w has the smallest rank
+    on BOTH sides among the pair's matching rows, hence the largest
+    bound, and no common shingle precedes it (an earlier one would sit
+    inside both prefixes, since prefixes are rank-prefixes). At w the
+    bound covers the whole overlap, so a pair whose every row fails
+    cannot reach jaccard > θ, which needs ``o·(1+θ) > θ·(|A|+|B|)``
+    (from J = o/(|A|+|B|−o)); and a pair that passes at w keeps that
+    row. The candidate step therefore needs no per-pair aggregate: a
+    ``distinct()`` over the surviving rows' ids gives exactly the pairs
+    whose bound holds at w. The ε guards float rounding toward
+    UNDER-pruning: a kept non-qualifying candidate just gets vetoed by
+    the exact verify, while over-pruning would lose a true pair.
     """
-    o_ub = F.lit(1) + F.least(
-        F.col(sz_a) - F.col(min_rk_a), F.col(sz_b) - F.col(min_rk_b)
-    )
+    o_ub = F.lit(1) + F.least(F.col(sz_a) - F.col(rk_a), F.col(sz_b) - F.col(rk_b))
     return o_ub * F.lit(1.0 + threshold) > F.lit(threshold) * (
         F.col(sz_a) + F.col(sz_b)
-    ) - F.lit(1e-9)
+    ) - F.lit(_EPS)
 
 
 def ppjoin_length_filter(sz_a: str, sz_b: str, threshold: float) -> Column:
@@ -267,12 +275,50 @@ def jaccard(a: Column, b: Column) -> Column:
 
     The union size is arithmetic — |a| + |b| − |a∩b| — which is exact
     precisely because the inputs are distinct-element arrays (the
-    documented precondition): one hash-set pass per pair instead of
-    two, measured ~20% off the verify stage that dominates every
-    PPJoin-family query."""
+    documented precondition), so no union array is built. The
+    expression names ``array_intersect`` twice. A projection's
+    generated code can share the two (common-subexpression
+    elimination); a join condition's cannot, and a ``jaccard(...) > θ``
+    filter after a candidate join is pushed into that join's condition,
+    where it intersects twice per row. Filter candidates with
+    :func:`jaccard_verify`."""
     inter = F.size(F.array_intersect(a, b))
     union = F.size(a) + F.size(b) - inter
     return inter / F.greatest(union, F.lit(1))
+
+
+def jaccard_verify(pairs: DataFrame, a: str, b: str, threshold: float) -> DataFrame:
+    """The rows of ``pairs`` whose distinct-element arrays ``a`` and
+    ``b`` have Jaccard > ``threshold``, plus a ``jaccard`` column
+    holding it rounded to 6 decimals — the exact verify of every
+    candidate-based Jaccard join here.
+
+    Two filters, in this order. The first is a necessary condition that
+    names ``I = size(array_intersect(a, b))`` once: from
+    J = I/(|a|+|b|−I), ``J > θ ⟺ I·(1+θ) > θ·(|a|+|b|)`` whenever the
+    union is non-empty (two empty arrays pass it, and the second filter
+    drops them); ε rounds toward keeping. The second is the exact
+    ``J > θ`` on the unrounded value — the condition the PPJoin bounds
+    are derived for and the DuckDB oracles apply; filtering on the
+    rounded value would keep pairs a hair under θ that the prefix path
+    has already pruned.
+
+    Both filters land in the verify join's condition, as one
+    short-circuiting conjunction: nearly every candidate stops at the
+    first conjunct after one intersection, and only the few that pass
+    pay :func:`jaccard`'s two. The first conjunct is a codegen'd
+    expression; binding ``I`` through a higher-order function instead
+    would run interpreted."""
+    sa, sb = F.col(a), F.col(b)
+    inter = F.size(F.array_intersect(sa, sb))
+    bound = inter * F.lit(1.0 + threshold) > F.lit(threshold) * (
+        F.size(sa) + F.size(sb)
+    ) - F.lit(_EPS)
+    return (
+        pairs.filter(bound)
+        .filter(jaccard(sa, sb) > threshold)
+        .withColumn("jaccard", F.round(jaccard(sa, sb), 6))
+    )
 
 
 def ngram_jaccard_pairs(
@@ -284,8 +330,10 @@ def ngram_jaccard_pairs(
     blocking: str | None = "prefix",
     materialize_shingles: bool = False,
 ) -> DataFrame:
-    """Pairs (id_a < id_b, jaccard) above ``threshold`` — exact AND
-    complete: every qualifying pair is returned.
+    """Pairs (id_a < id_b, jaccard) with Jaccard > ``threshold`` — exact
+    AND complete: every qualifying pair is returned. The test is on the
+    unrounded Jaccard; the reported ``jaccard`` is rounded to 6
+    decimals (:func:`jaccard_verify`).
 
     ``blocking="prefix"`` (default — the 100 TB path) is the
     AllPairs/PPJoin prefix filter (Bayardo et al. WWW'07; Vernica et
@@ -297,12 +345,14 @@ def ngram_jaccard_pairs(
     must collide within their (size − t + 1)-prefixes — so the
     equi-join on prefix shingles finds every qualifying pair. The
     PPJoin length filter (θ·|A| < |B| and θ·|B| < |A|, from
-    jaccard ≤ min/max) prunes cross-size collisions inside the join,
-    and the exact Jaccard verify does the rest. Unlike size blocking
-    the candidate count is driven by *content* (shared rare shingles),
-    not by the length histogram, so a corpus of near-uniform doc
-    lengths no longer degenerates to a quadratic bucket — distinct
-    documents rarely share their rarest shingles.
+    jaccard ≤ min/max) and positional filter (applied per matching
+    row) prune collisions inside the join, a distinct() over the pair
+    ids leaves the candidates, and the exact Jaccard verify does the
+    rest. Unlike size blocking the candidate count is driven by
+    *content* (shared rare shingles), not by the length histogram, so
+    a corpus of near-uniform doc lengths no longer degenerates to a
+    quadratic bucket — distinct documents rarely share their rarest
+    shingles.
 
     ``blocking="size"`` prunes candidates with a content-derived key
     that provably loses nothing: jaccard(A,B) ≤ min(|A|,|B|)/max(|A|,|B|),
@@ -380,13 +430,11 @@ def ngram_jaccard_pairs(
             # (the d10/d11 winnow-pair-index precedent), so it rides the
             # same opt-in flag.
             pref = pref.localCheckpoint(eager=False)
-        # candidate dedup doubles as the positional-filter aggregation:
-        # min(__rk) per side lands on the pair's min-order common
-        # prefix shingle (see ppjoin_positional_filter), pruning
-        # can't-qualify pairs BEFORE the shingle-array verify join —
-        # same shuffle as the old dropDuplicates, strictly fewer rows
-        # surviving it (r14: 596k → fewer candidates for 256 pairs on
-        # the sf0.1 fixture at θ=0.3)
+        # the positional filter runs on each matching prefix row, with
+        # that row's own ranks, inside the candidate join: a pair keeps
+        # a row exactly when it passes the per-pair min-rank test (see
+        # ppjoin_positional_filter), so the candidate shuffle is a
+        # distinct() over the two ids, with no per-pair aggregate
         cand = (
             pref.select(
                 F.col("id").alias("id_a"),
@@ -406,18 +454,12 @@ def ngram_jaccard_pairs(
             .filter(
                 (F.col("id_a") < F.col("id_b"))
                 & ppjoin_length_filter("sz_a", "sz_b", threshold)
-            )
-            .groupBy("id_a", "id_b")
-            .agg(
-                F.min("__rk_a").alias("__ra"),
-                F.min("__rk_b").alias("__rb"),
-                F.first("sz_a").alias("sz_a"),
-                F.first("sz_b").alias("sz_b"),
-            )
-            .filter(
-                ppjoin_positional_filter("sz_a", "sz_b", "__ra", "__rb", threshold)
+                & ppjoin_positional_filter(
+                    "sz_a", "sz_b", "__rk_a", "__rk_b", threshold
+                )
             )
             .select("id_a", "id_b")
+            .distinct()
         )
         sh_tbl = sp.select(F.col(id_col).alias("id"), "shingles")
         joined = cand.join(
@@ -450,10 +492,8 @@ def ngram_jaccard_pairs(
         joined = a.join(b, on="__blk").filter(F.col("id_a") < F.col("id_b"))
     else:
         raise ValueError(f"unknown blocking mode: {blocking!r}")
-    return (
-        joined.withColumn("jaccard", F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") > threshold)
-        .select("id_a", "id_b", "jaccard")
+    return jaccard_verify(joined, "sh_a", "sh_b", threshold).select(
+        "id_a", "id_b", "jaccard"
     )
 
 
@@ -668,14 +708,12 @@ def minhash_lsh_pairs(
     )
     # verify candidates (few) with exact Jaccard: join shingles back in
     sh = s.select(F.col(id_col).alias("id"), F.col("shingles"))
-    verified = (
-        cand.join(sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")), on="id_a")
-        .join(sh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")), on="id_b")
-        .withColumn("jaccard", F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") > threshold)
-        .select("id_a", "id_b", "jaccard")
+    joined = cand.join(
+        sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")), on="id_a"
+    ).join(sh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")), on="id_b")
+    return jaccard_verify(joined, "sh_a", "sh_b", threshold).select(
+        "id_a", "id_b", "jaccard"
     )
-    return verified
 
 
 def connected_components(

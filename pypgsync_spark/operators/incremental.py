@@ -76,8 +76,9 @@ def cross_jaccard_pairs(
     UNION corpus, ties by value — the lemma needs a single total
     order), each doc keeps its (size − ⌈θ·size⌉ + 1)-prefix, and the
     candidate join is delta-prefix ⋈ corpus-prefix on the shingle —
-    never delta × corpus. The PPJoin length filter prunes cross-size
-    collisions inside the join; the exact Jaccard verify finishes.
+    never delta × corpus. The PPJoin length and positional filters
+    prune collisions inside the join, a distinct() over the pair ids
+    leaves the candidates, and the exact Jaccard verify finishes.
 
     As in the self-join form, each shingle string is replaced by its
     xxhash64 before the prefix build and the pairwise intersections —
@@ -87,10 +88,12 @@ def cross_jaccard_pairs(
     total order), and long-array intersects run ~2× faster than
     string-array ones.
 
-    Output: (delta_id, corpus_id, jaccard).
+    Output: (delta_id, corpus_id, jaccard). The test is on the
+    unrounded Jaccard; the reported ``jaccard`` is rounded to 6
+    decimals (operators/dedup.jaccard_verify).
     """
     from pypgsync_spark.operators.dedup import (
-        jaccard,
+        jaccard_verify,
         ppjoin_length_filter,
         ppjoin_positional_filter,
         ppjoin_prefixes,
@@ -148,41 +151,31 @@ def cross_jaccard_pairs(
             ex, freq, threshold, id_col=f"id_{side}", sz_col=f"sz_{side}"
         ).withColumnRenamed("__rk", f"__rk_{side}")
 
-    # candidate dedup doubles as the positional-filter aggregation —
-    # same lemma and shuffle shape as the self-join form in
-    # operators/dedup.ngram_jaccard_pairs (r14)
+    # the positional filter runs on each matching prefix row inside the
+    # candidate join, and the candidates are a distinct() over the two
+    # ids — same lemma as the self-join form in
+    # operators/dedup.ngram_jaccard_pairs (see ppjoin_positional_filter)
     cand = (
         prefixes(ed, "d")
         .join(prefixes(ec, "c"), on="sh")
-        .filter(ppjoin_length_filter("sz_d", "sz_c", threshold))
-        .groupBy("id_d", "id_c")
-        .agg(
-            F.min("__rk_d").alias("__rd"),
-            F.min("__rk_c").alias("__rc"),
-            F.first("sz_d").alias("sz_d"),
-            F.first("sz_c").alias("sz_c"),
-        )
         .filter(
-            ppjoin_positional_filter("sz_d", "sz_c", "__rd", "__rc", threshold)
+            ppjoin_length_filter("sz_d", "sz_c", threshold)
+            & ppjoin_positional_filter("sz_d", "sz_c", "__rk_d", "__rk_c", threshold)
         )
         .select("id_d", "id_c")
+        .distinct()
     )
-    return (
-        cand.join(
-            sd.select(F.col(id_col).alias("id_d"), F.col("shingles").alias("sh_d")),
-            on="id_d",
-        )
-        .join(
-            sc.select(F.col(id_col).alias("id_c"), F.col("shingles").alias("sh_c")),
-            on="id_c",
-        )
-        .withColumn("jaccard", F.round(jaccard(F.col("sh_d"), F.col("sh_c")), 6))
-        .filter(F.col("jaccard") > threshold)
-        .select(
-            F.col("id_d").alias("delta_id"),
-            F.col("id_c").alias("corpus_id"),
-            "jaccard",
-        )
+    joined = cand.join(
+        sd.select(F.col(id_col).alias("id_d"), F.col("shingles").alias("sh_d")),
+        on="id_d",
+    ).join(
+        sc.select(F.col(id_col).alias("id_c"), F.col("shingles").alias("sh_c")),
+        on="id_c",
+    )
+    return jaccard_verify(joined, "sh_d", "sh_c", threshold).select(
+        F.col("id_d").alias("delta_id"),
+        F.col("id_c").alias("corpus_id"),
+        "jaccard",
     )
 
 
@@ -403,7 +396,7 @@ def lsh_index_screen(
 
     from pypgsync_spark.operators.dedup import (
         band_bucket_keys,
-        jaccard,
+        jaccard_verify,
         minhash_signatures,
         with_shingles,
     )
@@ -463,10 +456,7 @@ def lsh_index_screen(
         corpus_cand.select(id_col, text_col), text_col, n
     ).select(F.col(id_col).alias("corpus_id"), hashed.alias("sh_c"))
     sh_d = s_d.select(F.col(id_col).alias("delta_id"), hashed.alias("sh_d"))
-    return (
-        cand.join(sh_d, on="delta_id")
-        .join(sh_c, on="corpus_id")
-        .withColumn("jaccard", F.round(jaccard(F.col("sh_d"), F.col("sh_c")), 6))
-        .filter(F.col("jaccard") > threshold)
-        .select("delta_id", "corpus_id", "jaccard")
+    joined = cand.join(sh_d, on="delta_id").join(sh_c, on="corpus_id")
+    return jaccard_verify(joined, "sh_d", "sh_c", threshold).select(
+        "delta_id", "corpus_id", "jaccard"
     )

@@ -21,8 +21,8 @@ unnecessary: the merge is order-free with the same fixed point.
 Every delta version is >= the low watermark, which is the
 destination's MAX, so the delta wins every key it carries: the merge
 (``operators.merge.delta_wins_merge``) shuffles only the delta, and a
-pass whose delta holds nothing but unchanged boundary rows writes
-nothing.
+pass whose delta holds nothing but unchanged boundary rows writes no
+generation.
 
 ``SyncedTable`` abstracts the destination store. The parquet
 implementation here is the test substrate; a Delta/Iceberg MERGE INTO
@@ -43,7 +43,9 @@ pass records its listing only when no row of its files lies above its
 high watermark, so every row of a recorded file is at or below the
 committed MAX (or below an earlier low watermark, which the protocol
 skips anyway), and a re-read would find only boundary rows already
-merged.
+merged. A pass that reads new files but changes no row (late rows
+below the watermark, unchanged boundary rows) records their listing by
+rewriting the current commit file alone.
 """
 
 from __future__ import annotations
@@ -366,11 +368,12 @@ class ParquetSyncedTable:
     resolved for the destination URI's scheme (r6 verdict #6 — the last
     local-FS-only writer in the sync path): the alternating-directory
     commit survives an hdfs:// or s3a:// destination, matching
-    sources/partitioned.py's pattern. The pointer flip is a
-    FileContext rename with Options.Rename.OVERWRITE — atomic on
+    sources/partitioned.py's pattern. The pointer flip, and the
+    commit-file rewrite of :meth:`record_source_files`, is a temp file
+    plus a FileContext rename with Options.Rename.OVERWRITE — atomic on
     HDFS/local; object stores usually lack the AbstractFileSystem
     binding FileContext needs, so the flip falls back to an
-    overwrite-create of the 1-byte pointer, which on a PUT-semantics
+    overwrite-create of the small file, which on a PUT-semantics
     store is itself atomic (readers observe old or new content, never
     a torn directory).
     """
@@ -494,31 +497,48 @@ class ParquetSyncedTable:
             if source_files:
                 meta["source_files"] = source_files
         self._put(self._jpath(f"{gen}/{COMMIT_FILE}"), json.dumps(meta))
-        tmp = self._jpath(self._ptr + ".tmp")
+        self._replace(self._ptr, nxt)
+
+    def record_source_files(
+        self, head: tuple[str | None, dict | None], source_files: dict[str, list[int]]
+    ) -> None:
+        """Rewrite the current generation's commit file with a new
+        source listing, keeping everything else it records: for a pass
+        that consumed new files but changed no row, so it writes no
+        generation. ``head``: the :meth:`head` the pass read. No Spark
+        job; the rewrite is atomic like the pointer flip."""
+        gen, meta = head
+        meta = {**meta, "source_files": source_files}
+        self._replace(f"{gen}/{COMMIT_FILE}", json.dumps(meta))
+
+    def _replace(self, uri: str, text: str) -> None:
+        """Replace the small file at ``uri`` with ``text`` so that a
+        reader sees the old content or the new, never a torn file."""
+        tmp = self._jpath(uri + ".tmp")
         fs = self._fs(tmp)
-        self._put(tmp, nxt)
+        self._put(tmp, text)
         try:
-            # HDFS/local: FileContext rename(OVERWRITE) flips the
-            # pointer atomically.
+            # HDFS/local: FileContext rename(OVERWRITE) replaces the
+            # file atomically.
             fc = self._FileContext.getFileContext(self._hconf)
             gw = self.spark.sparkContext._gateway
             overwrite = gw.new_array(self._Rename, 1)
             overwrite[0] = self._Rename.OVERWRITE
-            fc.rename(tmp, self._jpath(self._ptr), overwrite)
+            fc.rename(tmp, self._jpath(uri), overwrite)
         except Exception as exc:
             # The fallback is ONLY for schemes with no AbstractFileSystem
             # binding (object stores: FileContext cannot resolve the
             # path) — there, overwrite-create IS the atomic primitive (a
-            # PUT: readers observe old or new pointer bytes, never a
-            # tear), and rename would only degrade to copy+delete
-            # anyway. Any OTHER failure (transient HDFS/local rename
-            # error) must propagate: truncating the live pointer on a
-            # rename-capable filesystem would expose a torn/empty
-            # _CURRENT to concurrent readers, breaking the never-torn
+            # PUT: readers observe old or new bytes, never a tear), and
+            # rename would only degrade to copy+delete anyway. Any OTHER
+            # failure (transient HDFS/local rename error) must
+            # propagate: truncating the live file on a rename-capable
+            # filesystem would expose a torn/empty pointer or commit
+            # file to concurrent readers, breaking the never-torn
             # contract above.
             if not _is_unsupported_filesystem(exc):
                 raise
-            self._put(self._jpath(self._ptr), nxt)
+            self._put(self._jpath(uri), text)
             fs.delete(tmp, False)
 
 
@@ -574,8 +594,9 @@ def sync_table(
     The low watermark comes from the store's commit file when it
     records one (else a scan), and the new generation's commit records
     the delta's MAX as the next one. A pass whose delta changes nothing
-    writes nothing: ``_CURRENT`` and the generation directories stay
-    untouched (``stats.wrote`` is False).
+    writes no generation (``stats.wrote`` is False); when it read files
+    the commit does not list yet, it only rewrites the current commit
+    file's listing, so later passes skip them.
 
     When ``src`` is a plain parquet scan, the commit also records its
     file listing, provided no row of the scan lies above ``high``. The
@@ -606,10 +627,14 @@ def sync_table(
         target_rows_per_slice=target_rows_per_slice,
         dst_max=None if dst is None else committed,
     )
+    consumed = files if stats.rows_above_high == 0 else None
     if stats.rows_changed > 0 or dst is None:
-        consumed = files if stats.rows_above_high == 0 else None
         store.write(merged, version_col, stats.delta_max, source_files=consumed)
         stats.wrote = True
+    elif consumed and consumed != seen and committed is not None:
+        # new files that changed nothing: record them, or every later
+        # pass reads them again
+        store.record_source_files(head, consumed)
     return stats
 
 

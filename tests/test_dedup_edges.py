@@ -7,15 +7,24 @@ gets wrong first: NULL, empty, whitespace-only and shorter-than-n texts.
 - ``cross_jaccard_pairs(corpus, delta)`` returns exactly the rows of a
   delta × corpus cross join scored with :func:`jaccard` over
   ``with_shingles`` + ``xxhash64``.
+- Every path keeps a pair on the unrounded ``J > θ``, also at a
+  threshold between a Jaccard value and its 6-decimal rounding.
+- :func:`jaccard_verify` matches a pure-Python Jaccard over hash arrays.
 """
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from pypgsync_spark.operators.dedup import jaccard, ngram_jaccard_pairs, with_shingles
+from pypgsync_spark.operators.dedup import (
+    jaccard,
+    jaccard_verify,
+    ngram_jaccard_pairs,
+    with_shingles,
+)
 from pypgsync_spark.operators.incremental import cross_jaccard_pairs
 
 # few, small examples: every one runs several Spark jobs
@@ -27,7 +36,7 @@ PARITY = settings(
 
 _WORDS = st.sampled_from(["a", "b", "B", "c", "naïve", "Ω", "x1", "--"])
 _SPACE = st.sampled_from([" ", "  ", "\t", " \n "])
-_THRESHOLD = st.sampled_from([0.3, 0.5, 0.8])
+_THRESHOLD = st.sampled_from([0.3, 0.5, 0.6666668, 0.8])
 
 
 @st.composite
@@ -82,16 +91,79 @@ def test_cross_jaccard_pairs_match_scored_cross_join(spark, corpus, delta, thres
             ),
         )
 
+    j = jaccard(F.col("sh_delta"), F.col("sh_corpus"))
     want = (
         hashed(d_df, "delta")
         .crossJoin(hashed(c_df, "corpus"))
-        .select(
-            "delta_id",
-            "corpus_id",
-            F.round(jaccard(F.col("sh_delta"), F.col("sh_corpus")), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") > threshold)
+        .filter(j > threshold)
+        .select("delta_id", "corpus_id", F.round(j, 6).alias("jaccard"))
     )
     got = _rows(cross_jaccard_pairs(c_df, d_df, threshold=threshold))
     assert got == _rows(want)
     assert len(got) == len(set(got))
+
+
+# Two documents with 3-gram Jaccard exactly 4/6 = 2/3, which rounds to
+# 0.666667: a threshold in (2/3, 0.666667) separates the unrounded test
+# from the rounded one.
+_TWO_THIRDS = ("a b c d e f g", "a b c d e f h")
+
+
+@pytest.mark.parametrize(
+    "threshold, want",
+    [(0.6666666, [0.666667]), (0.6666667, []), (0.6666668, [])],
+)
+def test_every_path_keeps_pairs_on_unrounded_jaccard(spark, threshold, want):
+    df = _docs(spark, _TWO_THIRDS)
+    for blocking in (None, "size", "prefix"):
+        got = ngram_jaccard_pairs(df, threshold=threshold, blocking=blocking)
+        assert [r.jaccard for r in got.collect()] == want, blocking
+    cross = cross_jaccard_pairs(
+        _docs(spark, _TWO_THIRDS[:1]), _docs(spark, _TWO_THIRDS[1:], first_id=100),
+        threshold=threshold,
+    )
+    assert [r.jaccard for r in cross.collect()] == want
+
+
+# A small pool with extreme longs, so drawn arrays overlap often.
+_HASH = st.sampled_from([-(2**63), -7, -1, 0, 1, 2, 3, 4, 5, 6, 11, 2**62, 2**63 - 1])
+_ARRAY = st.lists(_HASH, unique=True, max_size=8)
+
+
+@st.composite
+def _array_pair(draw) -> tuple[list[int], list[int]]:
+    a = draw(_ARRAY)
+    kind = draw(st.sampled_from(["identical", "disjoint", "any"]))
+    if kind == "identical":
+        return a, draw(st.permutations(a))
+    if kind == "disjoint":
+        return a, draw(st.lists(st.integers(100, 120), unique=True, max_size=8))
+    return a, draw(_ARRAY)
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(
+    pairs=st.lists(_array_pair(), min_size=1, max_size=30), threshold=_THRESHOLD
+)
+@example(
+    pairs=[([], []), ([1], []), ([1], [1]), ([1], [2]), ([1, 2, 3, 4, 5], [1, 2, 3, 4, 6])],
+    threshold=0.6666668,
+)
+@example(pairs=[([1, 2, 3], [1, 2, 4]), ([1, 2, 3, 4], [3, 4, 5, 6])], threshold=0.5)
+def test_jaccard_verify_matches_python_jaccard(spark, pairs, threshold):
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pairs)],
+        "i int, sh_a array<bigint>, sh_b array<bigint>",
+    ).localCheckpoint()  # a scan: the filters run in generated code, not on the driver
+    got = {
+        r.i: r.jaccard
+        for r in jaccard_verify(df, "sh_a", "sh_b", threshold).collect()
+    }
+    want = {}
+    for i, (a, b) in enumerate(pairs):
+        j = len(set(a) & set(b)) / max(len(set(a) | set(b)), 1)
+        if j > threshold:
+            want[i] = j
+    assert sorted(got) == sorted(want)
+    for i, j in want.items():
+        assert abs(got[i] - j) <= 5e-7 + 1e-12

@@ -610,3 +610,76 @@ def test_video_screen_corpus_band_table_is_persisted(spark, sf_small):
     # the previous copy
     sd.video_screen_stream(dstream, dcorpus)
     assert len(sd._VID_SCREEN_BANDS_CACHE) == 1
+
+
+def _nodes(node):
+    """``node`` and every node below it, for a Spark plan or expression
+    tree (both are Catalyst TreeNodes)."""
+    out = [node]
+    children = node.children()
+    for i in range(children.length()):
+        out += _nodes(children.apply(i))
+    return out
+
+
+def _names(seq) -> list[str]:
+    return [seq.apply(i).name() for i in range(seq.length())]
+
+
+def test_ppjoin_candidates_shuffle_ids_and_verify_intersects_once(spark, sf_small):
+    """The n-gram/PPJoin joins (d2, d8 and the queries built on them):
+    the positional filter runs on each matching prefix row, so the
+    candidate step is an aggregate with no functions over the two pair
+    ids, and its shuffle carries only those ids. The verify join's
+    condition starts with a bound test that evaluates array_intersect
+    once; the exact test after it runs only for the pairs that pass."""
+    from pyspark.sql import functions as F
+
+    from pypgsync_spark.catalog import load_table
+    from pypgsync_spark.operators.dedup import ngram_jaccard_pairs
+    from pypgsync_spark.operators.incremental import cross_jaccard_pairs
+
+    docs = load_table(spark, sf_small, "documents")
+    corpus = docs.filter(F.col("doc_id") % 10 != 0)
+    delta = docs.filter(F.col("doc_id") % 10 == 0)
+    frames = {
+        f"ngram_jaccard_pairs(materialize_shingles={m})": (
+            ngram_jaccard_pairs(docs, materialize_shingles=m), ["id_a", "id_b"]
+        )
+        for m in (True, False)
+    }
+    frames["cross_jaccard_pairs"] = (cross_jaccard_pairs(corpus, delta), ["id_d", "id_c"])
+    exchanged = []
+    for key, (df, ids) in frames.items():
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()  # the plan AQE starts from
+        nodes = _nodes(plan)
+        cand = [
+            n for n in nodes
+            if n.nodeName() == "HashAggregate" and _names(n.groupingExpressions()) == ids
+        ]
+        assert cand, key
+        for agg in cand:
+            assert agg.aggregateExpressions().length() == 0, (key, agg.toString())
+            child = agg.child()
+            if child.nodeName() == "Exchange":
+                assert _names(child.output()) == ids, (key, child.toString())
+                exchanged.append(key)
+        verify = [
+            n for n in nodes
+            if "Join" in n.nodeName()
+            and n.condition().isDefined()
+            and "array_intersect" in n.condition().get().toString()
+        ]
+        assert len(verify) == 1, key
+        first = verify[0].condition().get()
+        while first.getClass().getSimpleName() == "And":
+            first = first.left()
+        intersects = [e for e in _nodes(first) if e.getClass().getSimpleName() == "ArrayIntersect"]
+        assert len(intersects) == 1, (key, first.toString())
+    # the checkpointed prefix tables carry no id partitioning, so these
+    # two candidate steps shuffle
+    assert set(exchanged) >= {
+        "ngram_jaccard_pairs(materialize_shingles=True)", "cross_jaccard_pairs"
+    }, exchanged

@@ -804,6 +804,39 @@ def test_row_above_high_in_a_consumed_file_applies_later(spark, tmp_path):
     assert len(store.commit_meta()["source_files"]) == 1
 
 
+def test_no_change_pass_records_its_new_files(spark, tmp_path):
+    """A pass over a new file whose only row is late (under the
+    watermark) changes nothing and writes no generation, but records the
+    file in the current commit, so the next pass runs no job."""
+    import glob
+    import os
+
+    d = tmp_path / "src"
+    _land(spark, d, [(1, 10, "a")])
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
+    sync_table(spark.read.parquet(str(d)), store, ["id"], "v")
+    _land(spark, d, [(2, 11, "b")])
+    assert sync_table(spark.read.parquet(str(d)), store, ["id"], "v").wrote
+    gen, meta = store.head()
+    _land(spark, d, [(3, 5, "late")])
+    late = sync_table(spark.read.parquet(str(d)), store, ["id"], "v")
+    assert not late.wrote and late.rows_changed == 0
+    assert store._current() == gen
+    src = spark.read.parquet(str(d))
+    before = _job_ids(spark)
+    stats = sync_table(src, store, ["id"], "v")
+    assert _job_ids(spark) - before == set()
+    assert stats.delta_rows == 0 and not stats.wrote
+    after = store.commit_meta()
+    assert sorted(os.path.basename(p) for p in after["source_files"]) == sorted(
+        os.path.basename(p) for p in glob.glob(f"{d}/*.parquet")
+    )
+    assert {k: v for k, v in after.items() if k != "source_files"} == {
+        k: v for k, v in meta.items() if k != "source_files"
+    }
+    assert _rows(store) == {(1, 10, "a"), (2, 11, "b")}
+
+
 def test_non_plain_sources_take_the_full_path(spark, tmp_path, monkeypatch):
     """A filtered scan, an in-memory frame, a partitioned directory and
     an empty listing record no listing and read the whole source on
