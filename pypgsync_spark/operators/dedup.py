@@ -30,7 +30,12 @@ import warnings
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pypgsync_spark.functions.text import content_fingerprint, tokens, word_shingles
+from pypgsync_spark.functions.text import (
+    content_fingerprint,
+    let_bound,
+    tokens,
+    word_shingles,
+)
 
 # Minhash universe: Mersenne-31. The universal-hash mix multiplies two
 # values < 2^31, keeping every intermediate product < 2^62 — inside
@@ -174,6 +179,33 @@ def with_shingles(
     """
     return spread_if_underpartitioned(df).withColumn(
         out, word_shingles(tokens(F.col(text_col)), n)
+    )
+
+
+def hashed_shingles(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
+) -> DataFrame:
+    """``(id_col, shingles)``: the distinct xxhash64 of every n-word
+    shingle string :func:`with_shingles` builds, in one higher-order
+    function pass over the :func:`let_bound` tokens — each shingle
+    string is hashed where it is joined, so no string array is built,
+    distincted and walked again. NULL text gives NULL shingles.
+
+    The hashes are exactly those of ``with_shingles`` followed by
+    ``array_distinct(transform(shingles, xxhash64))`` (same strings,
+    same seed), so every prefix, candidate and verified pair of the
+    exact joins built on it is unchanged. The input is spread first by
+    the same :func:`spread_if_underpartitioned` rule."""
+
+    def of(t: Column) -> Column:
+        idx = F.sequence(F.lit(1), F.greatest(F.size(t) - (n - 1), F.lit(1)))
+        hashes = F.transform(
+            idx, lambda i: F.xxhash64(F.array_join(F.slice(t, i, n), " "))
+        )
+        return F.when(t.isNotNull(), F.array_distinct(hashes))
+
+    return spread_if_underpartitioned(df.select(id_col, text_col)).select(
+        id_col, let_bound(tokens(F.col(text_col)), of).alias("shingles")
     )
 
 
@@ -328,7 +360,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.3,
     blocking: str | None = "prefix",
-    materialize_shingles: bool = False,
 ) -> DataFrame:
     """Pairs (id_a < id_b, jaccard) with Jaccard > ``threshold`` — exact
     AND complete: every qualifying pair is returned. The test is on the
@@ -348,55 +379,32 @@ def ngram_jaccard_pairs(
     jaccard ≤ min/max) and positional filter (applied per matching
     row) prune collisions inside the join, a distinct() over the pair
     ids leaves the candidates, and the exact Jaccard verify does the
-    rest. Unlike size blocking the candidate count is driven by
-    *content* (shared rare shingles), not by the length histogram, so
-    a corpus of near-uniform doc lengths no longer degenerates to a
-    quadratic bucket — distinct documents rarely share their rarest
-    shingles.
-
-    ``blocking="size"`` prunes candidates with a content-derived key
-    that provably loses nothing: jaccard(A,B) ≤ min(|A|,|B|)/max(|A|,|B|),
-    so any pair above θ has distinct-shingle counts within a factor
-    1/θ of each other. Bucket docs by floor(log_{1/θ}|shingles|); a
-    qualifying pair's buckets differ by at most 1, so comparing same-
-    and adjacent-bucket docs (left side explodes to {b−1,b,b+1}, right
-    side keeps its own bucket — an equi-join, never a nested-loop
-    range join) is exhaustive. This replaces the round-1 id-adjacency
-    stand-in, which silently missed distant-id duplicates. Each
-    qualifying pair matches exactly once after the id_a < id_b filter
-    (only the smaller-id orientation survives, and the exploded side
-    meets a given right row at one key), so no dedup pass is needed.
-    Worst case (all docs the same length) is quadratic within a
-    bucket — kept as the simpler option for corpora with a spread
-    length histogram.
+    rest. The candidate count is driven by *content* (shared rare
+    shingles), not by the length histogram, so a corpus of
+    near-uniform doc lengths does not degenerate to a quadratic
+    bucket — distinct documents rarely share their rarest shingles.
 
     ``blocking=None`` does the raw triangular cross join (tests/tiny
     inputs only).
 
-    Shingle strings are replaced by their xxhash64 before the prefix
-    build and the pairwise intersections: Jaccard depends only on set
-    sizes, which 64-bit hashing preserves (collision odds ~|sh|²/2⁶⁴),
-    and long-array intersects run ~2× faster than string-array ones.
-    """
-    import math
+    Shingles are the xxhash64 of the shingle strings
+    (:func:`hashed_shingles`): Jaccard depends only on set sizes, which
+    64-bit hashing preserves (collision odds ~|sh|²/2⁶⁴), and long-array
+    intersects run ~2× faster than string-array ones.
 
-    s = with_shingles(df.select(id_col, text_col), text_col, n).withColumn(
-        "shingles",
-        F.array_distinct(F.transform("shingles", lambda x: F.xxhash64(x))),
-    )
-    if materialize_shingles:
-        # The shingle table feeds the prefix build once and the verify
-        # join twice; without materialization each branch re-runs the
-        # shingling over the full corpus (measured 2× end-to-end on
-        # the fixture). localCheckpoint stores at MEMORY_AND_DISK, so
-        # at scale it spills to local disk rather than OOM; the trade
-        # is lineage truncation (an executor loss mid-query fails the
-        # job instead of recomputing) — opt-in for that reason. LAZY:
-        # the first branch of the main action materializes it as a
-        # side effect — eager=True paid one extra driver-barrier job
-        # per query for blocks the very next action would store anyway
-        # (the r8 lazy-checkpoint rule).
-        s = s.localCheckpoint(eager=False)
+    The shingle table (read by the prefix build and by both sides of
+    the verify join) and the prefix table (both sides of the candidate
+    self-join) are each computed once, behind a lazy
+    ``localCheckpoint``: without them every branch re-runs the shingling
+    (2× end to end on the fixture) and Spark plans the prefix chain
+    twice, with no ReusedExchange. The blocks live at MEMORY_AND_DISK,
+    so at scale they spill to local disk rather than OOM. The trade is
+    lineage truncation: an executor lost mid-query fails the job
+    instead of recomputing the lost blocks. Lazy, because the first
+    branch of the main action stores them anyway; an eager checkpoint
+    would add one driver-barrier job per table.
+    """
+    s = hashed_shingles(df, id_col, text_col, n).localCheckpoint(eager=False)
     if blocking is None:
         a = s.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
         b = s.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
@@ -404,11 +412,12 @@ def ngram_jaccard_pairs(
     elif blocking == "prefix":
         if not 0.0 < threshold < 1.0:
             raise ValueError("prefix blocking needs 0 < threshold < 1")
-        sp = s.filter(F.size("shingles") > 0)
         # Global canonical order: ascending corpus frequency, ties by
         # shingle value. Rarest-first prefixes minimize candidates —
-        # distinct documents rarely share their rarest shingles.
-        ex = sp.select(
+        # distinct documents rarely share their rarest shingles. The
+        # explode drops NULL shingle arrays, so a NULL document has no
+        # prefix row and can never become a candidate.
+        ex = s.select(
             F.col(id_col).alias("id"),
             F.size("shingles").alias("sz"),
             F.explode("shingles").alias("sh"),
@@ -417,19 +426,7 @@ def ngram_jaccard_pairs(
         # shared AllPairs/PPJoin kernel — see ppjoin_prefixes /
         # ppjoin_length_filter for the lemmas. Partial aggregation + AQE
         # skew handling on the freq join, no driver-side vocabulary.
-        pref = ppjoin_prefixes(ex, freq, threshold)
-        if materialize_shingles:
-            # BOTH sides of the candidate self-join below reference
-            # pref, and Spark plans the two references as two full
-            # copies of the explode → freq aggregate → freq join → rank
-            # window chain (r14 plan audit: zero ReusedExchange, Window
-            # appears twice, ~20 s of the query's ~45 s task CPU at
-            # sf0.1 was the second copy). A lazy localCheckpoint
-            # computes the prefix table once — the same
-            # storage-vs-recompute trade as the shingle checkpoint above
-            # (the d10/d11 winnow-pair-index precedent), so it rides the
-            # same opt-in flag.
-            pref = pref.localCheckpoint(eager=False)
+        pref = ppjoin_prefixes(ex, freq, threshold).localCheckpoint(eager=False)
         # the positional filter runs on each matching prefix row, with
         # that row's own ranks, inside the candidate join: a pair keeps
         # a row exactly when it passes the per-pair min-rank test (see
@@ -461,35 +458,13 @@ def ngram_jaccard_pairs(
             .select("id_a", "id_b")
             .distinct()
         )
-        sh_tbl = sp.select(F.col(id_col).alias("id"), "shingles")
         joined = cand.join(
-            sh_tbl.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")),
+            s.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")),
             on="id_a",
         ).join(
-            sh_tbl.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")),
+            s.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b")),
             on="id_b",
         )
-    elif blocking == "size":
-        if not 0.0 < threshold < 1.0:
-            raise ValueError("size blocking needs 0 < threshold < 1")
-        base = math.log(1.0 / threshold)
-        sb = s.filter(F.size("shingles") > 0).withColumn(
-            "__bkt",
-            F.floor(F.log(F.size("shingles").cast("double")) / F.lit(base)).cast("long"),
-        )
-        a = sb.select(
-            F.col(id_col).alias("id_a"),
-            F.col("shingles").alias("sh_a"),
-            F.explode(
-                F.array(F.col("__bkt") - 1, F.col("__bkt"), F.col("__bkt") + 1)
-            ).alias("__blk"),
-        )
-        b = sb.select(
-            F.col(id_col).alias("id_b"),
-            F.col("shingles").alias("sh_b"),
-            F.col("__bkt").alias("__blk"),
-        )
-        joined = a.join(b, on="__blk").filter(F.col("id_a") < F.col("id_b"))
     else:
         raise ValueError(f"unknown blocking mode: {blocking!r}")
     return jaccard_verify(joined, "sh_a", "sh_b", threshold).select(

@@ -63,7 +63,6 @@ def cross_jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.3,
-    materialize_shingles: bool = True,
 ) -> DataFrame:
     """Exact cross-collection near-dup pairs: every (delta doc, corpus
     doc) pair with n-gram Jaccard > ``threshold`` — the NEAR-dup
@@ -80,43 +79,39 @@ def cross_jaccard_pairs(
     prune collisions inside the join, a distinct() over the pair ids
     leaves the candidates, and the exact Jaccard verify finishes.
 
-    As in the self-join form, each shingle string is replaced by its
-    xxhash64 before the prefix build and the pairwise intersections —
-    Jaccard depends only on set sizes, which 64-bit hashing preserves
+    As in the self-join form, both collections are shingled by
+    operators/dedup.hashed_shingles: each shingle string is replaced by
+    its xxhash64 before the prefix build and the pairwise intersections
+    — Jaccard depends only on set sizes, which 64-bit hashing preserves
     (collision odds ~|sh|²/2⁶⁴), the PPJoin lemma only needs SOME
     shared total order (frequency ties break by hash value — an equally
     total order), and long-array intersects run ~2× faster than
-    string-array ones.
+    string-array ones. Each collection's shingle table and the shared
+    frequency table are computed once, behind lazy localCheckpoints —
+    the same storage-vs-recompute trade (lineage truncation) as the
+    self-join form's.
 
     Output: (delta_id, corpus_id, jaccard). The test is on the
     unrounded Jaccard; the reported ``jaccard`` is rounded to 6
     decimals (operators/dedup.jaccard_verify).
     """
     from pypgsync_spark.operators.dedup import (
+        hashed_shingles,
         jaccard_verify,
         ppjoin_length_filter,
         ppjoin_positional_filter,
         ppjoin_prefixes,
-        with_shingles,
     )
 
-    def sh(side: DataFrame) -> DataFrame:
-        s = with_shingles(side.select(id_col, text_col), text_col, n)
-        return s.withColumn(
-            "shingles",
-            F.array_distinct(F.transform("shingles", lambda x: F.xxhash64(x))),
-        ).filter(F.size("shingles") > 0)
+    # lazy (r8): the shared-frequency aggregate below full-scans both
+    # collections as its first job and materializes the checkpoints as
+    # a side effect — same stored blocks, two fewer driver-barrier jobs
+    # than eager persists
+    sd = hashed_shingles(delta, id_col, text_col, n).localCheckpoint(eager=False)
+    sc = hashed_shingles(corpus, id_col, text_col, n).localCheckpoint(eager=False)
 
-    sd = sh(delta)
-    sc = sh(corpus)
-    if materialize_shingles:
-        # lazy (r8): the shared-frequency aggregate below full-scans
-        # both collections as its first job and materializes the
-        # checkpoints as a side effect — same stored blocks, two fewer
-        # driver-barrier jobs than eager persists
-        sd = sd.localCheckpoint(eager=False)
-        sc = sc.localCheckpoint(eager=False)
-
+    # the explode drops NULL shingle arrays: a NULL document has no
+    # prefix row, so it never reaches the candidates
     def exploded(s: DataFrame, side: str) -> DataFrame:
         return s.select(
             F.col(id_col).alias(f"id_{side}"),
@@ -131,17 +126,15 @@ def cross_jaccard_pairs(
     # collections (at fixture scale the saving is within noise; at
     # corpus scale it is one full token-stream pass). Vocabulary-scale
     # (distinct shingles), the cheapest table in the pipeline to hold.
+    # Lazy: it materializes inside the first branch's job rather than
+    # as its own barrier; the second branch reads the stored partitions.
     freq = (
         ed.select("sh")
         .unionByName(ec.select("sh"))
         .groupBy("sh")
         .agg(F.count(F.lit(1)).alias("__freq"))
+        .localCheckpoint(eager=False)
     )
-    if materialize_shingles:
-        # lazy: materializes inside the first branch's job rather than
-        # as its own barrier; the second branch then reads the stored
-        # partitions
-        freq = freq.localCheckpoint(eager=False)
 
     # shared AllPairs/PPJoin kernel (r10 review: this was a second
     # inline copy of the prefix build; a bound/tie-order fix in one
@@ -349,14 +342,15 @@ def lsh_index_screen(
     — the near-dup analogue this module's header promises, composed
     with the v15 materialized-index and d16 Bloom-gate precedents.
 
-    The verify is hashed, as in d2/d8, with a TWO-COLUMN carry: the
-    delta's STRING shingles must still feed the md5 minhash signer (the
-    oracle-shared base hash), so only the two verify-side projections
-    replace each shingle with its xxhash64 — Jaccard depends on set
-    sizes alone, which 64-bit hashing preserves (collision odds
-    ~|sh|²/2⁶⁴), long-array intersects run ~2× faster than string-array
-    ones, and the verify joins ship 8-byte elements instead of n-gram
-    strings. Equality against the string-verify reference chain is
+    The verify is hashed, as in d2/d8: the candidate corpus documents
+    are shingled straight to xxhash64 arrays
+    (operators/dedup.hashed_shingles), while the delta's STRING shingles
+    must still feed the md5 minhash signer (the oracle-shared base
+    hash), so only its verify-side projection hashes them — Jaccard
+    depends on set sizes alone, which 64-bit hashing preserves
+    (collision odds ~|sh|²/2⁶⁴), long-array intersects run ~2× faster
+    than string-array ones, and the verify joins ship 8-byte elements
+    instead of n-gram strings. Equality against the string-verify reference chain is
     pinned by
     tests/test_r14_queries.py::test_d17_matches_indexless_screen_and_recrawl_hits.
 
@@ -396,6 +390,7 @@ def lsh_index_screen(
 
     from pypgsync_spark.operators.dedup import (
         band_bucket_keys,
+        hashed_shingles,
         jaccard_verify,
         minhash_signatures,
         with_shingles,
@@ -451,11 +446,13 @@ def lsh_index_screen(
         how="left_semi",
     )
 
-    hashed = F.array_distinct(F.transform("shingles", lambda x: F.xxhash64(x)))
-    sh_c = with_shingles(
-        corpus_cand.select(id_col, text_col), text_col, n
-    ).select(F.col(id_col).alias("corpus_id"), hashed.alias("sh_c"))
-    sh_d = s_d.select(F.col(id_col).alias("delta_id"), hashed.alias("sh_d"))
+    sh_c = hashed_shingles(corpus_cand, id_col, text_col, n).select(
+        F.col(id_col).alias("corpus_id"), F.col("shingles").alias("sh_c")
+    )
+    sh_d = s_d.select(
+        F.col(id_col).alias("delta_id"),
+        F.array_distinct(F.transform("shingles", lambda x: F.xxhash64(x))).alias("sh_d"),
+    )
     joined = cand.join(sh_d, on="delta_id").join(sh_c, on="corpus_id")
     return jaccard_verify(joined, "sh_d", "sh_c", threshold).select(
         "delta_id", "corpus_id", "jaccard"

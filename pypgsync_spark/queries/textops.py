@@ -232,9 +232,7 @@ def d1_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def d2_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ngram_jaccard_pairs(
-        _docs(spark, sf_dir), threshold=0.3, materialize_shingles=True
-    )
+    return ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.3)
 
 
 # MinHash oracle fragments (d3). The base hash is md5's top 60 bits —
@@ -405,9 +403,7 @@ def d5_near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pypgsync_spark.operators.dedup import connected_components_hybrid
 
     docs = _docs(spark, sf_dir).select("doc_id")
-    edges = ngram_jaccard_pairs(
-        _docs(spark, sf_dir), threshold=0.3, materialize_shingles=True
-    )
+    edges = ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.3)
     # adaptive CC: cheap min-label rounds for the (common) shallow
     # near-dup graph, large-star/small-star O(log n) fallback for
     # chain-shaped graphs — the 100 TB path either way. Round stats
@@ -1295,7 +1291,7 @@ def d9_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pypgsync_spark.operators.dedup import connected_components_hybrid
 
     docs = _docs(spark, sf_dir)
-    edges = ngram_jaccard_pairs(docs, threshold=0.3, materialize_shingles=True)
+    edges = ngram_jaccard_pairs(docs, threshold=0.3)
     comp = connected_components_hybrid(edges).select(
         F.col("id").alias("doc_id"), "component"
     )
@@ -1381,9 +1377,7 @@ def pipe2_dedup_pack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         "doc_id", "source", "n_chars", token_count(F.col("text")).alias("n_tokens")
     )
-    edges = ngram_jaccard_pairs(
-        _docs(spark, sf_dir), threshold=0.3, materialize_shingles=True
-    )
+    edges = ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.3)
     comp = connected_components_hybrid(edges).select(
         F.col("id").alias("doc_id"), "component"
     )
@@ -1554,7 +1548,7 @@ def _winnow_pair_index(spark, sf_dir):
     )
     # the df-filtered index feeds the size aggregate AND both self-join
     # sides; localCheckpoint materializes the winnowing + df-join ONCE
-    # (same rationale as ngram_jaccard_pairs' materialize_shingles -
+    # (same rationale as ngram_jaccard_pairs' shingle checkpoint -
     # the branches otherwise each re-run the interpreted fingerprinting
     # over the full corpus; plan showed no ReusedExchange)
     ee = e.join(rare, on="fp").localCheckpoint(eager=False)
@@ -2462,7 +2456,7 @@ def tx11_type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d12_cross_source_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
-    pairs = ngram_jaccard_pairs(docs, threshold=0.3, materialize_shingles=True)
+    pairs = ngram_jaccard_pairs(docs, threshold=0.3)
     src = docs.select("doc_id", "source")
     sa = F.broadcast(
         src.select(
@@ -2705,9 +2699,7 @@ def pack4_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def d13_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = ngram_jaccard_pairs(
-        _docs(spark, sf_dir), threshold=0.3, materialize_shingles=True
-    )
+    pairs = ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.3)
     j = F.col("jaccard")
     return pairs.agg(
         F.count(F.lit(1)).alias("n_pairs_03"),

@@ -287,54 +287,40 @@ def sync_once(
     return merged, stats
 
 
-def _is_unsupported_filesystem(exc: Exception) -> bool:
-    """True iff a Py4J-surfaced Hadoop exception (or any link in its
-    cause chain) is UnsupportedFileSystemException — the one failure
-    that means "this scheme has no AbstractFileSystem binding, use the
-    PUT fallback". Everything else must propagate (ADVICE r7: a
-    transient rename failure must NOT trigger an in-place truncate of
-    the live pointer on a rename-capable filesystem)."""
+def _exception_is(exc: Exception, name: str) -> bool:
+    """True iff a Py4J-surfaced Java exception, or any link in its cause
+    chain, is of a class whose name ends with ``name``. Two callers:
+
+    - ``UnsupportedFileSystemException``: the one pointer-flip failure
+      that means "this scheme has no AbstractFileSystem binding, use the
+      PUT fallback". Any other failure must propagate (ADVICE r7: a
+      transient rename failure must NOT trigger an in-place truncate of
+      the live pointer on a rename-capable filesystem).
+    - ``FileNotFoundException``: the dangling-pointer case
+      ``vacuum_store`` tolerates as a no-op. Anything else (auth
+      failure, transient IO, misconfigured path) must propagate:
+      silently turning those into a no-op vacuum lets storage grow
+      unboundedly with no signal (ADVICE r9)."""
     j = getattr(exc, "java_exception", None)
     if j is None:
         # No Java chain to inspect (plain Python failure, e.g. the
         # FileContext classes missing from the gateway) — the string
         # probe is all there is.
-        return "UnsupportedFileSystemException" in str(exc)
+        return name in str(exc)
     while j is not None:
         try:
-            if j.getClass().getName().endswith("UnsupportedFileSystemException"):
+            if j.getClass().getName().endswith(name):
                 return True
             j = j.getCause()
         except Exception:
             # Chain walk broke mid-way (gateway hiccup) — fall back to
             # the string probe rather than guessing either way.
-            return "UnsupportedFileSystemException" in str(exc)
-    # A FULLY walked chain with no USFE is authoritative: do NOT let a
-    # rendered stack trace that merely quotes the class name (suppressed
-    # exceptions, remote-side messages) re-classify a transient rename
-    # failure as fallback-eligible — the fallback truncates the live
+            return name in str(exc)
+    # A FULLY walked chain without the class is authoritative: do NOT
+    # let a rendered stack trace that merely quotes the class name
+    # (suppressed exceptions, remote-side messages) re-classify the
+    # failure — for the PUT fallback that would truncate the live
     # pointer in place, the exact hazard ADVICE r7 closed.
-    return False
-
-
-def _is_file_not_found(exc: Exception) -> bool:
-    """True iff a Py4J-surfaced exception (or any link in its cause
-    chain) is a FileNotFoundException — the dangling-pointer case
-    ``vacuum_store`` tolerates as a no-op. Anything else (auth failure,
-    transient IO, misconfigured path) must propagate: silently turning
-    those into a no-op vacuum lets storage grow unboundedly with no
-    signal (ADVICE r9). Same chain-walk discipline as
-    ``_is_unsupported_filesystem`` above."""
-    j = getattr(exc, "java_exception", None)
-    if j is None:
-        return "FileNotFoundException" in str(exc)
-    while j is not None:
-        try:
-            if j.getClass().getName().endswith("FileNotFoundException"):
-                return True
-            j = j.getCause()
-        except Exception:
-            return "FileNotFoundException" in str(exc)
     return False
 
 
@@ -536,7 +522,7 @@ class ParquetSyncedTable:
             # filesystem would expose a torn/empty pointer or commit
             # file to concurrent readers, breaking the never-torn
             # contract above.
-            if not _is_unsupported_filesystem(exc):
+            if not _exception_is(exc, "UnsupportedFileSystemException"):
                 raise
             self._put(self._jpath(uri), text)
             fs.delete(tmp, False)
@@ -697,7 +683,7 @@ def compact_store(
     try:
         statuses = list(fs.listStatus(p))
     except Exception as e:
-        if _is_file_not_found(e):
+        if _exception_is(e, "FileNotFoundException"):
             # dangling pointer (current generation directory missing) —
             # the state read() tolerates as None and vacuum_store as a
             # no-op; compaction likewise has nothing to rewrite (r10
@@ -774,7 +760,7 @@ def vacuum_store(store: "ParquetSyncedTable") -> list[str]:
     try:
         cur_mtime = fs.getFileStatus(store._jpath(cur)).getModificationTime()
     except Exception as e:
-        if _is_file_not_found(e):
+        if _exception_is(e, "FileNotFoundException"):
             # dangling pointer: nothing is provably superseded — do not
             # guess which directory is safe to delete
             return []

@@ -47,22 +47,6 @@ def test_minhash_lsh_jaccard_values_match_exact(spark, sf_small):
         assert abs(exact[(r["id_a"], r["id_b"])] - r["jaccard"]) < 1e-9
 
 
-def test_size_blocking_is_complete(spark, sf_small):
-    """The content-derived size-ratio blocking must return EXACTLY the
-    all-pairs result (the log-bucket adjacency is a guarantee, not a
-    heuristic), with each pair emitted exactly once."""
-    docs = load_table(spark, sf_small, "documents")
-    for thr in (0.3, 0.5):
-        full = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs(docs, threshold=thr, blocking=None).collect()
-        }
-        blocked_rows = ngram_jaccard_pairs(docs, threshold=thr, blocking="size").collect()
-        blocked = {(r["id_a"], r["id_b"]): r["jaccard"] for r in blocked_rows}
-        assert len(blocked_rows) == len(blocked), "pair emitted more than once"
-        assert blocked == full
-
-
 def test_prefix_blocking_is_complete_and_default(spark, sf_small):
     """The PPJoin prefix filter must return EXACTLY the all-pairs
     result (the prefix-filter lemma is a guarantee, not a heuristic),
@@ -82,9 +66,10 @@ def test_prefix_blocking_is_complete_and_default(spark, sf_small):
 
 
 def test_prefix_blocking_uniform_lengths(spark):
-    """The case size-blocking degenerates on: every doc the same
-    length. Prefix blocking must stay complete AND generate fewer
-    candidate comparisons than the quadratic all-pairs."""
+    """Every doc the same length — the case any length-histogram
+    blocking degenerates on (one quadratic bucket). Prefix blocking
+    keys on shared rare shingles instead, so it must stay complete
+    here."""
     rows = []
     for i in range(40):
         # 10 tokens each; docs 2i and 2i+1 share 9 of 10 → near-dups,
@@ -642,26 +627,6 @@ def test_lang_id_null_text_is_null(spark):
     )
     got = [r["lang"] for r in df.select(lang_id("text").alias("lang")).collect()]
     assert got == ["en", None]
-
-
-def test_ngram_pairs_materialization_flag_invariant(spark, sf_small):
-    """materialize_shingles only changes WHERE the shingle and prefix
-    tables live (lazy localCheckpoints — r14 §12 added the prefix one),
-    never the rows. Pins the checkpoint boundaries as pure
-    storage-vs-recompute trades."""
-    docs = load_table(spark, sf_small, "documents")
-    plain = sorted(
-        map(tuple, ngram_jaccard_pairs(docs, threshold=0.3).collect())
-    )
-    mat = sorted(
-        map(
-            tuple,
-            ngram_jaccard_pairs(
-                docs, threshold=0.3, materialize_shingles=True
-            ).collect(),
-        )
-    )
-    assert plain == mat and len(plain) > 0
 
 
 def test_cc_hybrid_string_ids_skip_driver_path(spark):

@@ -1,6 +1,9 @@
 """The exact n-gram Jaccard joins over the edge documents a tokenizer
 gets wrong first: NULL, empty, whitespace-only and shorter-than-n texts.
 
+- :func:`hashed_shingles` gives, per document, the set of xxhash64
+  values of the shingle strings ``with_shingles`` builds (NULL for a
+  NULL text).
 - ``ngram_jaccard_pairs`` with PPJoin prefix blocking returns exactly
   the rows of the unblocked triangular cross join (the prefix filter
   may prune, never lose).
@@ -20,6 +23,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from pypgsync_spark.operators.dedup import (
+    hashed_shingles,
     jaccard,
     jaccard_verify,
     ngram_jaccard_pairs,
@@ -69,6 +73,26 @@ def _rows(df) -> list[tuple]:
 
 
 @PARITY
+@given(texts=_CORPUS, n=st.sampled_from([2, 3]))
+def test_hashed_shingles_match_hashed_string_shingles(spark, texts, n):
+    df = _docs(spark, texts)
+    want = {
+        r.doc_id: r.sh
+        for r in with_shingles(df, n=n).select(
+            "doc_id",
+            F.array_distinct(F.transform("shingles", lambda x: F.xxhash64(x))).alias("sh"),
+        ).collect()
+    }
+    got = {r.doc_id: r.shingles for r in hashed_shingles(df, n=n).collect()}
+    assert all(sh is None or len(sh) == len(set(sh)) for sh in got.values())
+
+    def as_sets(by_id):
+        return {i: sh if sh is None else set(sh) for i, sh in by_id.items()}
+
+    assert as_sets(got) == as_sets(want)
+
+
+@PARITY
 @given(texts=_CORPUS, threshold=_THRESHOLD)
 def test_ngram_prefix_blocking_matches_cross_join(spark, texts, threshold):
     df = _docs(spark, texts)
@@ -115,7 +139,7 @@ _TWO_THIRDS = ("a b c d e f g", "a b c d e f h")
 )
 def test_every_path_keeps_pairs_on_unrounded_jaccard(spark, threshold, want):
     df = _docs(spark, _TWO_THIRDS)
-    for blocking in (None, "size", "prefix"):
+    for blocking in (None, "prefix"):
         got = ngram_jaccard_pairs(df, threshold=threshold, blocking=blocking)
         assert [r.jaccard for r in got.collect()] == want, blocking
     cross = cross_jaccard_pairs(

@@ -15,6 +15,7 @@ from __future__ import annotations
 import pytest
 
 from pypgsync_spark.queries import REGISTRY
+from tests.plan_capture import plan_nodes, sql_plans
 
 
 def plan_of(spark, sf_small, name: str) -> str:
@@ -278,11 +279,10 @@ def test_incremental_dedup_plan_shape(spark, sf_small):
     assert "struct<doc_id:bigint,text:string>" in plan  # pruned corpus read
 
 
-def test_ngram_jaccard_joins_start_no_python_worker(spark, sf_small):
-    """The n-gram/PPJoin family (d2, d8 and every query built on
-    ngram_jaccard_pairs / cross_jaccard_pairs) shingles, ranks and
-    verifies in JVM expressions: no optimized plan — with or without
-    the shingle checkpoints — may carry a Python-evaluation node."""
+@pytest.fixture(scope="module")
+def ngram_join_plans(spark, sf_small) -> dict[str, list[str]]:
+    """Every executed plan of d2's and d8's joins over the one-file
+    fixture ``documents``, checkpoint materializations included."""
     from pyspark.sql import functions as F
 
     from pypgsync_spark.catalog import load_table
@@ -292,22 +292,60 @@ def test_ngram_jaccard_joins_start_no_python_worker(spark, sf_small):
     docs = load_table(spark, sf_small, "documents")
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     delta = docs.filter(F.col("doc_id") % 10 == 0)
-    frames = {}
-    for m in (True, False):
-        frames[f"ngram_jaccard_pairs(materialize_shingles={m})"] = ngram_jaccard_pairs(
-            docs, materialize_shingles=m
-        )
-        frames[f"cross_jaccard_pairs(materialize_shingles={m})"] = cross_jaccard_pairs(
-            corpus, delta, materialize_shingles=m
-        )
+    return {
+        "ngram_jaccard_pairs": sql_plans(
+            spark, lambda: ngram_jaccard_pairs(docs).collect()
+        ),
+        "cross_jaccard_pairs": sql_plans(
+            spark, lambda: cross_jaccard_pairs(corpus, delta).collect()
+        ),
+    }
+
+
+def test_ngram_jaccard_joins_start_no_python_worker(ngram_join_plans):
+    """The n-gram/PPJoin family (d2, d8 and every query built on
+    ngram_jaccard_pairs / cross_jaccard_pairs) shingles, ranks and
+    verifies in JVM expressions: no plan the joins execute — the shingle,
+    frequency and prefix checkpoints' included — may carry a
+    Python-evaluation node."""
     python_nodes = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython")
     offenders = {}
-    for key, df in frames.items():
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        hits = [node for node in python_nodes if node in plan]
+    for key, plans in ngram_join_plans.items():
+        assert any("localCheckpoint" in p for p in plans), key
+        hits = {node for p in plans for node in python_nodes if node in p}
         if hits:
-            offenders[key] = hits
+            offenders[key] = sorted(hits)
     assert not offenders, f"Python-evaluation nodes found: {offenders}"
+
+
+def test_ngram_jaccard_joins_shingle_each_document_once(ngram_join_plans):
+    """The shingling higher-order function runs once per document, after
+    the spread: no Filter may evaluate it (a filter on the shingle array
+    is pushed below its projection and below the round-robin spread,
+    which runs the HOF twice, the first time on the input's own
+    splits), and on the one-file fixture every node that evaluates it
+    sits above the RoundRobinPartitioning exchange."""
+    shingle_hof = "transform(sequence(1,"
+    for key, plans in ngram_join_plans.items():
+        nodes = [n for p in plans for n in plan_nodes(p)]
+        filters = [
+            n["details"] for n in nodes
+            if n["name"] == "Filter" and shingle_hof in n["details"]
+        ]
+        assert not filters, (key, filters)
+        spreads = [
+            n for n in nodes
+            if n["name"] == "Exchange" and "RoundRobinPartitioning" in n["details"]
+        ]
+        assert spreads, key
+        for n in spreads:
+            assert not any(shingle_hof in d for d in n["below"]), key
+        assert any(
+            n["name"] == "Project"
+            and shingle_hof in n["details"]
+            and any("RoundRobinPartitioning" in d for d in n["below"])
+            for n in nodes
+        ), key
 
 
 def test_unpivot_is_map_only_expand(spark, sf_small):
@@ -643,12 +681,9 @@ def test_ppjoin_candidates_shuffle_ids_and_verify_intersects_once(spark, sf_smal
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     delta = docs.filter(F.col("doc_id") % 10 == 0)
     frames = {
-        f"ngram_jaccard_pairs(materialize_shingles={m})": (
-            ngram_jaccard_pairs(docs, materialize_shingles=m), ["id_a", "id_b"]
-        )
-        for m in (True, False)
+        "ngram_jaccard_pairs": (ngram_jaccard_pairs(docs), ["id_a", "id_b"]),
+        "cross_jaccard_pairs": (cross_jaccard_pairs(corpus, delta), ["id_d", "id_c"]),
     }
-    frames["cross_jaccard_pairs"] = (cross_jaccard_pairs(corpus, delta), ["id_d", "id_c"])
     exchanged = []
     for key, (df, ids) in frames.items():
         plan = df._jdf.queryExecution().executedPlan()
@@ -678,8 +713,6 @@ def test_ppjoin_candidates_shuffle_ids_and_verify_intersects_once(spark, sf_smal
             first = first.left()
         intersects = [e for e in _nodes(first) if e.getClass().getSimpleName() == "ArrayIntersect"]
         assert len(intersects) == 1, (key, first.toString())
-    # the checkpointed prefix tables carry no id partitioning, so these
-    # two candidate steps shuffle
-    assert set(exchanged) >= {
-        "ngram_jaccard_pairs(materialize_shingles=True)", "cross_jaccard_pairs"
-    }, exchanged
+    # the checkpointed prefix tables carry no id partitioning, so both
+    # candidate steps shuffle
+    assert set(exchanged) == {"ngram_jaccard_pairs", "cross_jaccard_pairs"}, exchanged

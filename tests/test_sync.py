@@ -205,7 +205,10 @@ def test_unsupported_fs_classifier():
     object stores); any other FileContext/rename failure propagates, so
     a transient rename error can never truncate the live pointer in
     place on a rename-capable filesystem."""
-    from pypgsync_spark.sync import _is_unsupported_filesystem
+    from pypgsync_spark.sync import _exception_is
+
+    def _is_unsupported_filesystem(exc):
+        return _exception_is(exc, "UnsupportedFileSystemException")
 
     class _JExc:
         def __init__(self, name, cause=None):
@@ -270,10 +273,13 @@ def test_pointer_flip_rename_failure_propagates(spark, sf_small, tmp_path, monke
     assert store._current().endswith("/a")
 
     # Simulate a transient (non-USFE) failure inside the rename block.
+    real_exception_is = sync_mod._exception_is
     monkeypatch.setattr(
         sync_mod,
-        "_is_unsupported_filesystem",
-        lambda exc: False,
+        "_exception_is",
+        lambda exc, name: (
+            name != "UnsupportedFileSystemException" and real_exception_is(exc, name)
+        ),
     )
     real_jpath = store._jpath
 
@@ -470,13 +476,15 @@ def test_vacuum_propagates_non_fnf_errors(spark, sf_small, tmp_path):
 
 def test_is_file_not_found_string_probe():
     """Python-side fallback classification (no java_exception chain)."""
-    from pypgsync_spark.sync import _is_file_not_found
+    from pypgsync_spark.sync import _exception_is
 
-    assert _is_file_not_found(
-        Exception("java.io.FileNotFoundException: File dst/a does not exist")
+    assert _exception_is(
+        Exception("java.io.FileNotFoundException: File dst/a does not exist"),
+        "FileNotFoundException",
     )
-    assert not _is_file_not_found(
-        Exception("org.apache.hadoop.security.AccessControlException: denied")
+    assert not _exception_is(
+        Exception("org.apache.hadoop.security.AccessControlException: denied"),
+        "FileNotFoundException",
     )
 
 
