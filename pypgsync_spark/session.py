@@ -67,9 +67,7 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or _nproc())
 # parallelism while still folding genuinely tiny (<128 KB total)
 # shuffles to one task. Scale note: this is a FLOOR, not a target —
 # on a real cluster any data-proportional shuffle sits far above
-# either value and coalescing behaves identically; override with
-# SPARK_GRAFT_AQE_MIN_PARTITION if a deployment wants the 1 MB
-# default back. Measured (quiet-box isolated A/B, min-of-4, sf0.1):
+# either value and coalescing behaves identically. Measured (quiet-box isolated A/B, min-of-4, sf0.1):
 # 1 MB → 256 KB: d2 3.27→2.14 s, d5 4.55→3.02, d12 3.16→2.07,
 # d13 2.94→2.00, pipe2 7.82→5.85, d9 4.90→3.52; join/TPC-H family
 # neutral. 256 KB → 128 KB (the d2 verify stage still coalesced its
@@ -77,7 +75,7 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or _nproc())
 # {d2,d5,d8,d9,d13,pipe2,s6,q1,f1,j2} = 0.88× total (d2 −21%,
 # d5 −26%, d9 −17%, nothing worse); 64 KB measured neutral-to-worse
 # (task overhead eats the gain), so 128 KB is the floor's floor.
-AQE_MIN_PARTITION = os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "131072")
+AQE_MIN_PARTITION = "131072"
 
 
 def _resolve_master(master: str | None, cpus: int) -> str | None:

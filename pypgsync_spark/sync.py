@@ -221,20 +221,30 @@ def sync_once(
     checking them, and does not count them); on a cold start (no
     ``dst``) it counts the delta's distinct keys, and the delta is
     collapsed to its latest row per key only when it has fewer keys
-    than rows.
+    than rows. A cold start without ``pushdown_cond`` scans the whole
+    source, and the same aggregate reads its MIN version as the low
+    watermark (:func:`low_watermark`'s answer, without its own job).
     """
     high = high if high is not None else now_millis()
-    if dst is not None and dst_max is not None:
-        low = dst_max
-    else:
-        low = low_watermark(dst, src, version_col)
-    if low is None or low > high:
+
+    def no_op(low):
         # no-op short-circuit (reference session.py:216-218)
         empty = dst if dst is not None else src.limit(0)
         return empty, SyncStats(low=low, high=high, delta_rows=0, plan=None)
+
+    # a cold start's low watermark is MIN(src), which keeps every row:
+    # the one aggregate below reads it instead of a scan of its own
+    cold = dst is None and pushdown_cond is None
+    low = None
+    if dst is not None and dst_max is not None:
+        low = dst_max
+    elif not cold:
+        low = low_watermark(dst, src, version_col)
+    if not cold and (low is None or low > high):
+        return no_op(low)
     in_window = F.col(version_col) <= F.lit(high)
     if pushdown_cond is None:
-        scan = src.filter(F.col(version_col) >= F.lit(low))
+        scan = src if cold else src.filter(F.col(version_col) >= F.lit(low))
         delta = scan.filter(in_window)
     else:
         # the raw predicate bounds both ends; rows above ``high`` are
@@ -248,14 +258,24 @@ def sync_once(
     aggs = [
         F.count(F.when(in_window, 1)).alias("n"),
         F.max(F.when(in_window, F.col(version_col))).alias("mx"),
-        F.count(F.when(in_window & (F.col(version_col) > F.lit(low)), 1)).alias("newer"),
         F.count(F.when(~in_window, 1)).alias("above"),
     ]
+    if cold:
+        aggs.append(F.min(version_col).alias("low"))
+    else:
+        aggs.append(
+            F.count(F.when(in_window & (F.col(version_col) > F.lit(low)), 1)).alias("newer")
+        )
     if dst is None:
         # a cold start must not commit two versions of one key; the
         # distinct-key count says whether the delta holds any
         aggs.append(F.count_distinct(F.when(in_window, F.struct(*keys))).alias("keys"))
     agg = scan.agg(*aggs).first()
+    if cold:
+        low = agg["low"]
+        if low is None or low > high:
+            return no_op(low)
+        low = int(low)
     delta_rows, delta_max = agg["n"], agg["mx"]
     plan = (
         plan_slices(low, high, delta_rows, target_rows_per_slice)

@@ -65,7 +65,6 @@ def main() -> None:
         else:
             names.append(args[i])
             i += 1
-    print(f"# load at start: {os.getloadavg()}", file=sys.stderr)
     a = {} if skip_a else run_side(names, {}, n, "A(default)")
     b = run_side(names, conf, n, "B(conf)")
     print(f"\n{'query':40s} {'A':>8s} {'B':>8s} {'B/A':>6s}")

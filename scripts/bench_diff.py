@@ -7,9 +7,13 @@ regression above the threshold:
   record (FINGERPRINTS.json) and HEAD: a real bisect candidate.
 - ``AMBIENT`` — the closure is bit-identical to the recorded green
   fingerprint: there is nothing to bisect (the r7→r8 v2b lesson —
-  shared-box load moves untouched queries ±7% to +70%); record a bench
-  note instead.
+  shared-box load moves untouched queries ±7% to +70% in wall time).
 - ``NEW`` — no baseline figure to compare against.
+
+Both artifacts must record the same ``metric``: up to
+bench_local_r16.json they hold wall seconds
+(``headline_queries_wall_clock_steady``), from r17 on CPU seconds
+(``headline_queries_cpu_steady``).
 
 Usage:
     python scripts/bench_diff.py bench_local_r08.json bench_local_r09.json
@@ -42,21 +46,14 @@ def main() -> None:
         old_doc = json.load(f)
     with open(os.path.join(ROOT, args.new)) as f:
         new_doc = json.load(f)
-    old, new = old_doc["queries"], new_doc["queries"]
-
-    # r9 verdict #3: each artifact carries its own ambient-load
-    # evidence — print it next to the CODE/AMBIENT verdicts so the
-    # triage is self-contained (this box's co-tenant load swings
-    # 1.5-6.0 and moves every untouched multi-second query together).
-    def _load(doc, label):
-        la = doc.get("load_avg")
-        return (
-            f"{label} load_avg {la['start']}->{la['end']}"
-            if la
-            else f"{label} load_avg not recorded (pre-r10 artifact)"
+    # a ratio of CPU seconds to wall seconds means nothing
+    if old_doc.get("metric") != new_doc.get("metric"):
+        sys.exit(
+            f"bench_diff: {args.old} records {old_doc.get('metric')!r} but "
+            f"{args.new} records {new_doc.get('metric')!r}; compare two "
+            "artifacts of the same metric"
         )
-
-    print(f"{_load(old_doc, args.old)}  |  {_load(new_doc, args.new)}")
+    old, new = old_doc["queries"], new_doc["queries"]
 
     from pypgsync_spark.queries import REGISTRY, _recorded_fingerprints
     from pypgsync_spark.queries.fingerprint import spec_fingerprint

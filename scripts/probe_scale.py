@@ -750,11 +750,6 @@ def main() -> None:
     args = ap.parse_args()
     mults = args.multipliers or [1, 10]
 
-    # ambient-load evidence (CLAUDE.md's uptime rule): sample BEFORE
-    # any Spark work — the per-line load_avg values below include the
-    # probe's own local[32] usage and cannot distinguish co-tenant load
-    load_avg_start = [round(x, 2) for x in os.getloadavg()]
-    print(json.dumps({"load_avg_start": load_avg_start}))
     spark = get_spark(app_name=f"pypgsync_spark_probe_{args.op}")
     spark.sparkContext.setLogLevel("ERROR")
     base = tempfile.mkdtemp(prefix=f"probe_{args.op}_")
@@ -823,7 +818,6 @@ def main() -> None:
                 "cold_sec": round(cold, 3),
                 "steady_sec": round(sec, 3),
                 "rows_per_sec": round(n / max(sec, 1e-9)),
-                "load_avg": [round(x, 2) for x in os.getloadavg()],
             }
             if work is not None:
                 r[work_key] = work

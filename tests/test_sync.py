@@ -706,6 +706,30 @@ def _spy_sync_once(monkeypatch) -> list:
     return seen
 
 
+def test_cold_start_pass_reads_the_source_once_before_writing(spark, tmp_path):
+    """A cold-start pass runs the jobs of one distinct-key count and of
+    its write, nothing more: the aggregate that counts the delta's keys
+    also reads its MIN version (the low watermark), so no separate MIN
+    scan runs."""
+    d = tmp_path / "src"
+    _land(spark, d, [(1, 3, "a"), (2, 7, "b"), (3, 5, "c")])
+    src = spark.read.parquet(str(d))
+
+    def jobs(action):
+        """(jobs ``action`` ran, its result)"""
+        before = _job_ids(spark)
+        out = action()
+        return len(_job_ids(spark) - before), out
+
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
+    sync_jobs, stats = jobs(lambda: sync_table(src, store, ["id"], "v"))
+    assert (stats.low, stats.delta_max, stats.delta_rows, stats.rows_changed) == (3, 7, 3, 3)
+    assert stats.wrote and stats.rows_above_high == 0
+    count_keys, _ = jobs(lambda: src.agg(F.count_distinct(F.struct("id"))).first())
+    write, _ = jobs(lambda: ParquetSyncedTable(spark, str(tmp_path / "plain")).write(src, "v", 7))
+    assert sync_jobs == count_keys + write
+
+
 def test_unchanged_listing_runs_no_job(spark, tmp_path):
     d = tmp_path / "src"
     _land(spark, d, [(1, 1, "a"), (2, 2, "b")])
