@@ -4,8 +4,10 @@ Five dedup families, each a first-class operator designed for 100 TB:
 
 - exact: hash-groupBy on the content (or its md5 fingerprint) — one
   shuffle on the fingerprint, min-id wins (deterministic).
-- n-gram Jaccard: banded pairwise shingle-set similarity — exact
-  similarity inside candidate bands; quadratic only within a band.
+- n-gram Jaccard: the AllPairs/PPJoin prefix-filter join
+  (:func:`ppjoin_pairs`, self or cross) — candidates share a prefix
+  shingle under one rarest-first order, then exact Jaccard verifies
+  them; complete, and never a cross join.
 - MinHash + LSH: shingle → k minhashes → b bands of r rows →
   bucket-join candidates → verify with exact Jaccard. The scale path:
   cost is ~(docs × k) hashing + a shuffle per band union, never a
@@ -16,11 +18,13 @@ Five dedup families, each a first-class operator designed for 100 TB:
 - embedding cosine: near-dup by vector similarity (see similarity.py
   for the kernel).
 
-Hashing uses Spark's ``xxhash64`` with per-permutation seed mixing —
-deterministic across runs/partitionings, JVM-side: the n-gram/PPJoin
-family (shingling, prefix build, verify) runs no Python UDF. The one
-Python kernel is the MinHash signer (:func:`minhash_signatures`, a
-``mapInPandas`` over md5 — the hash DuckDB shares bit-for-bit).
+The n-gram/PPJoin family hashes each shingle string once with Spark's
+``xxhash64`` (:func:`hashed_shingles`) — deterministic across
+runs/partitionings, JVM-side: shingling, prefix build and verify run
+no Python UDF. The one Python kernel is the MinHash signer
+(:func:`minhash_signatures`, a ``mapInPandas``): one md5 per shingle
+(the hash DuckDB shares bit-for-bit), then a universal hash mod 2^31−1
+per permutation.
 """
 
 from __future__ import annotations
@@ -220,17 +224,9 @@ def spread_if_underpartitioned(df: DataFrame) -> DataFrame:
 
 
 def ppjoin_prefixes(
-    ex: DataFrame,
-    freq: DataFrame,
-    threshold: float,
-    id_col: str = "id",
-    sz_col: str = "sz",
-    sh_col: str = "sh",
+    ex: DataFrame, freq: DataFrame, threshold: float
 ) -> DataFrame:
-    """AllPairs/PPJoin prefix build — THE shared numerically/logically
-    sensitive kernel of every exact near-dup join here (r10 review: it
-    had drifted into two inline copies, the forked-kernel shape
-    similarity.py's GEMM note warns about).
+    """AllPairs/PPJoin prefix build of :func:`ppjoin_pairs`.
 
     Given the exploded ``(id, sz, sh)`` stream and a ``(sh, __freq)``
     canonical-frequency table, keep each doc's
@@ -245,20 +241,17 @@ def ppjoin_prefixes(
     shingle counts are bounded by doc length).
 
     Output carries ``__rk`` — the shingle's 1-based rank within the
-    doc's FULL set under the canonical order — so candidate joins can
-    apply :func:`ppjoin_positional_filter` (r14 optimization round).
+    doc's FULL set under the canonical order — so the candidate join
+    can apply :func:`ppjoin_positional_filter`.
     """
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("__freq").asc(), F.col(sh_col).asc()
-    )
+    w = Window.partitionBy("id").orderBy(F.col("__freq").asc(), F.col("sh").asc())
     return (
-        ex.join(freq, on=sh_col)
+        ex.join(freq, on="sh")
         .withColumn("__rk", F.row_number().over(w))
         .filter(
-            F.col("__rk")
-            <= F.col(sz_col) - F.ceil(F.lit(threshold) * F.col(sz_col)) + 1
+            F.col("__rk") <= F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
         )
-        .select(id_col, sz_col, sh_col, "__rk")
+        .select("id", "sz", "sh", "__rk")
     )
 
 
@@ -353,6 +346,103 @@ def jaccard_verify(pairs: DataFrame, a: str, b: str, threshold: float) -> DataFr
     )
 
 
+def ppjoin_pairs(
+    a: DataFrame, b: DataFrame | None, threshold: float, id_col: str
+) -> DataFrame:
+    """``(id_a, id_b, jaccard)``: every pair of an ``a`` document and a
+    ``b`` document whose shingle sets have Jaccard > ``threshold`` —
+    exact AND complete. ``a`` and ``b`` are :func:`hashed_shingles`
+    tables ``(id_col, shingles)``; ``b=None`` is the self-join of
+    ``a``, with ``id_a < id_b``. The test is on the unrounded Jaccard;
+    the reported ``jaccard`` is rounded to 6 decimals
+    (:func:`jaccard_verify`).
+
+    The one AllPairs/PPJoin prefix filter (Bayardo et al. WWW'07; Xiao
+    et al. WWW'08; Vernica et al. SIGMOD'10) of the exact near-dup
+    joins: every doc keeps its rarest-first prefix
+    (:func:`ppjoin_prefixes`, which holds the lemma), prefixes equi-join
+    on the shingle under the length and positional filters
+    (:func:`ppjoin_length_filter`, :func:`ppjoin_positional_filter`), a
+    ``distinct()`` over the pair ids leaves the candidates, and the
+    exact Jaccard verify does the rest. Candidates are driven by
+    *content* (shared rare shingles), not by the length histogram, and
+    a NULL document (no exploded row) never becomes one.
+
+    Self-join: the frequency order counts ``a`` alone, and one prefix
+    table feeds both sides of the candidate join. Cross join: the
+    frequency table counts both collections (the lemma needs ONE total
+    order) and feeds one prefix build per collection. The table read
+    twice — the self-join's prefixes, the cross join's frequencies —
+    sits behind a lazy ``localCheckpoint``: without it Spark plans its
+    chain twice, with no ReusedExchange. Lazy, because the first branch
+    of the main action stores the blocks anyway (MEMORY_AND_DISK, so at
+    scale they spill rather than OOM); the trade is lineage truncation.
+    Callers checkpoint ``a`` and ``b`` the same way: each is read by a
+    prefix build and by the verify join.
+    """
+    if not 0.0 < threshold < 1.0:
+        raise ValueError("PPJoin needs 0 < threshold < 1")
+
+    def exploded(s: DataFrame) -> DataFrame:
+        return s.select(
+            F.col(id_col).alias("id"),
+            F.size("shingles").alias("sz"),
+            F.explode("shingles").alias("sh"),
+        )
+
+    ex_a = exploded(a)
+    if b is None:
+        b = a
+        freq = ex_a.groupBy("sh").agg(F.count(F.lit(1)).alias("__freq"))
+        pref_a = pref_b = ppjoin_prefixes(ex_a, freq, threshold).localCheckpoint(
+            eager=False
+        )
+        keep = (F.col("id_a") < F.col("id_b")) & ppjoin_length_filter(
+            "sz_a", "sz_b", threshold
+        )
+    else:
+        ex_b = exploded(b)
+        freq = (
+            ex_a.select("sh")
+            .unionByName(ex_b.select("sh"))
+            .groupBy("sh")
+            .agg(F.count(F.lit(1)).alias("__freq"))
+            .localCheckpoint(eager=False)
+        )
+        pref_a = ppjoin_prefixes(ex_a, freq, threshold)
+        pref_b = ppjoin_prefixes(ex_b, freq, threshold)
+        keep = ppjoin_length_filter("sz_a", "sz_b", threshold)
+
+    def side(pref: DataFrame, x: str) -> DataFrame:
+        return pref.select(
+            F.col("id").alias(f"id_{x}"),
+            F.col("sz").alias(f"sz_{x}"),
+            F.col("__rk").alias(f"__rk_{x}"),
+            "sh",
+        )
+
+    cand = (
+        side(pref_a, "a")
+        .join(side(pref_b, "b"), on="sh")
+        .filter(
+            keep
+            & ppjoin_positional_filter("sz_a", "sz_b", "__rk_a", "__rk_b", threshold)
+        )
+        .select("id_a", "id_b")
+        .distinct()
+    )
+    joined = cand.join(
+        a.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")),
+        on="id_a",
+    ).join(
+        b.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b")),
+        on="id_b",
+    )
+    return jaccard_verify(joined, "sh_a", "sh_b", threshold).select(
+        "id_a", "id_b", "jaccard"
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -367,106 +457,25 @@ def ngram_jaccard_pairs(
     decimals (:func:`jaccard_verify`).
 
     ``blocking="prefix"`` (default — the 100 TB path) is the
-    AllPairs/PPJoin prefix filter (Bayardo et al. WWW'07; Vernica et
-    al. SIGMOD'10): sort every doc's shingles by one global canonical
-    order (ascending corpus frequency, ties by value — rarest first),
-    and keep each doc's first ``|x| − ⌈θ·|x|⌉ + 1`` shingles as its
-    *prefix*. Any pair with jaccard > θ has overlap ≥ ⌈θ·max(|A|,|B|)⌉,
-    and two sets sorted by the same total order whose overlap is ≥ t
-    must collide within their (size − t + 1)-prefixes — so the
-    equi-join on prefix shingles finds every qualifying pair. The
-    PPJoin length filter (θ·|A| < |B| and θ·|B| < |A|, from
-    jaccard ≤ min/max) and positional filter (applied per matching
-    row) prune collisions inside the join, a distinct() over the pair
-    ids leaves the candidates, and the exact Jaccard verify does the
-    rest. The candidate count is driven by *content* (shared rare
-    shingles), not by the length histogram, so a corpus of
-    near-uniform doc lengths does not degenerate to a quadratic
-    bucket — distinct documents rarely share their rarest shingles.
-
-    ``blocking=None`` does the raw triangular cross join (tests/tiny
-    inputs only).
+    AllPairs/PPJoin self-join :func:`ppjoin_pairs`. ``blocking=None``
+    does the raw triangular cross join (tests/tiny inputs only).
 
     Shingles are the xxhash64 of the shingle strings
     (:func:`hashed_shingles`): Jaccard depends only on set sizes, which
     64-bit hashing preserves (collision odds ~|sh|²/2⁶⁴), and long-array
-    intersects run ~2× faster than string-array ones.
-
-    The shingle table (read by the prefix build and by both sides of
-    the verify join) and the prefix table (both sides of the candidate
-    self-join) are each computed once, behind a lazy
-    ``localCheckpoint``: without them every branch re-runs the shingling
-    (2× end to end on the fixture) and Spark plans the prefix chain
-    twice, with no ReusedExchange. The blocks live at MEMORY_AND_DISK,
-    so at scale they spill to local disk rather than OOM. The trade is
-    lineage truncation: an executor lost mid-query fails the job
-    instead of recomputing the lost blocks. Lazy, because the first
-    branch of the main action stores them anyway; an eager checkpoint
-    would add one driver-barrier job per table.
+    intersects run ~2× faster than string-array ones. The shingle table
+    (read by the prefix build and by both sides of the verify join) is
+    computed once, behind a lazy ``localCheckpoint`` — without it every
+    branch re-runs the shingling (2× end to end on the fixture).
     """
     s = hashed_shingles(df, id_col, text_col, n).localCheckpoint(eager=False)
-    if blocking is None:
-        a = s.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
-        b = s.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
-        joined = a.join(b, F.col("id_a") < F.col("id_b"))
-    elif blocking == "prefix":
-        if not 0.0 < threshold < 1.0:
-            raise ValueError("prefix blocking needs 0 < threshold < 1")
-        # Global canonical order: ascending corpus frequency, ties by
-        # shingle value. Rarest-first prefixes minimize candidates —
-        # distinct documents rarely share their rarest shingles. The
-        # explode drops NULL shingle arrays, so a NULL document has no
-        # prefix row and can never become a candidate.
-        ex = s.select(
-            F.col(id_col).alias("id"),
-            F.size("shingles").alias("sz"),
-            F.explode("shingles").alias("sh"),
-        )
-        freq = ex.groupBy("sh").agg(F.count(F.lit(1)).alias("__freq"))
-        # shared AllPairs/PPJoin kernel — see ppjoin_prefixes /
-        # ppjoin_length_filter for the lemmas. Partial aggregation + AQE
-        # skew handling on the freq join, no driver-side vocabulary.
-        pref = ppjoin_prefixes(ex, freq, threshold).localCheckpoint(eager=False)
-        # the positional filter runs on each matching prefix row, with
-        # that row's own ranks, inside the candidate join: a pair keeps
-        # a row exactly when it passes the per-pair min-rank test (see
-        # ppjoin_positional_filter), so the candidate shuffle is a
-        # distinct() over the two ids, with no per-pair aggregate
-        cand = (
-            pref.select(
-                F.col("id").alias("id_a"),
-                F.col("sz").alias("sz_a"),
-                F.col("__rk").alias("__rk_a"),
-                "sh",
-            )
-            .join(
-                pref.select(
-                    F.col("id").alias("id_b"),
-                    F.col("sz").alias("sz_b"),
-                    F.col("__rk").alias("__rk_b"),
-                    "sh",
-                ),
-                on="sh",
-            )
-            .filter(
-                (F.col("id_a") < F.col("id_b"))
-                & ppjoin_length_filter("sz_a", "sz_b", threshold)
-                & ppjoin_positional_filter(
-                    "sz_a", "sz_b", "__rk_a", "__rk_b", threshold
-                )
-            )
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        joined = cand.join(
-            s.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")),
-            on="id_a",
-        ).join(
-            s.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b")),
-            on="id_b",
-        )
-    else:
+    if blocking == "prefix":
+        return ppjoin_pairs(s, None, threshold, id_col)
+    if blocking is not None:
         raise ValueError(f"unknown blocking mode: {blocking!r}")
+    a = s.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
+    b = s.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
+    joined = a.join(b, F.col("id_a") < F.col("id_b"))
     return jaccard_verify(joined, "sh_a", "sh_b", threshold).select(
         "id_a", "id_b", "jaccard"
     )
@@ -788,8 +797,7 @@ def _min_label_rounds(
 # (star fallback, d6) per query on the sf0.1 fixture for <1k edges.
 # 500k edges ≈ 8 MB collected — the same order a broadcast-join build
 # side ships to the driver anyway; past the cutoff the distributed
-# path runs unchanged. Override per call (`driver_max_edges=0` forces
-# the distributed path).
+# path runs unchanged.
 #
 # The byte intuition behind the count assumes FIXED-WIDTH ids (two
 # 8-byte longs per edge). The driver path is therefore gated on both
@@ -800,6 +808,11 @@ def _min_label_rounds(
 # distributed path, whatever the edge count. Pinned by
 # tests/test_dedup.py::test_cc_hybrid_string_ids_skip_driver_path.
 CC_DRIVER_MAX_EDGES = 500_000
+
+# Hybrid CC: min-label rounds before contracting to the star phase, and
+# the star phase's round cap.
+CC_PREGEL_ROUNDS = 3
+CC_MAX_ITER = 50
 
 _CC_INTEGRAL_TYPES = ("byte", "short", "integer", "long")
 
@@ -840,10 +853,7 @@ def connected_components_hybrid(
     edges: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    pregel_rounds: int = 3,
-    max_iter: int = 50,
     stats: dict | None = None,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Adaptive CC — the 100 TB default. Same output contract as
     :func:`connected_components` / :func:`connected_components_star`.
@@ -853,10 +863,10 @@ def connected_components_hybrid(
     2–3 rounds of ONE cheap shuffle each and the star machinery's extra
     per-round shuffles are pure overhead. But chain-shaped graphs
     (boilerplate-heavy web text) blow Pregel up to O(diameter) rounds.
-    So: run up to ``pregel_rounds`` of min-label propagation; if the
+    So: run up to :data:`CC_PREGEL_ROUNDS` of min-label propagation; if the
     fixpoint is reached, done. Otherwise CONTRACT the graph through the
     partial labels (endpoints → current label, drop intra-group edges —
-    the quotient graph is ≥(2·pregel_rounds+1)× smaller in diameter)
+    the quotient graph is ≥(2·CC_PREGEL_ROUNDS+1)× smaller in diameter)
     and finish with large-star/small-star in O(log n) rounds. The
     global min id of each component survives contraction as its own
     label (it is the min of its closed neighborhood), so the quotient
@@ -867,8 +877,8 @@ def connected_components_hybrid(
     ``star_rounds`` actually run (plus ``driver_edges`` when the
     small-graph driver path fired).
 
-    Small graphs (≤ ``driver_max_edges`` raw edges, default
-    :data:`CC_DRIVER_MAX_EDGES`) skip the distributed
+    Small graphs (≤ :data:`CC_DRIVER_MAX_EDGES` raw edges, read at
+    call time) skip the distributed
     rounds entirely: the edge list — materialized exactly once either
     way — is collected and closed with a driver-side union-find. Every
     distributed round is a full Spark job whose cost on a small graph
@@ -878,8 +888,6 @@ def connected_components_hybrid(
     columns to be integral — string-id graphs always run distributed
     (see the :data:`CC_DRIVER_MAX_EDGES` comment).
     """
-    if driver_max_edges is None:
-        driver_max_edges = CC_DRIVER_MAX_EDGES
     # materialize the (possibly expensive) pair-finding pipeline ONCE;
     # both paths reuse this checkpoint. LAZY as of r15: the count probe
     # below is a full scan, so it stores the blocks as a side effect —
@@ -895,7 +903,7 @@ def connected_components_hybrid(
     ids_integral = all(
         f.dataType.typeName() in _CC_INTEGRAL_TYPES for f in raw.schema.fields
     )
-    if ids_integral and n_edges <= driver_max_edges:
+    if ids_integral and n_edges <= CC_DRIVER_MAX_EDGES:
         if stats is not None:
             stats["pregel_rounds"] = 0
             stats["star_rounds"] = 0
@@ -903,7 +911,7 @@ def connected_components_hybrid(
         return _driver_union_find_labels(raw.sparkSession, raw.collect())
     sym = _sym_edges(raw, "a", "b")
     labels = _self_labels(sym)
-    labels, converged, rounds = _min_label_rounds(sym, labels, pregel_rounds)
+    labels, converged, rounds = _min_label_rounds(sym, labels, CC_PREGEL_ROUNDS)
     if stats is not None:
         stats["pregel_rounds"] = rounds
         stats["star_rounds"] = 0
@@ -920,7 +928,7 @@ def connected_components_hybrid(
         .localCheckpoint(eager=True)
     )
     # The sum-fixpoint detector needs one round AFTER stabilization to
-    # fire, so a graph that converges at exactly ``pregel_rounds``
+    # fire, so a graph that converges at exactly CC_PREGEL_ROUNDS
     # reports converged=False (round-5 advisor). The quotient graph is
     # the cheap tiebreak: labels are a fixpoint iff every edge joins
     # two same-label nodes, i.e. the contracted graph is EMPTY — and a
@@ -933,7 +941,7 @@ def connected_components_hybrid(
         return labels
     star_stats: dict = {}
     roots = connected_components_star(
-        contracted, max_iter=max_iter, stats=star_stats
+        contracted, max_iter=CC_MAX_ITER, stats=star_stats
     )
     if stats is not None:
         stats["star_rounds"] = star_stats.get("rounds", 0)

@@ -67,108 +67,23 @@ def cross_jaccard_pairs(
     """Exact cross-collection near-dup pairs: every (delta doc, corpus
     doc) pair with n-gram Jaccard > ``threshold`` — the NEAR-dup
     counterpart of :func:`incremental_dedup_exact`'s corpus screen,
-    complete (no candidate loss) and delta-proportional.
+    complete (no candidate loss) and delta-proportional: the candidate
+    join is delta-prefix ⋈ corpus-prefix, never delta × corpus.
 
-    Same AllPairs/PPJoin prefix filter as the self-join form
-    (operators/dedup.ngram_jaccard_pairs): both collections' shingles
-    sort by ONE shared canonical order (ascending frequency over the
-    UNION corpus, ties by value — the lemma needs a single total
-    order), each doc keeps its (size − ⌈θ·size⌉ + 1)-prefix, and the
-    candidate join is delta-prefix ⋈ corpus-prefix on the shingle —
-    never delta × corpus. The PPJoin length and positional filters
-    prune collisions inside the join, a distinct() over the pair ids
-    leaves the candidates, and the exact Jaccard verify finishes.
-
-    As in the self-join form, both collections are shingled by
-    operators/dedup.hashed_shingles: each shingle string is replaced by
-    its xxhash64 before the prefix build and the pairwise intersections
-    — Jaccard depends only on set sizes, which 64-bit hashing preserves
-    (collision odds ~|sh|²/2⁶⁴), the PPJoin lemma only needs SOME
-    shared total order (frequency ties break by hash value — an equally
-    total order), and long-array intersects run ~2× faster than
-    string-array ones. Each collection's shingle table and the shared
-    frequency table are computed once, behind lazy localCheckpoints —
-    the same storage-vs-recompute trade (lineage truncation) as the
-    self-join form's.
+    The cross form of operators/dedup.ppjoin_pairs (the PPJoin lemmas
+    and plan live there) over operators/dedup.hashed_shingles tables,
+    each computed once behind a lazy localCheckpoint.
 
     Output: (delta_id, corpus_id, jaccard). The test is on the
     unrounded Jaccard; the reported ``jaccard`` is rounded to 6
-    decimals (operators/dedup.jaccard_verify).
+    decimals. ``threshold`` must lie in (0, 1).
     """
-    from pypgsync_spark.operators.dedup import (
-        hashed_shingles,
-        jaccard_verify,
-        ppjoin_length_filter,
-        ppjoin_positional_filter,
-        ppjoin_prefixes,
-    )
+    from pypgsync_spark.operators.dedup import hashed_shingles, ppjoin_pairs
 
-    # lazy (r8): the shared-frequency aggregate below full-scans both
-    # collections as its first job and materializes the checkpoints as
-    # a side effect — same stored blocks, two fewer driver-barrier jobs
-    # than eager persists
     sd = hashed_shingles(delta, id_col, text_col, n).localCheckpoint(eager=False)
     sc = hashed_shingles(corpus, id_col, text_col, n).localCheckpoint(eager=False)
-
-    # the explode drops NULL shingle arrays: a NULL document has no
-    # prefix row, so it never reaches the candidates
-    def exploded(s: DataFrame, side: str) -> DataFrame:
-        return s.select(
-            F.col(id_col).alias(f"id_{side}"),
-            F.size("shingles").alias(f"sz_{side}"),
-            F.explode("shingles").alias("sh"),
-        )
-
-    ed, ec = exploded(sd, "d"), exploded(sc, "c")
-    # one shared canonical order: frequency over BOTH collections.
-    # Checkpointed because BOTH prefix branches join it — without it
-    # each branch re-runs the union+explode+aggregate over both
-    # collections (at fixture scale the saving is within noise; at
-    # corpus scale it is one full token-stream pass). Vocabulary-scale
-    # (distinct shingles), the cheapest table in the pipeline to hold.
-    # Lazy: it materializes inside the first branch's job rather than
-    # as its own barrier; the second branch reads the stored partitions.
-    freq = (
-        ed.select("sh")
-        .unionByName(ec.select("sh"))
-        .groupBy("sh")
-        .agg(F.count(F.lit(1)).alias("__freq"))
-        .localCheckpoint(eager=False)
-    )
-
-    # shared AllPairs/PPJoin kernel (r10 review: this was a second
-    # inline copy of the prefix build; a bound/tie-order fix in one
-    # place would have silently left the other incomplete)
-    def prefixes(ex: DataFrame, side: str) -> DataFrame:
-        return ppjoin_prefixes(
-            ex, freq, threshold, id_col=f"id_{side}", sz_col=f"sz_{side}"
-        ).withColumnRenamed("__rk", f"__rk_{side}")
-
-    # the positional filter runs on each matching prefix row inside the
-    # candidate join, and the candidates are a distinct() over the two
-    # ids — same lemma as the self-join form in
-    # operators/dedup.ngram_jaccard_pairs (see ppjoin_positional_filter)
-    cand = (
-        prefixes(ed, "d")
-        .join(prefixes(ec, "c"), on="sh")
-        .filter(
-            ppjoin_length_filter("sz_d", "sz_c", threshold)
-            & ppjoin_positional_filter("sz_d", "sz_c", "__rk_d", "__rk_c", threshold)
-        )
-        .select("id_d", "id_c")
-        .distinct()
-    )
-    joined = cand.join(
-        sd.select(F.col(id_col).alias("id_d"), F.col("shingles").alias("sh_d")),
-        on="id_d",
-    ).join(
-        sc.select(F.col(id_col).alias("id_c"), F.col("shingles").alias("sh_c")),
-        on="id_c",
-    )
-    return jaccard_verify(joined, "sh_d", "sh_c", threshold).select(
-        F.col("id_d").alias("delta_id"),
-        F.col("id_c").alias("corpus_id"),
-        "jaccard",
+    return ppjoin_pairs(sd, sc, threshold, id_col).select(
+        F.col("id_a").alias("delta_id"), F.col("id_b").alias("corpus_id"), "jaccard"
     )
 
 

@@ -320,9 +320,10 @@ def test_connected_components_star_chain_rounds(spark):
     assert stats["rounds"] <= 10, stats
 
 
-def test_connected_components_hybrid_matches_pregel(spark):
+def test_connected_components_hybrid_matches_pregel(spark, monkeypatch):
     """Hybrid (Pregel-then-contract-then-star) must match the plain
     variants on a mixed graph, including the self-loop-only node."""
+    from pypgsync_spark.operators import dedup
     from pypgsync_spark.operators.dedup import (
         connected_components,
         connected_components_hybrid,
@@ -336,12 +337,12 @@ def test_connected_components_hybrid_matches_pregel(spark):
     )
     a = {(r["id"], r["component"]) for r in connected_components(edges).collect()}
     stats: dict = {}
-    b = {
-        (r["id"], r["component"])
-        for r in connected_components_hybrid(
-            edges, stats=stats, driver_max_edges=0
-        ).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+        b = {
+            (r["id"], r["component"])
+            for r in connected_components_hybrid(edges, stats=stats).collect()
+        }
     assert (30, 30) in b
     assert a == b
     # r14: the small-graph driver path (union-find over the collected
@@ -357,10 +358,11 @@ def test_connected_components_hybrid_matches_pregel(spark):
     assert dstats["driver_edges"] == 9
 
 
-def test_connected_components_hybrid_chain_falls_over_to_star(spark):
+def test_connected_components_hybrid_chain_falls_over_to_star(spark, monkeypatch):
     """On a 48-node chain the Pregel prefix cannot converge in 3
     rounds; the hybrid must contract and finish via star with a total
     round count far below the chain diameter."""
+    from pypgsync_spark.operators import dedup
     from pypgsync_spark.operators.dedup import connected_components_hybrid
 
     n = 48
@@ -368,9 +370,9 @@ def test_connected_components_hybrid_chain_falls_over_to_star(spark):
         [(i, i + 1) for i in range(n)], ["id_a", "id_b"]
     )
     stats: dict = {}
-    labels = connected_components_hybrid(
-        edges, stats=stats, driver_max_edges=0
-    ).collect()
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+        labels = connected_components_hybrid(edges, stats=stats).collect()
     assert {(r["id"], r["component"]) for r in labels} == {
         (i, 0) for i in range(n + 1)
     }
@@ -383,20 +385,20 @@ def test_connected_components_hybrid_chain_falls_over_to_star(spark):
     } == {(i, 0) for i in range(n + 1)}
 
 
-def test_connected_components_hybrid_shallow_skips_star(spark):
+def test_connected_components_hybrid_shallow_skips_star(spark, monkeypatch):
     """A diameter-2 graph converges inside the Pregel prefix — the
     star stage must not run at all (stats['star_rounds'] == 0)."""
+    from pypgsync_spark.operators import dedup
     from pypgsync_spark.operators.dedup import connected_components_hybrid
 
     edges = spark.createDataFrame(
         [(1, 2), (1, 3), (1, 4), (10, 11)], ["id_a", "id_b"]
     )
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
     stats: dict = {}
     got = {
         (r["id"], r["component"])
-        for r in connected_components_hybrid(
-            edges, stats=stats, driver_max_edges=0
-        ).collect()
+        for r in connected_components_hybrid(edges, stats=stats).collect()
     }
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)}
     assert stats["star_rounds"] == 0

@@ -12,6 +12,7 @@ gets wrong first: NULL, empty, whitespace-only and shorter-than-n texts.
   ``with_shingles`` + ``xxhash64``.
 - Every path keeps a pair on the unrounded ``J > θ``, also at a
   threshold between a Jaccard value and its 6-decimal rounding.
+- Both prefix joins raise ``ValueError`` for θ outside (0, 1).
 - :func:`jaccard_verify` matches a pure-Python Jaccard over hash arrays.
 """
 
@@ -147,6 +148,18 @@ def test_every_path_keeps_pairs_on_unrounded_jaccard(spark, threshold, want):
         threshold=threshold,
     )
     assert [r.jaccard for r in cross.collect()] == want
+
+
+@pytest.mark.parametrize("threshold", [-0.1, 0.0, 1.0, 1.5])
+def test_prefix_joins_reject_threshold_outside_open_unit_interval(spark, threshold):
+    """Both PPJoin callers refuse a θ the prefix lemma does not cover: at
+    θ < 0 every pair has J = 0 > θ, and pairs that share no shingle can
+    never meet in the prefix join."""
+    df = _docs(spark, _TWO_THIRDS)
+    with pytest.raises(ValueError, match="0 < threshold < 1"):
+        ngram_jaccard_pairs(df, threshold=threshold)
+    with pytest.raises(ValueError, match="0 < threshold < 1"):
+        cross_jaccard_pairs(df, _docs(spark, ["x y z"], first_id=100), threshold=threshold)
 
 
 # A small pool with extreme longs, so drawn arrays overlap often.

@@ -348,6 +348,36 @@ def test_ngram_jaccard_joins_shingle_each_document_once(ngram_join_plans):
         ), key
 
 
+def _executed_nodes(description: str) -> list[dict]:
+    """:func:`plan_nodes` of the plan an execution ran: an adaptive
+    plan's initial plan is dropped, so each operator counts once."""
+    head, sep, body = description.partition("\n\n")
+    return plan_nodes(head.split("+- == Initial Plan ==")[0] + sep + body)
+
+
+def test_ngram_jaccard_joins_build_shared_tables_once(ngram_join_plans):
+    """The self-join ranks its prefixes once and feeds that one prefix
+    table to both sides of the candidate join; the cross join counts
+    shingle frequencies over both collections once and ranks one prefix
+    per collection. Counted over every executed plan, checkpoint
+    materializations included."""
+    for key, windows in (("ngram_jaccard_pairs", 1), ("cross_jaccard_pairs", 2)):
+        nodes = [n for p in ngram_join_plans[key] for n in _executed_nodes(p)]
+        ranks = [
+            n for n in nodes
+            if n["name"] == "Window" and "row_number()" in n["details"]
+        ]
+        assert len(ranks) == windows, (key, len(ranks))
+        freqs = [
+            n for n in nodes
+            if n["name"] == "HashAggregate"
+            and "Functions [1]: [count(1)]" in n["details"]
+        ]
+        assert len(freqs) == 1, (key, len(freqs))
+        unions = [d for d in freqs[0]["below"] if " Union" in d.split("\n")[0]]
+        assert len(unions) == (key == "cross_jaccard_pairs"), key
+
+
 def test_unpivot_is_map_only_expand(spark, sf_small):
     """a19 (UNPIVOT) must plan as Expand inside the scan stage: a
     map-only 3x row emission with NO exchange, reading only the five
@@ -681,11 +711,12 @@ def test_ppjoin_candidates_shuffle_ids_and_verify_intersects_once(spark, sf_smal
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     delta = docs.filter(F.col("doc_id") % 10 == 0)
     frames = {
-        "ngram_jaccard_pairs": (ngram_jaccard_pairs(docs), ["id_a", "id_b"]),
-        "cross_jaccard_pairs": (cross_jaccard_pairs(corpus, delta), ["id_d", "id_c"]),
+        "ngram_jaccard_pairs": ngram_jaccard_pairs(docs),
+        "cross_jaccard_pairs": cross_jaccard_pairs(corpus, delta),
     }
+    ids = ["id_a", "id_b"]  # the candidate columns of dedup.ppjoin_pairs
     exchanged = []
-    for key, (df, ids) in frames.items():
+    for key, df in frames.items():
         plan = df._jdf.queryExecution().executedPlan()
         if plan.nodeName() == "AdaptiveSparkPlan":
             plan = plan.executedPlan()  # the plan AQE starts from
