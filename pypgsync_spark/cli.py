@@ -5,10 +5,10 @@ Reference command shapes (reference cli.py:37-55 single, cli.py:58-97
 continuous; option inventory cli.py:9-34): source/destination endpoints,
 the table to sync, a chunk-size bound, and for continuous mode a delay
 between iterations (default 5 s, reference cli.py:72-74). The Spark
-engine's endpoints are parquet paths (or a JDBC URL at deploy time);
-chunking is the source's own partitioning, so ``--chunksize`` maps to
-``--target-rows-per-slice`` (the reference's 10M-row slice target,
-reference session.py:236-238) and only matters for JDBC-faithful runs.
+engine's endpoints are parquet paths (or a JDBC URL at deploy time).
+The reference's ``--chunksize`` has no flag here: chunking is the
+source's own partitioning plus the sql source's ``fetch_size``
+(SURVEY S2). Each sync pass prints its record as one JSON line.
 
 Usage:
     python -m pypgsync_spark.cli single --source S --dest D \
@@ -20,10 +20,25 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import dataclasses
+import json
 import sys
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def _non_negative(kind):
+    """argparse ``type`` that parses with ``kind`` and rejects values below 0."""
+
+    def parse(text: str):
+        value = kind(text)
+        if value < 0:
+            raise argparse.ArgumentTypeError(f"must be >= 0, got {text}")
+        return value
+
+    parse.__name__ = kind.__name__
+    return parse
 
 
 def _build_parser() -> argparse.ArgumentParser:
@@ -42,12 +57,6 @@ def _build_parser() -> argparse.ArgumentParser:
         c.add_argument(
             "--version-col", required=True, help="monotone version column (epoch ms)"
         )
-        c.add_argument(
-            "--target-rows-per-slice",
-            type=int,
-            default=None,
-            help="slice planning target (JDBC-faithful; reference 10M default)",
-        )
         c.add_argument("--master", default=None, help="spark master override")
         c.add_argument(
             "--source-format",
@@ -65,11 +74,14 @@ def _build_parser() -> argparse.ArgumentParser:
         )
         if name == "continuous":
             c.add_argument(
-                "--delay", type=float, default=5.0, help="seconds between runs"
+                "--delay",
+                type=_non_negative(float),
+                default=5.0,
+                help="seconds between runs",
             )
             c.add_argument(
                 "--iterations",
-                type=int,
+                type=_non_negative(int),
                 default=0,
                 help="0 = loop until interrupted (reference while-True)",
             )
@@ -91,8 +103,6 @@ def _build_parser() -> argparse.ArgumentParser:
 
 
 def run_query(args, spark: SparkSession) -> int:
-    import json
-
     from pypgsync_spark.catalog import DEFAULT_SF_DIR
     from pypgsync_spark.queries import REGISTRY
 
@@ -133,17 +143,6 @@ def _parse_keys(keys: str) -> list[str]:
     return [k.strip() for k in keys.split(",") if k.strip()]
 
 
-def _stats_dict(stats) -> dict:
-    return {
-        "low": stats.low,
-        "high": stats.high,
-        "delta_rows": stats.delta_rows,
-        "rows_changed": stats.rows_changed,
-        "wrote": stats.wrote,
-        "slices": len(stats.plan.slices) if stats.plan else None,
-    }
-
-
 def _sync_args(args, spark: SparkSession):
     from pypgsync_spark.sync import ParquetSyncedTable
 
@@ -160,53 +159,44 @@ def _sync_args(args, spark: SparkSession):
     return store, loader
 
 
+def _emit(stats) -> dict:
+    """Print one pass's ``SyncStats`` as a JSON line; return it as a dict."""
+    record = dataclasses.asdict(stats)
+    print(json.dumps(record), flush=True)
+    return record
+
+
 def run_single(args, spark: SparkSession) -> dict:
     from pypgsync_spark.sync import sync_table
 
     store, loader = _sync_args(args, spark)
-    return _stats_dict(
-        sync_table(
-            loader(),
-            store,
-            keys=_parse_keys(args.keys),
-            version_col=args.version_col,
-            # r11 review: was parsed but never forwarded — the
-            # documented --chunksize analogue silently did nothing
-            target_rows_per_slice=args.target_rows_per_slice,
-        )
+    return _emit(
+        sync_table(loader(), store, keys=_parse_keys(args.keys), version_col=args.version_col)
     )
 
 
 def run_continuous(args, spark: SparkSession, sleep=time.sleep) -> list[dict]:
     """The reference's ``while True: sync(); sleep(delay)`` loop
-    (reference cli.py:90-94), bounded by ``--iterations`` when > 0.
-    Exits cleanly on KeyboardInterrupt (reference cli.py:95-97).
-
-    The bounded case IS ``sync.sync_continuous`` (one loop
-    implementation to maintain — r11 review); this wrapper owns only
-    the infinite-until-interrupted mode the reference's CLI exposes.
-    """
+    (reference cli.py:90-94) is ``sync.sync_continuous``; this prints
+    each pass as it ends. ``--iterations`` > 0 bounds the loop, 0 runs
+    until interrupted; KeyboardInterrupt exits cleanly (reference
+    cli.py:95-97)."""
     from pypgsync_spark.sync import sync_continuous
 
     store, loader = _sync_args(args, spark)
-    keys = _parse_keys(args.keys)
-    if args.iterations:
-        runs = sync_continuous(
-            loader,
-            store,
-            keys,
-            args.version_col,
-            iterations=args.iterations,
-            delay_seconds=args.delay,
-            sleep=sleep,
-            target_rows_per_slice=args.target_rows_per_slice,
-        )
-        return [_stats_dict(s) for s in runs]
+    passes = sync_continuous(
+        loader,
+        store,
+        _parse_keys(args.keys),
+        args.version_col,
+        iterations=args.iterations,
+        delay_seconds=args.delay,
+        sleep=sleep,
+    )
     out: list[dict] = []
     try:
-        while True:
-            out.append(run_single(args, spark))
-            sleep(args.delay)
+        for stats in passes:
+            out.append(_emit(stats))
     except KeyboardInterrupt:
         pass
     return out
@@ -225,11 +215,9 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
     if args.command == "query":
         return run_query(args, spark)
     if args.command == "single":
-        stats = run_single(args, spark)
-        print(f"synced: {stats}")
+        run_single(args, spark)
     else:
-        runs = run_continuous(args, spark)
-        print(f"continuous: {len(runs)} iterations, last={runs[-1] if runs else None}")
+        run_continuous(args, spark)
     return 0
 
 

@@ -29,8 +29,7 @@ Physical formulations:
 
 At 100 TB the winning strategy is to keep the destination bucketed (or
 Delta/Iceberg-partitioned) on the merge key so the union-window shuffle
-only moves the delta; ``upsert_merge`` takes an optional
-``num_partitions`` to pre-shape that shuffle.
+only moves the delta.
 """
 
 from __future__ import annotations
@@ -49,7 +48,6 @@ def upsert_merge(
     delta: DataFrame,
     keys: Sequence[str],
     version_col: str,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Last-writer-wins merge of ``delta`` onto ``dst`` keyed on ``keys``.
 
@@ -65,8 +63,6 @@ def upsert_merge(
     unioned = dst.withColumn(_PRIORITY, F.lit(0)).unionByName(
         delta.select(*cols).withColumn(_PRIORITY, F.lit(1))
     )
-    if num_partitions:
-        unioned = unioned.repartition(num_partitions, *keys)
     w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(
         F.col(version_col).desc(), F.col(_PRIORITY).desc()
     )

@@ -32,7 +32,6 @@ def _merge_stream_writer(
     version_col: str,
     checkpoint_dir: str,
     trigger: dict | None,
-    batch_rows: list[int] | None = None,
 ):
     """The ONE foreachBatch merge body both streaming syncs share (r10
     review: it was duplicated verbatim between stream_sync and
@@ -45,12 +44,9 @@ def _merge_stream_writer(
     late rows older than the store's MAX. Each write records the
     merged table's MAX ``version_col`` in the commit, observed while
     the write runs (no extra job), so a later ``sync_table`` pass on
-    the store needs no watermark scan. ``batch_rows`` optionally
-    collects per-epoch input row counts (test/observability hook)."""
+    the store needs no watermark scan."""
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch_rows is not None:
-            batch_rows.append(batch.count())
         dst = store.read()
         if dst is None:
             merged = latest_per_key(batch, keys, version_col)
@@ -93,8 +89,6 @@ def stream_sync_cdc(
     version_col: str,
     checkpoint_dir: str,
     trigger: dict | None = None,
-    num_partitions: int = 4,
-    batch_rows: list[int] | None = None,
 ):
     """The complete reference pipeline on the CDC streaming source:
     ``pypgsync_cdc`` (sources/pysource.py) polls MAX(partition_column)
@@ -104,16 +98,10 @@ def stream_sync_cdc(
     is idempotent on the keys — restartable, effectively-once, and a
     restarted run re-reads NOTHING already committed (unlike the
     reference, whose watermark update and destination write are not
-    atomic: a crash between them re-applies rows).
-
-    ``batch_rows``: optional list collecting per-epoch input row
-    counts (test/observability hook).
+    atomic: a crash between them re-applies rows). Per-epoch input row
+    counts are the query's ``recentProgress[i].numInputRows``.
     """
     from pypgsync_spark.sources.pysource import read_cdc_stream
 
-    src = read_cdc_stream(
-        spark, table_path, partition_column, num_partitions=num_partitions
-    )
-    return _merge_stream_writer(
-        src, store, keys, version_col, checkpoint_dir, trigger, batch_rows=batch_rows
-    )
+    src = read_cdc_stream(spark, table_path, partition_column)
+    return _merge_stream_writer(src, store, keys, version_col, checkpoint_dir, trigger)

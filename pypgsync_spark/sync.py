@@ -50,8 +50,10 @@ rewriting the current commit file alone.
 
 from __future__ import annotations
 
+import itertools
 import json
 import time
+from collections.abc import Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -63,7 +65,6 @@ from pypgsync_spark.operators.merge import (
     latest_per_key,
     upsert_merge,  # noqa: F401  (re-exported for streaming/continuous.py)
 )
-from pypgsync_spark.plans.intervals import SlicePlan, plan_slices
 
 COMMIT_FILE = "_commit.json"
 
@@ -108,7 +109,6 @@ class SyncStats:
     low: int | None
     high: int
     delta_rows: int
-    plan: SlicePlan | None
     delta_max: int | None = None
     rows_changed: int = 0
     wrote: bool = False
@@ -194,16 +194,12 @@ def sync_once(
     keys: list[str],
     version_col: str,
     high: int | None = None,
-    target_rows_per_slice: int | None = None,
     pushdown_cond=None,
     dst_max: int | None = None,
 ) -> tuple[DataFrame, SyncStats]:
     """One sync iteration: watermark → delta → merge. Returns the merged
     destination DataFrame (caller persists it) plus stats.
 
-    ``target_rows_per_slice`` triggers explicit slice planning — only
-    meaningful for JDBC-faithful execution; the DataFrame path lets the
-    source's own partitioning bound per-task work.
     ``pushdown_cond`` — see :func:`extract_delta`.
     ``dst_max``: the destination's ``MAX(version_col)`` when the caller
     already knows it (a store's commit file); skips that scan.
@@ -230,7 +226,7 @@ def sync_once(
     def no_op(low):
         # no-op short-circuit (reference session.py:216-218)
         empty = dst if dst is not None else src.limit(0)
-        return empty, SyncStats(low=low, high=high, delta_rows=0, plan=None)
+        return empty, SyncStats(low=low, high=high, delta_rows=0)
 
     # a cold start's low watermark is MIN(src), which keeps every row:
     # the one aggregate below reads it instead of a scan of its own
@@ -250,11 +246,6 @@ def sync_once(
         # the raw predicate bounds both ends; rows above ``high`` are
         # not counted
         scan = delta = extract_delta(src, version_col, low, high, pushdown_cond)
-    # ONE aggregate feeds the stats, the change test and the slice
-    # plan (the plan is informational for JDBC-faithful callers, who
-    # apply its range predicates via spark.read.jdbc(predicates=...);
-    # the DataFrame path lets the source's own partitioning bound
-    # per-task work).
     aggs = [
         F.count(F.when(in_window, 1)).alias("n"),
         F.max(F.when(in_window, F.col(version_col))).alias("mx"),
@@ -277,11 +268,6 @@ def sync_once(
             return no_op(low)
         low = int(low)
     delta_rows, delta_max = agg["n"], agg["mx"]
-    plan = (
-        plan_slices(low, high, delta_rows, target_rows_per_slice)
-        if target_rows_per_slice
-        else None
-    )
     if dst is None:
         rows_changed = agg["keys"]
         merged = delta
@@ -299,7 +285,7 @@ def sync_once(
             bcast = _fits_broadcast(delta.select(*keys), delta_rows)
             merged = delta_wins_merge(dst, delta, keys, version_col, broadcast_keys=bcast)
     stats = SyncStats(
-        low=low, high=high, delta_rows=delta_rows, plan=plan,
+        low=low, high=high, delta_rows=delta_rows,
         delta_max=None if delta_max is None else int(delta_max),
         rows_changed=rows_changed,
         rows_above_high=None if pushdown_cond is not None else agg["above"],
@@ -589,13 +575,9 @@ def sync_table(
     keys: list[str],
     version_col: str,
     high: int | None = None,
-    target_rows_per_slice: int | None = None,
 ) -> SyncStats:
     """One full iteration against a persistent destination — the body of
     the reference's ``merge_chunks`` orchestrator (session.py:111-160).
-    ``target_rows_per_slice`` passes through to :func:`sync_once` (the
-    CLI's --target-rows-per-slice was parsed but never reached here —
-    r11 review).
 
     The low watermark comes from the store's commit file when it
     records one (else a scan), and the new generation's commit records
@@ -623,14 +605,13 @@ def sync_table(
             # the per-file form of the reference's low > high skip
             # (session.py:216-218)
             high = high if high is not None else now_millis()
-            return SyncStats(low=committed, high=high, delta_rows=0, plan=None)
+            return SyncStats(low=committed, high=high, delta_rows=0)
         if all(files.get(p) == v for p, v in seen.items()):
             new = [p for p in files if p not in seen]
             scan = src.sparkSession.read.schema(src.schema).parquet(*new)
     dst = store.read(head)
     merged, stats = sync_once(
         scan, dst, keys, version_col, high=high,
-        target_rows_per_slice=target_rows_per_slice,
         dst_max=None if dst is None else committed,
     )
     consumed = files if stats.rows_above_high == 0 else None
@@ -652,24 +633,20 @@ def sync_continuous(
     iterations: int,
     delay_seconds: float = 5.0,
     sleep=time.sleep,
-    target_rows_per_slice: int | None = None,
-) -> list[SyncStats]:
-    """Continuous mode: bounded re-run loop (reference cli.py:80-97,
-    default delay 5 s at cli.py:72-74). ``src_loader()`` re-reads the
-    source each iteration so new files/rows are visible. For the
-    Structured-Streaming-native form see streaming/continuous.py.
+) -> Iterator[SyncStats]:
+    """Continuous mode, the reference's ``while True: sync();
+    sleep(delay)`` loop (reference cli.py:80-97, default delay 5 s at
+    cli.py:72-74): yields each pass's stats. ``iterations`` > 0 bounds
+    the loop; 0 runs until the caller stops iterating or an interrupt
+    ends it. ``src_loader()`` re-reads the source each iteration so new
+    files/rows are visible. For the Structured-Streaming-native form
+    see streaming/continuous.py.
     """
-    out: list[SyncStats] = []
-    for i in range(iterations):
-        out.append(
-            sync_table(
-                src_loader(), store, keys, version_col,
-                target_rows_per_slice=target_rows_per_slice,
-            )
-        )
-        if i + 1 < iterations:
-            sleep(delay_seconds)
-    return out
+    for i in itertools.count(1):
+        yield sync_table(src_loader(), store, keys, version_col)
+        if i == iterations:
+            return
+        sleep(delay_seconds)
 
 
 def compact_store(

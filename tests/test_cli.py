@@ -1,9 +1,12 @@
-"""CLI parity (reference cli.py single/continuous): argument surface,
-single-run sync, bounded continuous loop, and interval/plan invariants
-(hypothesis-driven, SURVEY §5.1)."""
+"""CLI parity (reference cli.py single/continuous): argument surface
+and checks, single-run sync, bounded and unbounded continuous loop,
+and interval/plan invariants (hypothesis-driven, SURVEY §5.1)."""
 
 from __future__ import annotations
 
+import json
+
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -25,6 +28,11 @@ def _make_source(spark, sf_small, tmp_path) -> str:
     return path
 
 
+def _records(capsys) -> list[dict]:
+    """The JSON line each sync pass prints to stdout."""
+    return [json.loads(line) for line in capsys.readouterr().out.splitlines()]
+
+
 def test_cli_single_syncs(spark, sf_small, tmp_path, capsys):
     src_path = _make_source(spark, sf_small, tmp_path)
     dest = str(tmp_path / "dst")
@@ -39,9 +47,11 @@ def test_cli_single_syncs(spark, sf_small, tmp_path, capsys):
         spark=spark,
     )
     assert rc == 0
-    assert "synced:" in capsys.readouterr().out
+    (record,) = _records(capsys)
     got = spark.read.parquet(f"{dest}/a").count()
     assert got == spark.read.parquet(src_path).count()
+    assert record["wrote"] and record["delta_rows"] == got
+    assert record["delta_max"] is not None and record["rows_above_high"] == 0
 
 
 def test_cli_continuous_bounded(spark, sf_small, tmp_path, capsys):
@@ -60,13 +70,63 @@ def test_cli_continuous_bounded(spark, sf_small, tmp_path, capsys):
         spark=spark,
     )
     assert rc == 0
-    out = capsys.readouterr().out
-    assert "continuous: 3 iterations" in out
+    records = _records(capsys)
+    assert len(records) == 3
+    assert records[0]["wrote"] and not records[1]["wrote"] and not records[2]["wrote"]
     # converged and idempotent across the loop
     from pypgsync_spark.sync import ParquetSyncedTable
 
     store = ParquetSyncedTable(spark, dest)
     assert store.read().count() == spark.read.parquet(src_path).count()
+
+
+def test_cli_continuous_unbounded_until_interrupt(spark, sf_small, tmp_path, capsys, monkeypatch):
+    """--iterations 0 loops until interrupted, prints a JSON line per
+    pass as it ends, and exits 0 on KeyboardInterrupt (reference
+    cli.py:95-97)."""
+    import functools
+
+    from pypgsync_spark import cli
+
+    passes = []
+
+    def sleep(seconds):
+        passes.append(seconds)
+        if len(passes) == 2:
+            raise KeyboardInterrupt
+
+    monkeypatch.setattr(cli, "run_continuous", functools.partial(cli.run_continuous, sleep=sleep))
+    src_path = _make_source(spark, sf_small, tmp_path)
+    rc = main(
+        [
+            "continuous",
+            "--source", src_path,
+            "--dest", str(tmp_path / "dst"),
+            "--keys", "event_id",
+            "--version-col", "updated_ms",
+            "--delay", "0.5",
+        ],
+        spark=spark,
+    )
+    assert rc == 0
+    assert passes == [0.5, 0.5]
+    first, second = _records(capsys)
+    assert first["wrote"] and first["delta_rows"] > 0
+    assert second["delta_rows"] == 0 and not second["wrote"]
+
+
+@pytest.mark.parametrize("flag, value", [("--delay", "-1"), ("--iterations", "-3")])
+def test_cli_rejects_negative_delay_and_iterations(flag, value, capsys):
+    """A negative --delay used to fail in time.sleep after one committed
+    pass, and a negative --iterations ran no pass and exited 0."""
+    from pypgsync_spark.cli import _build_parser
+
+    argv = ["continuous", "--source", "s", "--dest", "d", "--keys", "k",
+            "--version-col", "v", flag, value]
+    with pytest.raises(SystemExit) as exc:
+        _build_parser().parse_args(argv)
+    assert exc.value.code == 2
+    assert f"argument {flag}: must be >= 0" in capsys.readouterr().err
 
 
 @given(
@@ -129,11 +189,12 @@ def test_cli_single_syncs_via_sql_source(spark, sf_small, tmp_path, capsys):
         spark=spark,
     )
     assert rc == 0
-    assert "synced:" in capsys.readouterr().out
+    (record,) = _records(capsys)
     from pypgsync_spark.sync import ParquetSyncedTable
 
     n = load_table(spark, sf_small, "events").count()
     assert ParquetSyncedTable(spark, dest).read().count() == n
+    assert record["wrote"] and record["rows_changed"] == n
 
 
 def test_cli_query_command(spark, sf_small, capsys):
@@ -154,40 +215,6 @@ def test_cli_query_command(spark, sf_small, capsys):
 
     rc = main(["query", "no_such_query"], spark=spark)
     assert rc == 2
-
-
-def test_cli_target_rows_per_slice_reaches_planner(spark, sf_small, tmp_path):
-    """r11 review: the flag was parsed but never forwarded — the
-    documented --chunksize analogue silently did nothing. Now the
-    returned stats carry the plan's slice count."""
-    from pypgsync_spark.cli import _build_parser, run_single
-
-    src_path = _make_source(spark, sf_small, tmp_path)
-    args = _build_parser().parse_args(
-        [
-            "single",
-            "--source", src_path,
-            "--dest", str(tmp_path / "dst"),
-            "--keys", "event_id",
-            "--version-col", "updated_ms",
-            "--target-rows-per-slice", "100",
-        ]
-    )
-    stats = run_single(args, spark)
-    assert stats["delta_rows"] > 0
-    assert stats["slices"] and stats["slices"] > 1  # ~rows/100 ranges
-
-    # without the flag the plan is skipped, exactly as before
-    args2 = _build_parser().parse_args(
-        [
-            "single",
-            "--source", src_path,
-            "--dest", str(tmp_path / "dst2"),
-            "--keys", "event_id",
-            "--version-col", "updated_ms",
-        ]
-    )
-    assert run_single(args2, spark)["slices"] is None
 
 
 def test_cli_keys_whitespace_stripped(spark, sf_small, tmp_path):

@@ -294,14 +294,12 @@ def test_cdc_foreachbatch_sync_restart_reads_only_delta(spark, tmp_path):
     )
     store = ParquetSyncedTable(spark, str(tmp_path / "cdc_dst"))
     ck = str(tmp_path / "cdc_ck")
-    counts1: list[int] = []
     q = stream_sync_cdc(
         spark, f"{tbl}/*.parquet", "row_id", store,
         keys=["key"], version_col="row_id", checkpoint_dir=ck,
-        batch_rows=counts1,
     )
     q.awaitTermination()
-    assert sum(counts1) == 10
+    assert sum(p.numInputRows for p in q.recentProgress) == 10
     d1 = {r["key"]: r["val"] for r in store.read().collect()}
     # LWW within run 1: key k's latest row_id wins (row_id 5..9)
     assert d1 == {k: float(k + 5) for k in range(5)}
@@ -313,13 +311,12 @@ def test_cdc_foreachbatch_sync_restart_reads_only_delta(spark, tmp_path):
         ),
         tbl / "p1.parquet",
     )
-    counts2: list[int] = []
     q2 = stream_sync_cdc(
         spark, f"{tbl}/*.parquet", "row_id", store,
         keys=["key"], version_col="row_id", checkpoint_dir=ck,
-        batch_rows=counts2,
     )
     q2.awaitTermination()
+    counts2 = [p.numInputRows for p in q2.recentProgress]
     assert sum(counts2) == 3, f"restart re-read more than the delta: {counts2}"
     d2 = {r["key"]: r["val"] for r in store.read().collect()}
     assert d2 == {0: 100.0, 1: 101.0, 2: 7.0, 3: 8.0, 4: 9.0, 97: 97.0}

@@ -80,8 +80,10 @@ def test_sync_converges_and_is_idempotent(spark, sf_small, tmp_path):
 def test_sync_continuous_loop(spark, sf_small, tmp_path):
     src = events_ms(spark, sf_small)
     store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
-    stats = sync_continuous(
-        lambda: src, store, KEYS, VER, iterations=3, delay_seconds=0, sleep=lambda _: None
+    stats = list(
+        sync_continuous(
+            lambda: src, store, KEYS, VER, iterations=3, delay_seconds=0, sleep=lambda _: None
+        )
     )
     assert len(stats) == 3
     assert store.read().count() == src.count()
