@@ -41,6 +41,19 @@ def _non_negative(kind):
     return parse
 
 
+def _parse_keys(text: str) -> list[str]:
+    """argparse ``type`` of ``--keys``: 'a, b' and 'a,b' both mean
+    [a, b] — un-stripped splitting hands the merge a key named ' b'
+    that fails analysis far from the CLI (r11 review). No key at all
+    (',') is refused before any Spark session starts."""
+    keys = [k.strip() for k in text.split(",") if k.strip()]
+    if not keys:
+        raise argparse.ArgumentTypeError(
+            f"needs at least one key column, got {text!r}"
+        )
+    return keys
+
+
 def _build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="pypgsync-spark", description=__doc__)
     sub = p.add_subparsers(dest="command", required=True)
@@ -52,7 +65,10 @@ def _build_parser() -> argparse.ArgumentParser:
         c.add_argument("--source", required=True, help="source parquet path")
         c.add_argument("--dest", required=True, help="destination store path")
         c.add_argument(
-            "--keys", required=True, help="comma-separated merge key columns"
+            "--keys",
+            type=_parse_keys,
+            required=True,
+            help="comma-separated merge key columns",
         )
         c.add_argument(
             "--version-col", required=True, help="monotone version column (epoch ms)"
@@ -97,7 +113,12 @@ def _build_parser() -> argparse.ArgumentParser:
         default=None,
         help="fixture/table directory (default: catalog.DEFAULT_SF_DIR)",
     )
-    q.add_argument("--limit", type=int, default=20, help="rows to print (JSON lines)")
+    q.add_argument(
+        "--limit",
+        type=_non_negative(int),
+        default=20,
+        help="rows to print (JSON lines)",
+    )
     q.add_argument("--master", default=None, help="spark master override")
     return p
 
@@ -136,13 +157,6 @@ def _load_source(
     return spark.read.parquet(path)
 
 
-def _parse_keys(keys: str) -> list[str]:
-    """'a, b' and 'a,b' both mean [a, b] — un-stripped splitting hands
-    the merge a key named ' b' that fails analysis far from the CLI
-    (r11 review)."""
-    return [k.strip() for k in keys.split(",") if k.strip()]
-
-
 def _sync_args(args, spark: SparkSession):
     from pypgsync_spark.sync import ParquetSyncedTable
 
@@ -171,7 +185,7 @@ def run_single(args, spark: SparkSession) -> dict:
 
     store, loader = _sync_args(args, spark)
     return _emit(
-        sync_table(loader(), store, keys=_parse_keys(args.keys), version_col=args.version_col)
+        sync_table(loader(), store, keys=args.keys, version_col=args.version_col)
     )
 
 
@@ -187,7 +201,7 @@ def run_continuous(args, spark: SparkSession, sleep=time.sleep) -> list[dict]:
     passes = sync_continuous(
         loader,
         store,
-        _parse_keys(args.keys),
+        args.keys,
         args.version_col,
         iterations=args.iterations,
         delay_seconds=args.delay,

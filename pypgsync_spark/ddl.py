@@ -16,9 +16,9 @@ re-expression:
   creates the destination table from the staged Arrow schema on first
   contact).
 - *Existence checks* go through ``spark.catalog`` — the engine-side
-  analogue of ``database_exists`` + the reflected-metadata probe —
-  with the same raise-on-missing-source / create-on-missing-dest
-  split the reference has.
+  analogue of ``database_exists`` + the reflected-metadata probe.
+  Callers get a boolean per table and pick the reference's branch
+  (raise on a missing source, clone a missing destination).
 
 Everything here is metadata-scale driver work (a handful of schema
 objects), exactly like the reference's reflection: no data moves.
@@ -155,28 +155,3 @@ def ensure_destination(
     if spark.catalog.tableExists(table):
         return ""
     return clone_table_ddl(src, table, primary_key=primary_key)
-
-
-class MissingTableError(RuntimeError):
-    """Typed existence failure — the reference's raise path
-    (session.py:188-192 raises RuntimeError when the source table is
-    absent; database-level failures raise earlier at :170-183)."""
-
-
-def init_sync(
-    spark: SparkSession,
-    source_table: str,
-    dest_table: str,
-    primary_key: list[str] | None = None,
-) -> str:
-    """The full ``_init_db`` contract (reference session.py:162-197):
-    verify the SOURCE table exists (raise :class:`MissingTableError`
-    otherwise — the reference's hard error), then clone the DESTINATION
-    from the source's schema when it is missing. Returns the clone DDL
-    that applies ('' when the destination already exists)."""
-    if not spark.catalog.tableExists(source_table):
-        raise MissingTableError(
-            f'Table "{source_table}" does not exist in source db'
-        )
-    src = spark.table(source_table)
-    return ensure_destination(spark, src, dest_table, primary_key=primary_key)

@@ -557,59 +557,6 @@ def knn_join(
     )
 
 
-def build_ivf_index(
-    vectors: DataFrame,
-    path: str,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "cell",
-) -> None:
-    """Persist the IVF index: vector-to-cell assignments written as
-    parquet PARTITIONED BY the cell, plus a metadata-scale centroid
-    sidecar. Write once; every query then reads ONLY its probed cells'
-    directories — the scan prunes at the partition level before any
-    row is touched, which is what makes IVF pay at 10⁸+ vectors
-    (SCALE.md's "write-once assignment partitioned by cell →
-    query-time partition pruning", now executable).
-    """
-    assigned = ivf_assign(vectors, centroids, id_col, vec_col, cell_col)
-    assigned.write.mode("overwrite").partitionBy(cell_col).parquet(f"{path}/cells")
-    spark = vectors.sparkSession
-    rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    spark.createDataFrame(rows, f"{cell_col} INT, centroid ARRAY<DOUBLE>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def ivf_topk_from_index(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "cell",
-    sim_col: str = "cos_sim",
-) -> DataFrame:
-    """Query the persisted IVF index: rank cells by centroid cosine
-    (driver-side — centroid count is metadata-scale), read only the
-    ``n_probe`` nearest cells' partitions, exact re-rank inside them.
-    The cell filter is a partition filter (`cell IN (...)` on the
-    partitioning column), so unprobed cells are never scanned."""
-    cents = (
-        spark.read.parquet(f"{path}/centroids")
-        .orderBy(cell_col)
-        .collect()
-    )
-    # seq_cosine: oracle-identical sequential fold (see its docstring)
-    sims = {r[cell_col]: seq_cosine(r["centroid"], query_vec) for r in cents}
-    probe = sorted(sims, key=lambda c: (-sims[c], c))[:n_probe]
-    cand = spark.read.parquet(f"{path}/cells").filter(F.col(cell_col).isin(probe))
-    return brute_force_topk(cand, query_vec, k, id_col, vec_col, sim_col)
-
-
 def cell_cosine_pairs(
     vectors: DataFrame,
     threshold: float,

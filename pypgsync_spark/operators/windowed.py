@@ -12,12 +12,9 @@ boundary list is exactly what ``spark.read.jdbc(predicates=...)``
 wants, so it earns its keep as a JDBC-partitioning planner.
 
 Scale note: a global (unpartitioned) ``row_number`` collapses to a
-single task. ``window_boundaries`` therefore offers an exact windowed
-path for moderate data and an ``approx`` path using
-``approxQuantile`` (Greenwald-Khanna, fully distributed) for the
-100 TB case, where boundaries only need to be *about* every N rows —
-the same tolerance the reference accepts from its EXPLAIN estimates
-(reference session.py:219-234).
+single task. ``row_number_boundaries`` keeps that reference-literal
+plan (w1); ``distributed_row_number`` is the 100 TB-safe rank, whose
+only wide stage is a range exchange.
 """
 
 from __future__ import annotations
@@ -112,22 +109,3 @@ def distributed_row_number(
         .withColumn(out, (F.col("__lrn") + off_map[F.col("__pid")]).cast("long"))
         .drop("__pid", "__lrn")
     )
-
-
-def window_boundaries(
-    df: DataFrame, column: str, window_size: int, approx: bool = False
-) -> list[int | float]:
-    """Sorted boundary values of ``column``, one per ~``window_size`` rows.
-
-    ``approx=True`` uses distributed quantile sketches instead of the
-    single-task global sort — the scale path.
-    """
-    if approx:
-        n = df.count()
-        if n == 0:
-            return []
-        k = max(1, n // window_size)
-        probs = [i / k for i in range(k)]
-        return df.stat.approxQuantile(column, probs, 0.001)
-    return [r[column] for r in row_number_boundaries(df, column, window_size).collect()]
-

@@ -108,34 +108,3 @@ def plan_slices(
         estimated_rows=estimated_rows,
         slices=closed_intervals(low, high, width),
     )
-
-
-def quantile_bounds(df, column: str, n_slices: int) -> list[int]:
-    """Equal-ROWS slice boundaries for a skewed version column: the
-    floor of the exact interpolated percentiles at i/n_slices. The
-    uniform grid (closed_intervals / plan_slices) assigns equal VALUE
-    ranges — right for near-uniform `updated` distributions, badly
-    unbalanced for bursty ones (one hot day = one fat slice). These
-    boundaries feed the same consumers (JDBC predicate lists,
-    read_with_slice_plan) with each slice carrying ~rows/n_slices.
-
-    Driver-side plan metadata (n_slices-1 numbers), like every other
-    planner output. The exact percentile sorts per group at scale —
-    swap `percentile` for `approx_percentile` there (rank error just
-    skews slice sizes a little; correctness of the slices does not
-    depend on boundary precision).
-    """
-    from pyspark.sql import functions as F
-
-    if n_slices < 1:
-        raise ValueError(f"n_slices must be >= 1, got {n_slices}")
-    fracs = [i / n_slices for i in range(1, n_slices)]
-    if not fracs:
-        return []
-    row = df.agg(F.percentile(column, fracs).alias("bs")).first()
-    if row is None or row["bs"] is None:
-        # percentile over zero rows (or an all-NULL column) is NULL —
-        # an empty delta plans as zero boundaries, matching
-        # plan_slices' empty handling, instead of an opaque TypeError.
-        return []
-    return [int(x // 1) for x in row["bs"]]

@@ -812,7 +812,7 @@ _C7_FRACS = "0.125, 0.25, 0.375, 0.5, 0.625, 0.75, 0.875"
     "c7_quantile_slices",
     bench=47,
     survey="C2,C1,A6,X2",
-    doc="Equal-ROWS slice planning (plans/intervals.quantile_bounds): "
+    doc="Equal-ROWS slice planning, the boundaries computed in-plan: "
     "boundaries at the eighth percentiles of updated_ms instead of a "
     "uniform value grid — the scale-correct slicing for skewed "
     "version columns (a bursty day makes one fat uniform slice; "

@@ -1,30 +1,18 @@
-"""JDBC source/sink — the reference-faithful Postgres edges.
+"""JDBC upsert sink — the reference's Postgres write edge, for deploy time.
 
-The reference reads each slice with
-``SELECT * WHERE updated BETWEEN lo AND hi ORDER BY updated``
-(reference session.py:127-133) and writes with batched
-``INSERT ... ON CONFLICT (pk) DO UPDATE`` (reference session.py:135-151).
+The reference writes with batched ``INSERT ... ON CONFLICT (pk) DO
+UPDATE`` (reference session.py:135-151). Spark's JDBC writer has no
+upsert mode, so :func:`write_upsert` is a ``foreachPartition`` that
+issues the statement :func:`upsert_sql` renders, multi-row per batch.
+Executors write in parallel; the statement is idempotent on the key, so
+retries are safe (the reference's crash-resume property, README.md:90).
 
-Spark-native mapping:
-- read: ``spark.read.jdbc`` with either ``partitionColumn/lowerBound/
-  upperBound/numPartitions`` (uniform ranges) or explicit
-  ``predicates=`` rendered from a :class:`~pypgsync_spark.plans.SlicePlan`
-  (the reference's EXPLAIN-estimated slices). Each predicate becomes one
-  parallel executor-side cursor — the reference's chunked fetch
-  (session.py:67-81) without the hand-rolled pagination.
-- write: Spark's JDBC writer has no upsert mode, so the sink is a
-  ``foreachPartition`` that issues multi-row ``INSERT ... ON CONFLICT``
-  statements. Executors write in parallel; idempotent on PK, so retries
-  are safe (the reference's crash-resume property, README.md:90).
-
-No Postgres is available in the test container, but the statements
-these paths render are EXECUTED against a live DuckDB database in
-tests: the ON CONFLICT upsert sink in tests/test_upsert_exec.py
-(rendered statement applied through a real connection, convergence
-asserted) and the slice-scan/CDC source in tests/test_cdc_exec.py
-(four micro-batches against a concurrently-upserted table — delta
-exactness, checkpoint-restart resume). Only the Postgres wire
-protocol itself is untested here; the pure-Spark merge
+No Postgres is available in the test container, but the rendered
+statement is EXECUTED against a live DuckDB database in
+tests/test_upsert_exec.py (applied through a real connection,
+convergence asserted). Only the Postgres wire protocol itself is
+untested here. The sink the sync path runs is ``pypgsync_upsert``
+(:mod:`pypgsync_spark.sources.pysource`), and the pure-Spark merge
 (:mod:`pypgsync_spark.operators.merge`) is the in-engine equivalent.
 """
 
@@ -32,51 +20,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
-
-from pypgsync_spark.plans.intervals import SlicePlan
-
-
-def read_range_partitioned(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    column: str,
-    lower: int,
-    upper: int,
-    num_partitions: int,
-    properties: dict[str, str] | None = None,
-    fetchsize: int = 10_000,
-) -> DataFrame:
-    """Partitioned JDBC range scan: Spark's native form of the
-    reference's slice machinery (uniform split of [lower, upper])."""
-    props = {"fetchsize": str(fetchsize), **(properties or {})}
-    return spark.read.jdbc(
-        url=url,
-        table=table,
-        column=column,
-        lowerBound=lower,
-        upperBound=upper,
-        numPartitions=num_partitions,
-        properties=props,
-    )
-
-
-def read_with_slice_plan(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    column: str,
-    plan: SlicePlan,
-    properties: dict[str, str] | None = None,
-    fetchsize: int = 10_000,
-) -> DataFrame:
-    """JDBC scan partitioned by an explicit slice plan (one predicate
-    per ~10M-row slice, reference session.py:236-240)."""
-    props = {"fetchsize": str(fetchsize), **(properties or {})}
-    return spark.read.jdbc(
-        url=url, table=table, predicates=plan.jdbc_predicates(column), properties=props
-    )
+from pyspark.sql import DataFrame
 
 
 # Parameter placeholder style per DB-API driver family.
@@ -212,68 +156,3 @@ def write_upsert(
             conn.close()
 
     df.foreachPartition(write_partition)
-
-
-def slice_select_sql(
-    table: str, columns: Sequence[str], column: str, dialect: str = "postgresql"
-) -> str:
-    """The reference's slice read, statement-for-statement (reference
-    session.py:126-133): every column, an inclusive BETWEEN pair on the
-    version column, ascending ORDER BY — in the psycopg2 pyformat
-    paramstyle its SQLAlchemy compile would bind (``%(updated_1)s`` /
-    ``%(updated_2)s``). One of these executes per slice, each on its
-    own executor cursor under ``spark.read.jdbc(predicates=...)``.
-    """
-    ph = _PLACEHOLDER.get(dialect, "?")
-    lo = f"%({column}_1)s" if ph == "%s" else ph
-    hi = f"%({column}_2)s" if ph == "%s" else ph
-    collist = ", ".join(f"{table}.{c}" for c in columns)
-    return (
-        f"SELECT {collist} FROM {table} "
-        f"WHERE {table}.{column} >= {lo} AND {table}.{column} <= {hi} "
-        f"ORDER BY {table}.{column} ASC"
-    )
-
-
-def window_boundaries_sql(
-    table: str, column: str, windowsize: int, dialect: str = "postgresql"
-) -> str:
-    """The reference's chunk-boundary probe (reference
-    session.py:243-292, its ``windowed_query``): global ROW_NUMBER over
-    the version column, keep every ``windowsize``-th row — the servers'
-    keyset boundaries that let the client fetch chunks without the
-    server materializing the whole resultset. The Spark-native
-    equivalent is :func:`pypgsync_spark.operators.windowed.
-    row_number_boundaries`; this emitter exists for JDBC parity tests.
-    """
-    ph = _PLACEHOLDER.get(dialect, "?")
-    lo = f"%({column}_1)s" if ph == "%s" else ph
-    hi = f"%({column}_2)s" if ph == "%s" else ph
-    q = (
-        f"SELECT anon_1.{column} FROM "
-        f"(SELECT {table}.{column} AS {column}, "
-        f"row_number() OVER (ORDER BY {table}.{column}) AS rownum "
-        f"FROM {table} "
-        f"WHERE {table}.{column} >= {lo} AND {table}.{column} <= {hi}) AS anon_1"
-    )
-    if windowsize > 1:
-        q += f" WHERE rownum % {int(windowsize)}=1"
-    return q
-
-
-def attrs_to_jdbc_url(
-    user: str, passwd: str, host: str, port: str | int, db: str
-) -> tuple[str, dict[str, str]]:
-    """Connection attributes → (JDBC url, properties) — the Spark form
-    of the reference's ``attrs_to_uri`` (reference utils.py:5-13,
-    including its all-arguments-present ValueError). Credentials ride
-    in the properties dict, not the URL: ``spark.read.jdbc(url,
-    properties=...)`` is the API shape, and URLs end up in logs/plans
-    where passwords must not.
-    """
-    vals = {"user": user, "passwd": passwd, "host": host, "port": port, "db": db}
-    if any(str(v) == "" for v in vals.values()):
-        raise ValueError("All arguments must be present.")
-    url = f"jdbc:postgresql://{host}:{port}/{db}"
-    props = {"user": user, "password": passwd, "driver": "org.postgresql.Driver"}
-    return url, props

@@ -49,76 +49,3 @@ def write_date_partitioned(
 
 def read_date_partitioned(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-def compact_date_partitions(
-    spark: SparkSession,
-    path: str,
-    dates: list | None = None,
-    rows_per_file: int = 1_000_000,
-    shards_per_date: int = 1,
-) -> None:
-    """Rewrite the given date partitions (default: all) into few,
-    right-sized files.
-
-    Streaming/micro-batch ingest leaves one-or-more files PER TRIGGER
-    per partition; at 100 TB the resulting file-count explosion is the
-    classic small-file problem (every file is a scan task and a
-    metadata round-trip). Compaction = read the partitions back,
-    repartition so each date lands in ``shards_per_date`` tasks
-    (one per date by default; raise it for hot dates so a single day
-    never serializes through one task), and dynamic-overwrite JUST
-    those partitions — untouched dates keep their files bit-for-bit.
-    ``maxRecordsPerFile`` caps file size (a record-count proxy chosen
-    by the caller from its average row width).
-
-    The read is ``localCheckpoint``-ed before the write: Spark
-    (correctly) refuses to overwrite a path its output plan still
-    reads, and the checkpoint cuts that lineage. Compact date-by-date
-    (``dates``) to bound what is materialized at once.
-
-    Compacting the output of a STOPPED streaming file sink finalizes
-    it into a plain batch table: the sink's ``_spark_metadata``
-    transaction log (which pins the pre-compaction file list) is
-    removed after the rewrite — leaving it would make every subsequent
-    read resolve deleted files. Do not compact under a live stream.
-    """
-    df = read_date_partitioned(spark, path)
-    if dates is not None:
-        df = df.filter(F.col(DATE_COL).isin([str(d) for d in dates]))
-    # pin the partition column's string form: the read infers DATE and
-    # the rewrite must land in the identical directory names
-    df = df.withColumn(DATE_COL, F.col(DATE_COL).cast("string"))
-    if shards_per_date > 1:
-        shard = F.pmod(F.xxhash64(*df.columns), F.lit(shards_per_date))
-        df = df.repartition(F.col(DATE_COL), shard)
-    else:
-        df = df.repartition(F.col(DATE_COL))
-    df = df.localCheckpoint(eager=True)
-    (
-        df.write.format("parquet")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("maxRecordsPerFile", rows_per_file)
-        .partitionBy(DATE_COL)
-        .mode("overwrite")
-        .save(path)
-    )
-    # Storage ops go through the Hadoop FileSystem API, NOT os/shutil:
-    # this layout is explicitly the object-store path, and a local-only
-    # rmtree would silently leave the streaming transaction log behind
-    # on s3a://-style URIs (round-5 advisor) — making every subsequent
-    # read resolve the pre-compaction (deleted) file list.
-    _hadoop_delete_if_dir(spark, f"{path}/_spark_metadata")
-
-
-def _hadoop_delete_if_dir(spark: SparkSession, uri: str) -> bool:
-    """Recursively delete ``uri`` if it exists as a directory, via the
-    JVM Hadoop FileSystem resolved FOR THAT URI's scheme (local file://,
-    hdfs://, s3a://, ... — whatever the session's Hadoop conf knows).
-    Returns True when something was deleted."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(uri)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(p) and fs.getFileStatus(p).isDirectory():
-        return bool(fs.delete(p, True))
-    return False

@@ -3,10 +3,10 @@
 The reference reads its source RDBMS in bounded slices — one SQL cursor
 per watermark range, rows fetched in chunks (reference session.py:127-151,
 SURVEY §2.1 S1/S2). On a JVM cluster that maps to
-``spark.read.jdbc(partitionColumn=..., numPartitions=...)``
-(sources/jdbc.py); this module implements the SAME contract as a native
-Spark V2 source in pure Python so the slice machinery is *executable and
-driver-testable in this sandbox*, with DuckDB standing in for the RDBMS:
+``spark.read.jdbc(partitionColumn=..., numPartitions=...)``; this
+module implements the SAME contract as a native Spark V2 source in pure
+Python so the slice machinery is *executable and driver-testable in this
+sandbox*, with DuckDB standing in for the RDBMS:
 
 - ``partitions()`` plans one :class:`InputPartition` per closed slice of
   ``partition_column`` (``plans.intervals.closed_intervals`` — the exact

@@ -26,11 +26,12 @@ generation.
 
 ``SyncedTable`` abstracts the destination store. The parquet
 implementation here is the test substrate; a Delta/Iceberg MERGE INTO
-or the JDBC upsert sink (sources/jdbc.py) are drop-in alternatives at
-deploy time. Like a table format's commit log, each parquet generation
-carries a small commit file (``_commit.json``: the written schema and,
-from ``sync_table``, the version column's MAX), so reading the store
-infers no schema and the next pass's low watermark needs no scan.
+or the ``pypgsync_upsert`` SQL sink (sources/pysource.py) are drop-in
+alternatives at deploy time. Like a table format's commit log, each
+parquet generation carries a small commit file (``_commit.json``: the
+written schema and, from ``sync_table``, the version column's MAX), so
+reading the store infers no schema and the next pass's low watermark
+needs no scan.
 
 The commit also lists the source files the pass consumed, as
 ``{path: [size, mtime]}`` (the seen-files log of Spark's own
@@ -221,6 +222,9 @@ def sync_once(
     source, and the same aggregate reads its MIN version as the low
     watermark (:func:`low_watermark`'s answer, without its own job).
     """
+    if not keys:
+        # a cold start would otherwise keep one row of the whole delta
+        raise ValueError("merge requires at least one key column")
     high = high if high is not None else now_millis()
 
     def no_op(low):

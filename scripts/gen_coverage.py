@@ -57,10 +57,10 @@ SURVEY_IDS = {
 
 # Covered by engine code + pytest rather than a driver query.
 NON_QUERY_COVERAGE = {
-    "S1": "sources/jdbc.py read_range_partitioned/read_with_slice_plan "
-          "(+ c2_slice_plan renders the predicates; SQL text unit-tested)",
-    "S2": "subsumed by Spark partitioning + JDBC fetchsize "
-          "(sources/jdbc.py, tests/test_skew_jdbc.py)",
+    "S1": "c2_slice_plan renders the JDBC predicates "
+          "(plans/intervals.py SlicePlan.jdbc_predicates)",
+    "S2": "subsumed by Spark partitioning + the slice reader's fetch_size "
+          "(sources/pysource.py)",
     "S4": "JDBC writer batchsize / parquet vectorized writes "
           "(sources/jdbc.py write_upsert execute_batch)",
     "S5": "ParquetSyncedTable.write auto-creates dest (sync.py; "

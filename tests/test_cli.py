@@ -129,6 +129,33 @@ def test_cli_rejects_negative_delay_and_iterations(flag, value, capsys):
     assert f"argument {flag}: must be >= 0" in capsys.readouterr().err
 
 
+@pytest.mark.parametrize(
+    "command, keys", [("single", ","), ("continuous", " , "), ("single", "")]
+)
+def test_cli_rejects_empty_keys(command, keys, capsys):
+    """'--keys ,' parsed to no key at all and the cold start kept one
+    row of the whole source, exiting 0."""
+    from pypgsync_spark.cli import _build_parser
+
+    argv = [command, "--source", "s", "--dest", "d", "--keys", keys,
+            "--version-col", "v"]
+    with pytest.raises(SystemExit) as exc:
+        _build_parser().parse_args(argv)
+    assert exc.value.code == 2
+    assert "argument --keys: needs at least one key column" in capsys.readouterr().err
+
+
+def test_cli_query_rejects_negative_limit(capsys):
+    """'query --limit -1' used to reach Spark and fail there with
+    INVALID_LIMIT_LIKE_EXPRESSION and a JVM stack trace."""
+    from pypgsync_spark.cli import _build_parser
+
+    with pytest.raises(SystemExit) as exc:
+        _build_parser().parse_args(["query", "a6_count_star", "--limit", "-1"])
+    assert exc.value.code == 2
+    assert "argument --limit: must be >= 0" in capsys.readouterr().err
+
+
 @given(
     start=st.integers(min_value=-10**12, max_value=10**12),
     span=st.integers(min_value=0, max_value=10**6),

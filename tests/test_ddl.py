@@ -114,24 +114,6 @@ def test_check_tables_and_ensure_destination(spark, sf_small):
     spark.catalog.dropTempView("ddl_src_present")
 
 
-def test_init_sync_contract(spark, sf_small):
-    import pytest as _pytest
-
-    from pypgsync_spark.catalog import load_table
-    from pypgsync_spark.ddl import MissingTableError, init_sync
-
-    load_table(spark, sf_small, "nation").createOrReplaceTempView("init_src")
-    # missing source -> typed raise (reference session.py:188-192)
-    with _pytest.raises(MissingTableError):
-        init_sync(spark, "init_src_missing", "whatever")
-    # present source, missing destination -> clone DDL
-    ddl = init_sync(spark, "init_src", "init_dst", primary_key=["n_nationkey"])
-    assert ddl.startswith('CREATE TABLE IF NOT EXISTS "init_dst"')
-    # present destination -> no-op
-    assert init_sync(spark, "init_src", "init_src") == ""
-    spark.catalog.dropTempView("init_src")
-
-
 def test_clone_ddl_qualified_destination(spark):
     """'analytics.events' renders as "analytics"."events" — quoting the
     dotted name as ONE identifier would create a mis-named table in the

@@ -83,43 +83,3 @@ def test_plan_slices_always_cover(low, span, rows):
     assert plan.slices, "non-empty delta must yield at least one slice"
     assert plan.slices[0][0] == low
     assert plan.slices[-1][1] == high
-
-
-def test_quantile_bounds_balances_rows(spark, sf_small):
-    from pypgsync_spark.catalog import load_table
-    from pypgsync_spark.functions.time import to_millis
-    from pypgsync_spark.plans.intervals import quantile_bounds
-
-    ev = load_table(spark, sf_small, "events").select(
-        to_millis("ts").alias("updated_ms")
-    )
-    bounds = quantile_bounds(ev, "updated_ms", 4)
-    assert len(bounds) == 3 and bounds == sorted(bounds)
-    n = ev.count()
-    # boundaries are floor(percentile): each open-left bucket holds
-    # ~n/4 rows (exact when values are distinct enough)
-    rows = [r["updated_ms"] for r in ev.collect()]
-    prev = None
-    for b in bounds:
-        got = sum(1 for v in rows if (prev is None or v > prev) and v <= b)
-        assert abs(got - n / 4) <= max(2, n * 0.02)
-        prev = b
-
-
-def test_quantile_bounds_empty_delta_returns_empty(spark, sf_small):
-    """Advisor r6: percentile over zero rows yields NULL — the planner
-    must return [] (an empty delta plans no slices), not crash with an
-    opaque TypeError; single-slice plans need no boundaries at all."""
-    import pytest
-
-    from pypgsync_spark.catalog import load_table
-    from pypgsync_spark.functions.time import to_millis
-    from pypgsync_spark.plans.intervals import quantile_bounds
-
-    ev = load_table(spark, sf_small, "events").select(
-        to_millis("ts").alias("updated_ms")
-    )
-    assert quantile_bounds(ev.filter("updated_ms < 0"), "updated_ms", 4) == []
-    assert quantile_bounds(ev, "updated_ms", 1) == []
-    with pytest.raises(ValueError):
-        quantile_bounds(ev, "updated_ms", 0)

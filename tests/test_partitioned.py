@@ -85,46 +85,10 @@ def test_date_predicate_prunes_partitions(spark, sf_small, tmp_path):
     assert q.count() == df.filter(F.col(DATE_COL) == F.lit(one_date)).count()
 
 
-def test_compaction_collapses_small_files(spark, sf_small, tmp_path):
-    """Micro-batch-shaped appends leave many files per date; compaction
-    must collapse each targeted date to one file, keep every row, and
-    leave untargeted dates physically untouched."""
-    from pypgsync_spark.sources.partitioned import compact_date_partitions
-
-    df = _events(spark, sf_small)
-    path = str(tmp_path / "compact")
-    # simulate 5 micro-batch appends → ≥5 files per date
-    for i in range(5):
-        write_date_partitioned(
-            df.filter(F.col("event_id") % 5 == i), path, mode="append"
-        )
-    before = _part_files(path)
-    assert all(len(files) >= 5 for files in before.values()), before
-    n_rows = read_date_partitioned(spark, path).count()
-
-    dates = sorted(before)
-    targeted = [d.split("=")[1] for d in dates[:2]]
-    compact_date_partitions(spark, path, dates=targeted)
-
-    after = _part_files(path)
-    for d in dates[:2]:
-        assert len(after[d]) == 1, (d, after[d])
-    for d in dates[2:]:
-        assert after[d] == before[d], f"{d} must be untouched"
-    assert read_date_partitioned(spark, path).count() == n_rows
-
-    # full compaction (no dates filter) collapses the rest too
-    compact_date_partitions(spark, path)
-    assert all(len(files) == 1 for files in _part_files(path).values())
-    assert read_date_partitioned(spark, path).count() == n_rows
-
-
 def test_streaming_ingest_into_partitioned_layout(spark, sf_small, tmp_path):
     """Structured Streaming file sink writes straight into the same
-    event_date layout (writeStream.partitionBy); the batch reader and
-    compaction operate on its output unchanged."""
-    from pypgsync_spark.sources.partitioned import compact_date_partitions
-
+    event_date layout (writeStream.partitionBy); the batch reader
+    operates on its output unchanged."""
     df = _events(spark, sf_small)
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
@@ -146,7 +110,4 @@ def test_streaming_ingest_into_partitioned_layout(spark, sf_small, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    assert read_date_partitioned(spark, out).count() == df.count()
-    compact_date_partitions(spark, out)
-    assert all(len(files) == 1 for files in _part_files(out).values())
     assert read_date_partitioned(spark, out).count() == df.count()

@@ -1,6 +1,6 @@
 """seq_cosine's contract is BIT-identity with the oracle kernel.
 
-Driver-side probe rankings (ivf_topk, ivf_topk_from_index, v8) compare
+Driver-side probe rankings (ivf_topk, v8) compare
 raw unrounded doubles, so the fold must reproduce DuckDB's
 list_dot_product / sqrt composition exactly — not approximately.
 Property-tested here against a live DuckDB so the claim can never

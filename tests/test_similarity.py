@@ -162,39 +162,6 @@ def test_knn_join_k_larger_than_blocks(spark, sf_small):
     assert all(r["count"] == 10 for r in out)
 
 
-def test_ivf_persisted_index_prunes_partitions(spark, sf_small, tmp_path):
-    """The persisted IVF index (SCALE.md's write-once-assignment scale
-    path, now executable): querying it must (1) return exactly what the
-    inline ivf_topk returns for the same centroids/probes, and (2) scan
-    ONLY the probed cells — the cell filter lands in the parquet scan's
-    PartitionFilters, so unprobed directories are never read."""
-    from pypgsync_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_topk_from_index,
-    )
-
-    emb = _emb(spark, sf_small)
-    q = _qvec(spark, sf_small)
-    cents = [
-        list(r["embedding"])
-        for r in emb.filter(F.col("vec_id") < 8).orderBy("vec_id").collect()
-    ]
-    path = str(tmp_path / "ivf")
-    build_ivf_index(emb, path, cents)
-
-    got = ivf_topk_from_index(spark, path, q, k=10, n_probe=2)
-    want = ivf_topk(ivf_assign(emb, cents), cents, q, k=10, n_probe=2)
-    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
-
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan
-    # the pruned scan reads at most n_probe of the 8 cell directories
-    import re
-
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "cell" in m.group(1), plan[:500]
-
-
 def test_cell_gemm_bounds_hot_cell_and_matches_exact(spark):
     """r8 verdict #5 — the j8 hot-key pattern applied to SemDeDup's
     cell-blocked GEMM (d14): on a power-law fixture where ONE cell

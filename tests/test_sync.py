@@ -4,6 +4,7 @@ the Structured-Streaming foreachBatch form (SURVEY §5.3)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pypgsync_spark.catalog import load_table
@@ -53,6 +54,20 @@ def test_sync_once_noop_when_caught_up(spark, sf_small):
     # destination already at src max; high watermark below it → no-op
     merged, stats = sync_once(src, src, KEYS, VER, high=0)
     assert stats.delta_rows == 0
+
+
+def test_empty_keys_refused_before_any_write(spark, sf_small, tmp_path):
+    """With no key column, a cold start used to collapse the whole delta
+    through a latest-per-key window with no partition: one row landed."""
+    src = events_ms(spark, sf_small)
+    store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
+    with pytest.raises(ValueError, match="at least one key column"):
+        sync_once(src, None, [], VER, high=2**62)
+    with pytest.raises(ValueError, match="at least one key column"):
+        sync_table(src, store, [], VER)
+    with pytest.raises(ValueError, match="at least one key column"):
+        next(sync_continuous(lambda: src, store, [], VER, iterations=1))
+    assert store.read() is None
 
 
 def test_sync_converges_and_is_idempotent(spark, sf_small, tmp_path):

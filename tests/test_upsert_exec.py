@@ -7,7 +7,7 @@ the identical ``INSERT ... ON CONFLICT (keys) DO UPDATE SET col =
 excluded.col`` syntax, so these tests close the last
 not-actually-executed seam: they run the rendered statement batch-by-
 batch against a real DuckDB table with a real PRIMARY KEY — mirroring
-``write_upsert``'s partition writer loop (jdbc.py:171, psycopg2
+``write_upsert``'s partition writer loop (sources/jdbc.py, psycopg2
 ``execute_batch`` -> duckdb ``executemany``; only the placeholder
 token differs, ``%s`` vs ``?``) — and assert the surviving table is
 byte-identical to ``upsert_merge`` + ``ParquetSyncedTable`` applied to
@@ -150,36 +150,4 @@ def test_do_nothing_degenerate_executes(spark):
     conn.execute("CREATE TABLE only_keys (id BIGINT PRIMARY KEY)")
     _duck_apply(conn, sql, [(1,), (2,), (1,)])
     assert conn.execute("SELECT count(*) FROM only_keys").fetchone()[0] == 2
-    conn.close()
-
-
-def test_slice_select_sql_executes_equivalent_to_predicate_read(spark):
-    """The OTHER half of the reference's SQL surface, executed: the
-    slice read (session.py:126-133) rendered for the duckdb dialect
-    runs with real bound parameters and must return exactly the rows
-    Spark's equivalent range predicate selects, in version order —
-    the statement a JDBC executor cursor would run per slice."""
-    from pypgsync_spark.sources.jdbc import slice_select_sql
-
-    rows = [(i, 1000 + (i * 7) % 500, float(i), f"n{i}") for i in range(300)]
-    conn = duckdb.connect()
-    conn.execute(
-        "CREATE TABLE src (id BIGINT, updated BIGINT, value DOUBLE, note VARCHAR)"
-    )
-    conn.executemany("INSERT INTO src VALUES (?, ?, ?, ?)", rows)
-    sql = slice_select_sql("src", COLS, "updated", dialect="duckdb")
-    assert "BETWEEN" not in sql  # reference renders >= AND <=, not BETWEEN
-    df = _spark_df(spark, rows)
-    for lo, hi in ((1000, 1100), (1200, 1499), (1499, 1499), (900, 999)):
-        got = conn.execute(sql, [lo, hi]).fetchall()
-        want = [
-            (r["id"], r["updated"], r["value"], r["note"])
-            for r in df.filter(
-                (df.updated >= lo) & (df.updated <= hi)
-            ).orderBy("updated").collect()
-        ]
-        # ORDER BY updated is not a total order; compare as multisets
-        # plus the version ordering the cursor contract promises
-        assert sorted(got) == sorted(want)
-        assert [r[1] for r in got] == sorted(r[1] for r in got)
     conn.close()
