@@ -102,10 +102,8 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    """Every requested fixture table that exists under ``sf_dir``.
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Every fixture table (``TABLES``) that exists under ``sf_dir``.
 
     Missing INDIVIDUAL tables are skipped (subset fixtures are legal);
     ZERO tables found is an error — that's a typo'd/missing directory,
@@ -113,18 +111,18 @@ def load_tables(
     TABLE_OR_VIEW_NOT_FOUND deep inside a query (r11 review)."""
     out = {
         n: load_table(spark, sf_dir, n)
-        for n in names
+        for n in TABLES
         if _path_exists(spark, table_path(sf_dir, n))
     }
-    if names and not out:
+    if not out:
         raise FileNotFoundError(
             f"no fixture tables found under {sf_dir!r} "
-            f"(looked for {', '.join(names)})"
+            f"(looked for {', '.join(TABLES)})"
         )
     return out
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register temp views so queries can use spark.sql(...) directly."""
-    for n, df in load_tables(spark, sf_dir, names).items():
+    for n, df in load_tables(spark, sf_dir).items():
         df.createOrReplaceTempView(n)

@@ -145,10 +145,7 @@ def run_query(args, spark: SparkSession) -> int:
 
 
 def _load_source(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    partition_column: str = "event_id",
+    spark: SparkSession, path: str, fmt: str, partition_column: str
 ) -> DataFrame:
     if fmt == "sql":
         from pypgsync_spark.sources.pysource import read_sql_table
@@ -164,10 +161,7 @@ def _sync_args(args, spark: SparkSession):
 
     def loader():
         return _load_source(
-            spark,
-            args.source,
-            fmt=getattr(args, "source_format", "parquet"),
-            partition_column=getattr(args, "partition_column", "event_id"),
+            spark, args.source, args.source_format, args.partition_column
         )
 
     return store, loader

@@ -109,8 +109,6 @@ def _merge_pair(syms: Column, left: str, right: str) -> Column:
 def train_bpe(
     words: DataFrame,
     n_merges: int,
-    word_col: str = "word",
-    freq_col: str = "freq",
     min_pair_freq: int = 2,
     driver_vocab_limit: int = 2_000_000,
 ) -> list[tuple[str, str]]:
@@ -139,7 +137,7 @@ def train_bpe(
         # ONE job probes and collects: limit(n+1) caps the transfer, so
         # an over-limit vocabulary ships at most n+1 rows before the
         # distributed path takes over.
-        probe = words.select(word_col, freq_col).limit(
+        probe = words.select("word", "freq").limit(
             driver_vocab_limit + 1
         ).collect()
         if len(probe) <= driver_vocab_limit:
@@ -150,10 +148,7 @@ def train_bpe(
                 # last-wins would silently diverge on non-unique input
                 wf[r[0]] = wf.get(r[0], 0) + r[1]
             return train_bpe_reference(wf, n_merges, min_pair_freq)
-    vocab = words.select(
-        F.col(freq_col).alias("freq"),
-        _initial_symbols(F.col(word_col)).alias("syms"),
-    )
+    vocab = words.select("freq", _initial_symbols(F.col("word")).alias("syms"))
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
         top = (

@@ -2,8 +2,8 @@
 
 Five dedup families, each a first-class operator designed for 100 TB:
 
-- exact: hash-groupBy on the content (or its md5 fingerprint) — one
-  shuffle on the fingerprint, min-id wins (deterministic).
+- exact: hash-groupBy on the normalized content's md5 fingerprint —
+  one shuffle on the fingerprint, min-id wins (deterministic).
 - n-gram Jaccard: the AllPairs/PPJoin prefix-filter join
   (:func:`ppjoin_pairs`, self or cross) — candidates share a prefix
   shingle under one rarest-first order, then exact Jaccard verifies
@@ -57,26 +57,34 @@ _SHINGLE_CACHE: list[DataFrame] = []
 # then drops, never toward losing one.
 _EPS = 1e-9
 
+# MinHash-LSH geometry of the batch self-join (minhash_lsh_pairs), the
+# band index (lsh_band_index_write) and its probe
+# (incremental.lsh_index_screen): word n-gram length, permutations, and
+# the default band count. 16 bands of r=4 rows put the S-curve midpoint
+# near j≈(1/16)^(1/4)≈0.5; candidates well below the threshold are
+# dropped by the exact verify.
+LSH_N = 3
+LSH_NUM_PERM = 64
+LSH_BANDS = 16
 
-def _perm_coeffs(num_perm: int, seed: int = 42) -> tuple[list[int], list[int]]:
+
+def _perm_coeffs(num_perm: int) -> tuple[list[int], list[int]]:
     """Deterministic (a_i, b_i) pairs for the universal hash family
     h_i(x) = (a_i·x + b_i) mod 2^31-1."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(42)
     a = [rng.randrange(1, _MERSENNE_31) for _ in range(num_perm)]
     b = [rng.randrange(0, _MERSENNE_31) for _ in range(num_perm)]
     return a, b
 
 
-def dedup_exact(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", normalized: bool = True
-) -> DataFrame:
-    """Keep one row per distinct content: the row with the minimum id
-    (deterministic, oracle-friendly — ``dropDuplicates`` would keep an
-    arbitrary row). Shuffles once on the fingerprint, not the full text."""
-    fp = content_fingerprint(F.col(text_col)) if normalized else F.md5(F.col(text_col))
-    w = Window.partitionBy(fp).orderBy(F.col(id_col))
+def dedup_exact(df: DataFrame) -> DataFrame:
+    """Keep one row per distinct normalized ``text``: the row with the
+    minimum ``doc_id`` (deterministic, oracle-friendly —
+    ``dropDuplicates`` would keep an arbitrary row). Shuffles once on
+    the fingerprint, not the full text."""
+    w = Window.partitionBy(content_fingerprint(F.col("text"))).orderBy(F.col("doc_id"))
     return (
         df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
     )
@@ -186,14 +194,12 @@ def with_shingles(
     )
 
 
-def hashed_shingles(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """``(id_col, shingles)``: the distinct xxhash64 of every n-word
+def hashed_shingles(df: DataFrame, n: int = 3) -> DataFrame:
+    """``(doc_id, shingles)``: the distinct xxhash64 of every n-word
     shingle string :func:`with_shingles` builds, in one higher-order
     function pass over the :func:`let_bound` tokens — each shingle
     string is hashed where it is joined, so no string array is built,
-    distincted and walked again. NULL text gives NULL shingles.
+    distincted and walked again. NULL ``text`` gives NULL shingles.
 
     The hashes are exactly those of ``with_shingles`` followed by
     ``array_distinct(transform(shingles, xxhash64))`` (same strings,
@@ -208,8 +214,8 @@ def hashed_shingles(
         )
         return F.when(t.isNotNull(), F.array_distinct(hashes))
 
-    return spread_if_underpartitioned(df.select(id_col, text_col)).select(
-        id_col, let_bound(tokens(F.col(text_col)), of).alias("shingles")
+    return spread_if_underpartitioned(df.select("doc_id", "text")).select(
+        "doc_id", let_bound(tokens(F.col("text")), of).alias("shingles")
     )
 
 
@@ -346,13 +352,11 @@ def jaccard_verify(pairs: DataFrame, a: str, b: str, threshold: float) -> DataFr
     )
 
 
-def ppjoin_pairs(
-    a: DataFrame, b: DataFrame | None, threshold: float, id_col: str
-) -> DataFrame:
+def ppjoin_pairs(a: DataFrame, b: DataFrame | None, threshold: float) -> DataFrame:
     """``(id_a, id_b, jaccard)``: every pair of an ``a`` document and a
     ``b`` document whose shingle sets have Jaccard > ``threshold`` —
     exact AND complete. ``a`` and ``b`` are :func:`hashed_shingles`
-    tables ``(id_col, shingles)``; ``b=None`` is the self-join of
+    tables ``(doc_id, shingles)``; ``b=None`` is the self-join of
     ``a``, with ``id_a < id_b``. The test is on the unrounded Jaccard;
     the reported ``jaccard`` is rounded to 6 decimals
     (:func:`jaccard_verify`).
@@ -385,7 +389,7 @@ def ppjoin_pairs(
 
     def exploded(s: DataFrame) -> DataFrame:
         return s.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             F.size("shingles").alias("sz"),
             F.explode("shingles").alias("sh"),
         )
@@ -432,10 +436,10 @@ def ppjoin_pairs(
         .distinct()
     )
     joined = cand.join(
-        a.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")),
+        a.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a")),
         on="id_a",
     ).join(
-        b.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b")),
+        b.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b")),
         on="id_b",
     )
     return jaccard_verify(joined, "sh_a", "sh_b", threshold).select(
@@ -445,16 +449,15 @@ def ppjoin_pairs(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     threshold: float = 0.3,
     blocking: str | None = "prefix",
 ) -> DataFrame:
-    """Pairs (id_a < id_b, jaccard) with Jaccard > ``threshold`` — exact
-    AND complete: every qualifying pair is returned. The test is on the
-    unrounded Jaccard; the reported ``jaccard`` is rounded to 6
-    decimals (:func:`jaccard_verify`).
+    """Pairs (id_a < id_b, jaccard) of ``doc_id``s whose ``text`` n-gram
+    sets have Jaccard > ``threshold`` — exact AND complete: every
+    qualifying pair is returned. The test is on the unrounded Jaccard;
+    the reported ``jaccard`` is rounded to 6 decimals
+    (:func:`jaccard_verify`).
 
     ``blocking="prefix"`` (default — the 100 TB path) is the
     AllPairs/PPJoin self-join :func:`ppjoin_pairs`. ``blocking=None``
@@ -468,13 +471,13 @@ def ngram_jaccard_pairs(
     computed once, behind a lazy ``localCheckpoint`` — without it every
     branch re-runs the shingling (2× end to end on the fixture).
     """
-    s = hashed_shingles(df, id_col, text_col, n).localCheckpoint(eager=False)
+    s = hashed_shingles(df, n).localCheckpoint(eager=False)
     if blocking == "prefix":
-        return ppjoin_pairs(s, None, threshold, id_col)
+        return ppjoin_pairs(s, None, threshold)
     if blocking is not None:
         raise ValueError(f"unknown blocking mode: {blocking!r}")
-    a = s.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
-    b = s.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
+    a = s.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
+    b = s.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
     joined = a.join(b, F.col("id_a") < F.col("id_b"))
     return jaccard_verify(joined, "sh_a", "sh_b", threshold).select(
         "id_a", "id_b", "jaccard"
@@ -596,15 +599,7 @@ def band_bucket_keys(sig: DataFrame, num_perm: int, bands: int) -> DataFrame:
     )
 
 
-def lsh_band_index_write(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
-    bands: int = 16,
-) -> None:
+def lsh_band_index_write(df: DataFrame, path: str, bands: int = LSH_BANDS) -> None:
     """Materialize the corpus's MinHash-LSH band index: shingle →
     signature → :func:`band_bucket_keys`, written ``partitionBy(band)``
     with rows range-clustered and sorted on (band, bucket) so parquet
@@ -614,8 +609,8 @@ def lsh_band_index_write(
     This is the write-once half of the incremental near-dup contract
     (the v15 materialized-ANN-index precedent applied to dedup): the
     expensive part of LSH screening — one md5 per shingle plus
-    ``num_perm`` multiply-adds over the WHOLE corpus — runs once per
-    corpus version here, and every subsequent ingest batch pays only
+    :data:`LSH_NUM_PERM` multiply-adds over the WHOLE corpus — runs
+    once per corpus version here, and every subsequent ingest batch pays only
     its own delta-proportional signature cost before probing these
     lean (id, band, bucket) rows. At 100 TB the index is ~bands rows
     of three integers per document — orders of magnitude under the
@@ -629,13 +624,13 @@ def lsh_band_index_write(
     import json
     import os
 
-    s = with_shingles(df.select(id_col, text_col), text_col, n)
-    sig = minhash_signatures(s, id_col, "shingles", num_perm)
+    s = with_shingles(df.select("doc_id", "text"), n=LSH_N)
+    sig = minhash_signatures(s, "doc_id", "shingles", LSH_NUM_PERM)
     # lazy checkpoint: repartitionByRange SAMPLES its input in a
     # separate job before the write — without this the whole
     # shingle+signature pipeline (the expensive pass the index exists
     # to amortize) runs twice per build
-    keys = band_bucket_keys(sig, num_perm, bands).localCheckpoint(
+    keys = band_bucket_keys(sig, LSH_NUM_PERM, bands).localCheckpoint(
         eager=False
     )
     (
@@ -649,25 +644,17 @@ def lsh_band_index_write(
     # bands) would join band keys that can never match and silently
     # return ~nothing — the probe asserts against this file instead
     with open(os.path.join(path, "_lsh_geometry.json"), "w") as f:
-        json.dump({"n": n, "num_perm": num_perm, "bands": bands}, f)
+        json.dump({"n": LSH_N, "num_perm": LSH_NUM_PERM, "bands": bands}, f)
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.3,
-) -> DataFrame:
-    """MinHash-LSH near-dup pairs, verified with exact Jaccard.
+def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.3) -> DataFrame:
+    """MinHash-LSH near-dup pairs of ``doc_id``s over their ``text``,
+    verified with exact Jaccard.
 
-    Pipeline: shingle → signature(num_perm) → for each of ``bands``
-    bands hash the band's rows into a bucket key → union band tables →
-    self-join on (band, bucket) → distinct candidate pairs → exact
-    Jaccard filter. With num_perm=64, bands=16 (r=4), the S-curve
-    midpoint sits near j≈(1/16)^(1/4)≈0.5; candidates well below
+    Pipeline: shingle → signature (:data:`LSH_NUM_PERM`) → for each of
+    :data:`LSH_BANDS` bands hash the band's rows into a bucket key →
+    union band tables → self-join on (band, bucket) → distinct
+    candidate pairs → exact Jaccard filter; candidates well below
     threshold are discarded by the exact check.
 
     Scale: every stage is a narrow map except the bucket self-join,
@@ -676,13 +663,13 @@ def minhash_lsh_pairs(
     """
     from pypgsync_spark.operators.multimodal import single_slot_persist
 
-    s = with_shingles(df.select(id_col, text_col), text_col, n)
+    s = with_shingles(df.select("doc_id", "text"), n=LSH_N)
     # Cache the (id, shingles) side: it feeds both the signature build
     # and the final exact-Jaccard verification (single-slot convention:
     # bench runs every query twice; at most ONE shingle cache lives).
     s = single_slot_persist(_SHINGLE_CACHE, s)
-    sig = minhash_signatures(s, id_col, "shingles", num_perm)
-    buckets = band_bucket_keys(sig, num_perm, bands)
+    sig = minhash_signatures(s, "doc_id", "shingles", LSH_NUM_PERM)
+    buckets = band_bucket_keys(sig, LSH_NUM_PERM, LSH_BANDS)
     cand = (
         buckets.alias("l")
         .join(buckets.alias("r"), on=["band", "bucket"])
@@ -691,7 +678,7 @@ def minhash_lsh_pairs(
         .dropDuplicates(["id_a", "id_b"])
     )
     # verify candidates (few) with exact Jaccard: join shingles back in
-    sh = s.select(F.col(id_col).alias("id"), F.col("shingles"))
+    sh = s.select(F.col("doc_id").alias("id"), F.col("shingles"))
     joined = cand.join(
         sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")), on="id_a"
     ).join(sh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")), on="id_b")
@@ -717,8 +704,7 @@ def connected_components(
     alternative is Kiveris et al.'s large-star/small-star, same join
     shape). ``localCheckpoint`` truncates lineage each round so plan
     depth stays O(1) instead of O(iterations); convergence is detected
-    by the label-sum fixpoint (labels only ever decrease, so an
-    unchanged sum means an unchanged labeling).
+    by the labels' :func:`_fixpoint_signature`.
     """
     sym = _sym_edges(edges, id_a, id_b)
     labels = _self_labels(sym)
@@ -745,24 +731,37 @@ def _self_labels(sym: DataFrame) -> DataFrame:
     )
 
 
+def _fixpoint_signature(df: DataFrame) -> tuple:
+    """``(row count, sum of the rows' xxhash64)`` — the convergence
+    probe of the CC loops: a round that leaves it unchanged left the
+    table unchanged (up to a hash-sum collision). It hashes the ids,
+    so it takes ids of any type; a label sum would have to cast them
+    to a number. decimal(38,0) accumulator: summing 64-bit hashes
+    overflows BIGINT (an ANSI-mode error, a silent wrap otherwise)."""
+    return tuple(
+        df.agg(
+            F.count(F.lit(1)),
+            F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")),
+        ).collect()[0]
+    )
+
+
 def _min_label_rounds(
     sym: DataFrame, labels: DataFrame, max_rounds: int
 ) -> tuple[DataFrame, bool, int]:
     """Up to ``max_rounds`` of min-label propagation; returns
     (labels, converged, rounds_run). One shuffle-on-id per round;
-    convergence via the label-sum fixpoint (labels only ever decrease,
-    so an unchanged sum means an unchanged labeling). decimal(38,0)
-    accumulator: a BIGINT sum of many large ids can overflow (an
-    ANSI-mode error, a silent wrap otherwise).
+    convergence when a round leaves the labels'
+    :func:`_fixpoint_signature` unchanged.
 
     One Spark JOB per round, not two (r8): the checkpoint is LAZY and
-    the convergence-sum aggregate — a full scan — is the action that
+    the convergence aggregate — a full scan — is the action that
     materializes it, so the round's shuffle runs once and its blocks
     are cached for the next round's join. With eager=True each round
     paid a second driver-barrier job just to persist what the very
     next action would read anyway; at O(log n) star rounds on a deep
     graph that is O(log n) saved barriers."""
-    prev_sum = None
+    prev = None
     converged = False
     rounds = 0
     for _ in range(max_rounds):
@@ -776,13 +775,11 @@ def _min_label_rounds(
             .localCheckpoint(eager=False)
         )
         rounds += 1
-        s = labels.agg(
-            F.sum(F.col("component").cast("decimal(38,0)"))
-        ).collect()[0][0]
-        if s == prev_sum:
+        sig = _fixpoint_signature(labels)
+        if sig == prev:
             converged = True
             break
-        prev_sum = s
+        prev = sig
     return labels, converged, rounds
 
 
@@ -803,8 +800,7 @@ def _min_label_rounds(
 # 8-byte longs per edge). The driver path is therefore gated on both
 # id columns being integral types (r14 verdict #4 hardening): a
 # string-id graph at the same edge count could be an order of
-# magnitude more driver bytes — and the union-find's output schema is
-# integer-typed anyway — so non-integral ids always take the
+# magnitude more driver bytes, so non-integral ids always take the
 # distributed path, whatever the edge count. Pinned by
 # tests/test_dedup.py::test_cc_hybrid_string_ids_skip_driver_path.
 CC_DRIVER_MAX_EDGES = 500_000
@@ -817,11 +813,11 @@ CC_MAX_ITER = 50
 _CC_INTEGRAL_TYPES = ("byte", "short", "integer", "long")
 
 
-def _driver_union_find_labels(spark, rows) -> DataFrame:
-    """(id, component) via driver-side union-find over a SMALL,
-    already-collected edge list — bit-identical to the distributed
-    variants: component = min reachable node id, every endpoint
-    (self-loop-only nodes included) gets a row."""
+def _driver_union_find_labels(spark, rows, id_type: str) -> DataFrame:
+    """(id, component), both of type ``id_type``, via driver-side
+    union-find over a SMALL, already-collected edge list — bit-identical
+    to the distributed variants: component = min reachable node id,
+    every endpoint (self-loop-only nodes included) gets a row."""
     parent: dict = {}
 
     def find(x):
@@ -846,17 +842,15 @@ def _driver_union_find_labels(spark, rows) -> DataFrame:
         # tree is the component-wide min id, matching min-label Pregel
         parent[rb] = ra
     out = sorted((x, find(x)) for x in parent)
-    return spark.createDataFrame(out, schema="id long, component long")
+    return spark.createDataFrame(out, schema=f"id {id_type}, component {id_type}")
 
 
-def connected_components_hybrid(
-    edges: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    stats: dict | None = None,
-) -> DataFrame:
+def connected_components_hybrid(edges: DataFrame, stats: dict | None = None) -> DataFrame:
     """Adaptive CC — the 100 TB default. Same output contract as
-    :func:`connected_components` / :func:`connected_components_star`.
+    :func:`connected_components` / :func:`connected_components_star`
+    over the ``(id_a, id_b)`` edges. Ids may be of any orderable type;
+    the output id type is the same on every path: the wider of the two
+    input types.
 
     Near-dup graphs are almost always shallow (clusters of mutual
     near-duplicates, diameter 1–2), where min-label Pregel converges in
@@ -896,19 +890,24 @@ def connected_components_hybrid(
     # incremental execution can spend MORE jobs than the count, and a
     # partially-computed lazy checkpoint triggers a missing-partitions
     # cleanup job on top).
-    raw = edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).localCheckpoint(
+    raw = edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b")).localCheckpoint(
         eager=False
     )
     n_edges = raw.count()
-    ids_integral = all(
-        f.dataType.typeName() in _CC_INTEGRAL_TYPES for f in raw.schema.fields
-    )
-    if ids_integral and n_edges <= CC_DRIVER_MAX_EDGES:
+    id_types = [f.dataType for f in raw.schema.fields]
+    if (
+        all(t.typeName() in _CC_INTEGRAL_TYPES for t in id_types)
+        and n_edges <= CC_DRIVER_MAX_EDGES
+    ):
         if stats is not None:
             stats["pregel_rounds"] = 0
             stats["star_rounds"] = 0
             stats["driver_edges"] = n_edges
-        return _driver_union_find_labels(raw.sparkSession, raw.collect())
+        # the wider of the two types, as the distributed path's union gives
+        id_type = max(id_types, key=lambda t: _CC_INTEGRAL_TYPES.index(t.typeName()))
+        return _driver_union_find_labels(
+            raw.sparkSession, raw.collect(), id_type.simpleString()
+        )
     sym = _sym_edges(raw, "a", "b")
     labels = _self_labels(sym)
     labels, converged, rounds = _min_label_rounds(sym, labels, CC_PREGEL_ROUNDS)
@@ -958,16 +957,12 @@ def connected_components_hybrid(
 
 
 def connected_components_star(
-    edges: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 50,
-    stats: dict | None = None,
+    edges: DataFrame, max_iter: int = 50, stats: dict | None = None
 ) -> DataFrame:
-    """(id, component) via Kiveris et al.'s large-star/small-star
-    (two-phase hashing, SoCC'14) — same output contract as
-    :func:`connected_components`, but the round count is O(log n) on
-    ANY graph, including the pathological long-chain case where
+    """(id, component) over the ``(id_a, id_b)`` edges via Kiveris et
+    al.'s large-star/small-star (two-phase hashing, SoCC'14) — same
+    output contract as :func:`connected_components`, but the round
+    count is O(log n) on ANY graph, including the pathological long-chain case where
     min-label Pregel needs O(diameter) rounds.
 
     Each round rewrites the edge list with two local operations:
@@ -980,20 +975,20 @@ def connected_components_star(
 
     Both are one groupBy-shuffle on the node id plus one equi-join —
     the same shuffle shape as a Pregel round, no driver data. Edge
-    endpoints only ever decrease, so the (count, endpoint-hash-sum)
-    pair is a fixpoint detector: when a round leaves both unchanged,
-    the graph is a forest of stars and every remaining edge is
-    ``(node, component-min)``. One scalar collect per round, like the
-    Pregel loop. ``stats["rounds"]``, when a dict is passed, reports
-    the converged round count (the chain-fixture test asserts the
-    O(log n) bound holds).
+    endpoints only ever decrease, so the edge list's
+    :func:`_fixpoint_signature` is a fixpoint detector: when a round
+    leaves it unchanged, the graph is a forest of stars and every
+    remaining edge is ``(node, component-min)``. One scalar collect per
+    round, like the Pregel loop. ``stats["rounds"]``, when a dict is
+    passed, reports the converged round count (the chain-fixture test
+    asserts the O(log n) bound holds).
     """
     # materialize the upstream edge pipeline exactly ONCE — nodes and
     # the working edge list both derive from this checkpoint (two eager
     # checkpoints here would run the possibly-expensive pair-finding
     # pipeline twice)
     raw = edges.select(
-        F.col(id_a).alias("a"), F.col(id_b).alias("b")
+        F.col("id_a").alias("a"), F.col("id_b").alias("b")
     ).localCheckpoint(eager=True)
     # node set from the UNFILTERED edges: a node appearing only in
     # self-loop edges (u,u) must still self-label, matching the Pregel
@@ -1041,13 +1036,7 @@ def connected_components_star(
         # Pregel loop's r8 pattern)
         e = _small_star(_large_star(e)).localCheckpoint(eager=False)
         rounds += 1
-        sig = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal(38,0) accumulator: summing 64-bit hashes overflows
-            # BIGINT (an ANSI-mode error, a silent wrap otherwise)
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        cur = (sig["n"], sig["h"])
+        cur = _fixpoint_signature(e)
         if cur == prev:
             converged = True
             break

@@ -31,22 +31,29 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pypgsync_spark.functions.text import content_fingerprint
+from pypgsync_spark.operators.dedup import (
+    LSH_BANDS,
+    LSH_N,
+    LSH_NUM_PERM,
+    band_bucket_keys,
+    hashed_shingles,
+    jaccard_verify,
+    minhash_signatures,
+    ppjoin_pairs,
+    with_shingles,
+)
 
 
-def incremental_dedup_exact(
-    corpus: DataFrame,
-    delta: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Rows of ``delta`` that survive exact dedup against ``corpus``
-    (and against the rest of the delta — min ``id_col`` keeps).
+def incremental_dedup_exact(corpus: DataFrame, delta: DataFrame) -> DataFrame:
+    """Rows of ``delta`` that survive exact dedup of ``text`` against
+    ``corpus`` (and against the rest of the delta — min ``doc_id``
+    keeps).
 
     Output: the surviving delta rows, original columns.
     """
-    fp = content_fingerprint(F.col(text_col))
+    fp = content_fingerprint(F.col("text"))
     d = delta.withColumn("__fp", fp)
-    w = Window.partitionBy("__fp").orderBy(F.col(id_col).asc())
+    w = Window.partitionBy("__fp").orderBy(F.col("doc_id").asc())
     keepers = (
         d.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -57,15 +64,10 @@ def incremental_dedup_exact(
 
 
 def cross_jaccard_pairs(
-    corpus: DataFrame,
-    delta: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.3,
+    corpus: DataFrame, delta: DataFrame, threshold: float = 0.3
 ) -> DataFrame:
     """Exact cross-collection near-dup pairs: every (delta doc, corpus
-    doc) pair with n-gram Jaccard > ``threshold`` — the NEAR-dup
+    doc) pair with word-3-gram Jaccard > ``threshold`` — the NEAR-dup
     counterpart of :func:`incremental_dedup_exact`'s corpus screen,
     complete (no candidate loss) and delta-proportional: the candidate
     join is delta-prefix ⋈ corpus-prefix, never delta × corpus.
@@ -78,11 +80,9 @@ def cross_jaccard_pairs(
     unrounded Jaccard; the reported ``jaccard`` is rounded to 6
     decimals. ``threshold`` must lie in (0, 1).
     """
-    from pypgsync_spark.operators.dedup import hashed_shingles, ppjoin_pairs
-
-    sd = hashed_shingles(delta, id_col, text_col, n).localCheckpoint(eager=False)
-    sc = hashed_shingles(corpus, id_col, text_col, n).localCheckpoint(eager=False)
-    return ppjoin_pairs(sd, sc, threshold, id_col).select(
+    sd = hashed_shingles(delta).localCheckpoint(eager=False)
+    sc = hashed_shingles(corpus).localCheckpoint(eager=False)
+    return ppjoin_pairs(sd, sc, threshold).select(
         F.col("id_a").alias("delta_id"), F.col("id_b").alias("corpus_id"), "jaccard"
     )
 
@@ -240,22 +240,14 @@ def bloom_prune(
 
 
 def lsh_index_screen(
-    spark,
-    index_path: str,
-    corpus: DataFrame,
-    delta: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.3,
+    spark, index_path: str, corpus: DataFrame, delta: DataFrame, bands: int = LSH_BANDS
 ) -> DataFrame:
-    """Near-dup pairs (delta_id, corpus_id, jaccard) between an ingest
-    DELTA and a standing corpus, probed through the corpus's
-    MATERIALIZED LSH band index (operators/dedup.lsh_band_index_write)
-    — the near-dup analogue this module's header promises, composed
-    with the v15 materialized-index and d16 Bloom-gate precedents.
+    """Near-dup pairs (delta_id, corpus_id, jaccard), Jaccard > 0.3,
+    between an ingest DELTA and a standing corpus, probed through the
+    corpus's MATERIALIZED LSH band index
+    (operators/dedup.lsh_band_index_write) — the near-dup analogue this
+    module's header promises, composed with the v15 materialized-index
+    and d16 Bloom-gate precedents.
 
     The verify is hashed, as in d2/d8: the candidate corpus documents
     are shingled straight to xxhash64 arrays
@@ -295,27 +287,19 @@ def lsh_index_screen(
     docs at the defaults): the probe stays CORRECT but becomes an
     ungated index scan + join, a step-function cost change an operator
     sizing batches should know about; (2) the index must have been
-    built with the SAME (n, num_perm, bands) geometry — mismatched
-    band keys can never match and would silently drop every true
-    pair, so the probe asserts against the geometry sidecar the
-    writer records and refuses loudly instead.
+    built with the SAME geometry (``LSH_N``, ``LSH_NUM_PERM`` and
+    ``bands``) — mismatched band keys can never match and would
+    silently drop every true pair, so the probe asserts against the
+    geometry sidecar the writer records and refuses loudly instead.
     """
     import json
     import os
-
-    from pypgsync_spark.operators.dedup import (
-        band_bucket_keys,
-        hashed_shingles,
-        jaccard_verify,
-        minhash_signatures,
-        with_shingles,
-    )
 
     meta_path = os.path.join(index_path, "_lsh_geometry.json")
     if os.path.exists(meta_path):
         with open(meta_path) as f:
             meta = json.load(f)
-        want = {"n": n, "num_perm": num_perm, "bands": bands}
+        want = {"n": LSH_N, "num_perm": LSH_NUM_PERM, "bands": bands}
         if meta != want:
             raise ValueError(
                 f"LSH index at {index_path} was built with geometry "
@@ -324,12 +308,12 @@ def lsh_index_screen(
                 "probe with its geometry"
             )
 
-    s_d = with_shingles(delta.select(id_col, text_col), text_col, n)
+    s_d = with_shingles(delta.select("doc_id", "text"), n=LSH_N)
     # feeds both the signature build and the exact verify: lazy
     # checkpoint, materialized by bloom_prune's key count
     s_d = s_d.localCheckpoint(eager=False)
-    sig_d = minhash_signatures(s_d, id_col, "shingles", num_perm)
-    keys_d = band_bucket_keys(sig_d, num_perm, bands).localCheckpoint(
+    sig_d = minhash_signatures(s_d, "doc_id", "shingles", LSH_NUM_PERM)
+    keys_d = band_bucket_keys(sig_d, LSH_NUM_PERM, bands).localCheckpoint(
         eager=False
     )
     # partition-directory inference must not widen the band column:
@@ -356,19 +340,19 @@ def lsh_index_screen(
         .localCheckpoint(eager=False)
     )
     corpus_cand = corpus.join(
-        cand.select(F.col("corpus_id").alias(id_col)).dropDuplicates(),
-        on=id_col,
+        cand.select(F.col("corpus_id").alias("doc_id")).dropDuplicates(),
+        on="doc_id",
         how="left_semi",
     )
 
-    sh_c = hashed_shingles(corpus_cand, id_col, text_col, n).select(
-        F.col(id_col).alias("corpus_id"), F.col("shingles").alias("sh_c")
+    sh_c = hashed_shingles(corpus_cand, LSH_N).select(
+        F.col("doc_id").alias("corpus_id"), F.col("shingles").alias("sh_c")
     )
     sh_d = s_d.select(
-        F.col(id_col).alias("delta_id"),
+        F.col("doc_id").alias("delta_id"),
         F.array_distinct(F.transform("shingles", lambda x: F.xxhash64(x))).alias("sh_d"),
     )
     joined = cand.join(sh_d, on="delta_id").join(sh_c, on="corpus_id")
-    return jaccard_verify(joined, "sh_d", "sh_c", threshold).select(
+    return jaccard_verify(joined, "sh_d", "sh_c", 0.3).select(
         "delta_id", "corpus_id", "jaccard"
     )

@@ -206,20 +206,12 @@ def cosine_pairs(
     return keyed.groupBy(*gcols, "__bp", "__bq").applyInPandas(gemm, schema)
 
 
-def cosine_pairs_lsh_gated(
-    vectors: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    nbits: int = 16,
-    n_bands: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate all-pairs cosine > threshold: hyperplane-LSH banding
-    gates candidates, exact GEMM verifies inside buckets.
+def cosine_pairs_lsh_gated(vectors: DataFrame, threshold: float) -> DataFrame:
+    """Approximate all-pairs cosine > threshold over 64-dim
+    ``(vec_id, embedding)`` rows: hyperplane-LSH banding gates
+    candidates, exact GEMM verifies inside buckets.
 
-    The ``nbits`` sign-bit signature is split into ``n_bands`` bands;
+    The 16-bit sign signature is split into 8 bands of 2 bits;
     two vectors are compared iff they agree on at least one full band
     (same explode→groupBy bucketing as MinHash-LSH in dedup.py — no
     all-pairs stage anywhere). Work is Σ bucket² instead of N²; recall
@@ -230,17 +222,15 @@ def cosine_pairs_lsh_gated(
     """
     import pandas as pd
 
-    rb = nbits // n_bands
+    n_bands, rb = 8, 2
     # r13: signatures via the Arrow-batched sequential kernel (same
     # bits as the Column-HOF form — see hyperplane_signatures_seq —
     # but vectorized over rows instead of nbits interpreted folds per
     # row); keep_vec carries the vector to the bucket GEMM map-only.
-    v = hyperplane_signatures_seq(
-        vectors, id_col, vec_col, dim, nbits, seed, keep_vec=True
-    )
+    v = hyperplane_signatures_seq(vectors, nbits=n_bands * rb, keep_vec=True)
     banded = v.select(
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         F.explode(
             F.array(
                 *[
@@ -254,12 +244,12 @@ def cosine_pairs_lsh_gated(
                 ]
             )
         ).alias("__band"),
-    ).select(id_col, vec_col, "__band.band", "__band.val")
+    ).select("vec_id", "embedding", "__band.band", "__band.val")
 
     def gemm_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.stack(pdf[vec_col].map(np.asarray)).astype(np.float64)
+        mat = np.stack(pdf["embedding"].map(np.asarray)).astype(np.float64)
         mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
+        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         sims = mat @ mat.T
         ia, jb = np.nonzero((sims > threshold) & (ids[:, None] < ids[None, :]))
         return pd.DataFrame(
@@ -450,16 +440,11 @@ def probe_cells(
     return sorted(range(len(centroids)), key=lambda i: (-sims[i], i))[:n_probe]
 
 
-def knn_join(
-    vectors: DataFrame,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_blocks: int = 8,
-) -> DataFrame:
-    """Exact cosine k-NN self-join: (id, nbr_id, cos_sim) — the top-k
-    neighbors of EVERY vector, i.e. the k-NN graph that embedding
-    clustering / near-dup / diversity-sampling pipelines start from.
+def knn_join(vectors: DataFrame, k: int = 3, n_blocks: int = 8) -> DataFrame:
+    """Exact cosine k-NN self-join over ``(vec_id, embedding)`` rows:
+    (vec_id, nbr_id, cos_sim) — the top-k neighbors of EVERY vector,
+    i.e. the k-NN graph that embedding clustering / near-dup /
+    diversity-sampling pipelines start from.
 
     Same block-nested GEMM layout as :func:`cosine_pairs`, but each
     block-pair group emits only its LOCAL top-k per row, so the
@@ -482,8 +467,8 @@ def knn_join(
             T.StructField("cos", T.DoubleType()),
         ]
     )
-    v = vectors.select(F.col(id_col), F.col(vec_col)).withColumn(
-        "__blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
+    v = vectors.select("vec_id", "embedding").withColumn(
+        "__blk", F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_blocks)).cast("int")
     )
     keyed = (
         v.withColumn(
@@ -496,9 +481,9 @@ def knn_join(
     def gemm_topk(pdf: pd.DataFrame) -> pd.DataFrame:
         p = int(pdf["__bp"].iloc[0])
         q = int(pdf["__bq"].iloc[0])
-        mat = np.stack(pdf[vec_col].map(np.asarray)).astype(np.float64)
+        mat = np.stack(pdf["embedding"].map(np.asarray)).astype(np.float64)
         mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
+        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         blk = pdf["__blk"].to_numpy()
         chunks: list[pd.DataFrame] = []
 
@@ -550,7 +535,7 @@ def knn_join(
         cand.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("vec_id"),
             "nbr_id",
             F.round(F.col("cos"), 6).alias("cos_sim"),
         )
@@ -591,20 +576,15 @@ def cell_cosine_pairs(
     )
 
 
-def kmeans_fit(
-    vectors: DataFrame,
-    k: int = 8,
-    n_iter: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
+def kmeans_fit(vectors: DataFrame, k: int = 8, n_iter: int = 3) -> list[list[float]]:
     """Deterministic Lloyd k-means by cosine — the REAL IVF build step
     (ivf_assign's docstring promises "at real scale they come from a
-    sampled k-means"; this is that trainer). Returns the k centroids.
+    sampled k-means"; this is that trainer) over ``(vec_id, embedding)``
+    rows. Returns the k centroids.
 
     Determinism is the design constraint, not an accident:
 
-    - seeds = the k lowest-``id_col`` vectors (no RNG);
+    - seeds = the k lowest-``vec_id`` vectors (no RNG);
     - assignment = Arrow-batched numpy argmax (first-max-wins ties,
       row-local — see :func:`_argmax_assign_arrow`; the SERVING
       assignment stays :func:`ivf_assign`'s oracle-compatible fold);
@@ -623,9 +603,9 @@ def kmeans_fit(
     hash-sample (samp1 composes) and assign the full corpus once.
     """
     seed_rows = (
-        vectors.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
+        vectors.select("vec_id", "embedding").orderBy("vec_id").limit(k).collect()
     )
-    cents = [[float(x) for x in r[vec_col]] for r in seed_rows]
+    cents = [[float(x) for x in r["embedding"]] for r in seed_rows]
     k = len(cents)  # fewer vectors than requested cells: fit what exists
     # Deliberately NOT spread_if_underpartitioned here: the r14
     # optimization round measured the repartitioned Lloyd step SLOWER
@@ -634,10 +614,10 @@ def kmeans_fit(
     # numpy the spread saves at fixture scale, and at real scale the
     # fit runs on a sample whose scan is already multi-split.
     for _ in range(n_iter):
-        assigned = _argmax_assign_arrow(vectors, cents, vec_col)
+        assigned = _argmax_assign_arrow(vectors, cents, "embedding")
         sums = (
             assigned.select(
-                "cell", F.posexplode(F.col(vec_col)).alias("dim", "val")
+                "cell", F.posexplode(F.col("embedding")).alias("dim", "val")
             )
             .groupBy("cell", "dim")
             .agg(

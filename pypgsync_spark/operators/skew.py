@@ -29,12 +29,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def salt_column(n_salt: int, seed: int = 42) -> Column:
+def salt_column(n_salt: int) -> Column:
     """Uniform salt in [0, n_salt): spreads a hot key's rows across
-    ``n_salt`` reducers. ``rand(seed)`` — the salt value itself is not
+    ``n_salt`` reducers. ``rand(42)`` — the salt value itself is not
     reproducible across repartitionings, which is fine: every salt
     assignment yields the same join/aggregate result."""
-    return F.floor(F.rand(seed) * n_salt).cast("int")
+    return F.floor(F.rand(42) * n_salt).cast("int")
 
 
 def salted_inner_join(

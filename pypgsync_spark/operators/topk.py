@@ -29,8 +29,8 @@ def topk(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
 
 
 def topk_per_key(
-    df: DataFrame, keys: Sequence[str], order: Sequence[Column], k: int, rank_col: str = "rn"
+    df: DataFrame, keys: Sequence[str], order: Sequence[Column], k: int
 ) -> DataFrame:
-    """Top-k rows per key group."""
+    """Top-k rows per key group, ranked in column ``rn``."""
     w = Window.partitionBy(*[F.col(c) for c in keys]).orderBy(*order)
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)

@@ -81,14 +81,13 @@ def write_zordered(
     path: str,
     cols: list[tuple[str, float, float]],
     n_files: int = 8,
-    bits: int = 16,
 ) -> None:
     """Write ``df`` z-clustered on ``cols`` (name, lo, hi triples):
     range-partitioned into ~``n_files`` files by z-value (the sort
     column is projected away after the in-partition sort), so parquet
     footer min/max stats are tight in every z dimension and the scan
     skips row groups for predicates on ANY of them."""
-    z = zorder_key_fixed(cols, bits)
+    z = zorder_key_fixed(cols)
     out = (
         df.withColumn("__z", z)
         .repartitionByRange(n_files, "__z")

@@ -489,7 +489,6 @@ def read_cdc_stream(
     table_path: str,
     partition_column: str,
     num_partitions: int = 4,
-    fetch_size: int = 10_000,
     db_path: str | None = None,
 ):
     """Fresh streaming read through the CDC source. ``db_path`` switches
@@ -501,7 +500,6 @@ def read_cdc_stream(
         .option("table_path", table_path)
         .option("partition_column", partition_column)
         .option("num_partitions", str(num_partitions))
-        .option("fetch_size", str(fetch_size))
     )
     if db_path is not None:
         reader = reader.option("db_path", db_path)

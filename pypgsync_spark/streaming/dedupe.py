@@ -64,11 +64,9 @@ def stream_corpus_screen(
     spark: SparkSession,
     stream: DataFrame,
     corpus: DataFrame,
-    text_col: str = "text",
     query_name: str = "stream_corpus_screen",
-    state_partitions: int | str | None = "auto",
 ) -> DataFrame:
-    """Stream-STATIC anti join: emit only stream rows whose content
+    """Stream-STATIC anti join: emit only stream rows whose ``text``
     fingerprint is absent from the standing ``corpus`` (a batch
     DataFrame). The streaming face of
     operators/incremental.incremental_dedup_exact's corpus screen —
@@ -85,17 +83,11 @@ def stream_corpus_screen(
     from pypgsync_spark.functions.text import content_fingerprint
     from pypgsync_spark.streaming.balance import drain_to_memory
 
-    fp = content_fingerprint(text_col)
+    fp = content_fingerprint("text")
     screened = stream.withColumn("__fp", fp).join(
         corpus.select(fp.alias("__fp")), on="__fp", how="left_anti"
     ).drop("__fp")
-    return drain_to_memory(
-        spark,
-        screened,
-        query_name,
-        state_partitions=state_partitions,
-        output_mode="append",
-    )
+    return drain_to_memory(spark, screened, query_name, output_mode="append")
 
 
 def stream_ingest_curation(

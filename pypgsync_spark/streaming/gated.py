@@ -202,12 +202,12 @@ def pin_num_buckets(
 
 def gated_contributions_stream(
     src: DataFrame,
-    blocked: str = "error",
     num_buckets: int | str = "auto",
     ttl_ms: int | None = None,
 ) -> DataFrame:
     """Wire the gate over a streaming events DataFrame → append-mode
-    stream of (event_id, user_id, value) contribution rows.
+    stream of (event_id, user_id, value) contribution rows; ``error``
+    events never qualify.
 
     ``num_buckets="auto"`` sizes the state keyspace to 4× the session's
     default parallelism — enough buckets that every state partition
@@ -222,7 +222,7 @@ def gated_contributions_stream(
         # The qualifying pre-filter: stays in the JVM scan, never
         # crosses to Python (reference gate README.md:182,195-196 —
         # non-qualifying versions cannot emit or flip state).
-        src.filter(F.col("event_type") != blocked).select(
+        src.filter(F.col("event_type") != "error").select(
             "event_id",
             "user_id",
             "value",

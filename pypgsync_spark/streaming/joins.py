@@ -28,21 +28,17 @@ def interval_join_events(
     spark: SparkSession,
     source_path: str,
     schema: T.StructType,
-    left_type: str = "error",
-    right_type: str = "click",
-    lookback: str = "6 hours",
-    watermark: str = "2 days",
     query_name: str = "stream_stream_join",
     state_partitions: int | str | None = "auto",
 ) -> DataFrame:
-    """Join two event sub-streams of the same source: every
-    ``left_type`` event pairs with the ``right_type`` events of the
-    same user in the ``lookback`` window ending at the left event
-    ("which clicks preceded this error"). Returns
-    (error_id, click_id) pairs via an append-mode memory sink.
+    """Join two event sub-streams of the same source: every ``error``
+    event pairs with the ``click`` events of the same user in the
+    6-hour window ending at the error ("which clicks preceded this
+    error"). Returns (error_id, click_id) pairs via an append-mode
+    memory sink.
 
-    Both sides carry a watermark and the join condition bounds
-    ``right.ts`` to ``[left.ts - lookback, left.ts]`` — the two facts
+    Both sides carry a 2-day watermark and the join condition bounds
+    ``click_ts`` to ``[error_ts - 6 hours, error_ts]`` — the two facts
     Spark needs to prove state eviction is safe on BOTH sides.
     """
     def side(event_type: str, id_alias: str, ts_alias: str, user_alias: str):
@@ -56,15 +52,15 @@ def interval_join_events(
                 F.col("user_id").alias(user_alias),
                 F.col("ts").alias(ts_alias),
             )
-            .withWatermark(ts_alias, watermark)
+            .withWatermark(ts_alias, "2 days")
         )
 
-    left = side(left_type, "error_id", "error_ts", "user_id")
-    right = side(right_type, "click_id", "click_ts", "r_user_id")
+    left = side("error", "error_id", "error_ts", "user_id")
+    right = side("click", "click_id", "click_ts", "r_user_id")
     joined = left.join(
         right,
         (F.col("user_id") == F.col("r_user_id"))
-        & (F.col("click_ts") >= F.col("error_ts") - F.expr(f"INTERVAL {lookback}"))
+        & (F.col("click_ts") >= F.col("error_ts") - F.expr("INTERVAL 6 hours"))
         & (F.col("click_ts") <= F.col("error_ts")),
         "inner",
     ).select("error_id", "click_id")

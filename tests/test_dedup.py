@@ -636,22 +636,46 @@ def test_cc_hybrid_string_ids_skip_driver_path(spark):
     ids (CC_DRIVER_MAX_EDGES comment; r14 verdict hardening): a
     string-id edge list must take the distributed path regardless of
     edge count — and must still produce the min-label closure with the
-    input's own id type. Numeric strings are used because the
-    distributed convergence detector's decimal accumulator needs
-    castable labels (a constraint predating the driver path; min-label
-    on strings is lexicographic)."""
-    from pypgsync_spark.operators.dedup import connected_components_hybrid
+    input's own id type. The ids are not numbers (the reference's keys
+    are UUIDs), so the convergence probe must not cast them; the Pregel
+    reference runs the same loop and must agree. Min-label on strings
+    is lexicographic."""
+    from pypgsync_spark.operators.dedup import (
+        connected_components,
+        connected_components_hybrid,
+    )
 
     edges = spark.createDataFrame(
-        [("10", "20"), ("20", "30"), ("100", "200")], ["id_a", "id_b"]
+        [("a", "b"), ("b", "c"), ("x", "y")], ["id_a", "id_b"]
     )
+    want = {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")}
     stats: dict = {}
     labels = connected_components_hybrid(edges, stats=stats)
     assert "driver_edges" not in stats  # distributed path ran
     assert stats["pregel_rounds"] >= 1
-    got = {(r["id"], r["component"]) for r in labels.collect()}
-    assert got == {
-        ("10", "10"), ("20", "10"), ("30", "10"),
-        ("100", "100"), ("200", "100"),
-    }
+    assert {(r["id"], r["component"]) for r in labels.collect()} == want
     assert dict(labels.dtypes)["component"] == "string"
+    pregel = connected_components(edges)
+    assert {(r["id"], r["component"]) for r in pregel.collect()} == want
+
+
+def test_cc_hybrid_output_types_match_across_paths(spark, monkeypatch):
+    """An int-typed graph keeps its id type whichever path runs: the
+    driver union-find must not widen to long where the distributed
+    path keeps int, or the output schema changes at
+    CC_DRIVER_MAX_EDGES."""
+    from pypgsync_spark.operators import dedup
+    from pypgsync_spark.operators.dedup import connected_components_hybrid
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a int, id_b int"
+    )
+    driver_stats: dict = {}
+    driver = connected_components_hybrid(edges, stats=driver_stats)
+    assert driver_stats["driver_edges"] == 3
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+        distributed = connected_components_hybrid(edges)
+        assert distributed.dtypes == [("id", "int"), ("component", "int")]
+    assert driver.dtypes == distributed.dtypes
+    assert sorted(driver.collect()) == sorted(distributed.collect())

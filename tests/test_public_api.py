@@ -1,4 +1,4 @@
-"""No public name without a caller.
+"""No public name without a caller, no parameter without a setter.
 
 Every public top-level ``def``/``class`` in ``pypgsync_spark/`` (catalog
 queries registered with ``@register`` aside: the registry is their
@@ -14,12 +14,20 @@ with it.
 A name that is deliberately public without such a caller (a deploy-time
 sink, a test reference other tests compare against) goes into ``KEEP``
 with its reason; its body counts as live code. Anything else is a helper
-nothing calls: delete it. Stdlib ``ast`` only, so it runs without Spark.
+nothing calls: delete it.
+
+Every defaulted parameter of a module-level ``def`` in the package must
+be passed by at least one call of that name, in the caller files or in
+``tests/``: by keyword, positionally at or past its index, or through
+``*``/``**``. A default no call overrides is a constant: fold it in.
+``KEEP_PARAMS`` and ``PENDING`` list the exceptions. Stdlib ``ast``
+only, so it runs without Spark.
 """
 
 from __future__ import annotations
 
 import ast
+from collections import defaultdict
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -32,6 +40,7 @@ CALLER_FILES = [
     ROOT / "bench.py",
     ROOT / "__spark_entry__.py",
 ]
+TEST_FILES = [*(ROOT / "tests").rglob("*.py")]
 
 # module-qualified name -> why it stays public with no caller in the product
 KEEP = {
@@ -134,3 +143,139 @@ def test_keep_lists_only_names_without_a_caller():
         if q not in defs or _called(stmts, dead, q, defs[q].name, skip=KEEP)
     )
     assert not stale, f"KEEP entries that are gone or have a caller: {stale}"
+
+
+# module-qualified parameter -> why it keeps a default that no call passes
+KEEP_PARAMS = {
+    # deploy-time entry points (KEEP): a deployment sets these
+    "sources.jdbc.write_upsert.batch_size": "rows per execute_batch at deploy time",
+    "sources.jdbc.write_upsert.dialect": "target database at deploy time",
+    "streaming.continuous.stream_sync_cdc.trigger": "deploy-time trigger",
+    # pinned into the checkpoint by pin_num_buckets on the first start
+    "streaming.gated.gated_balance.num_buckets": "deploy-time state keyspace",
+    # test references (KEEP): same signature as the operator they check
+    "operators.dedup.connected_components.id_a": "test reference",
+    "operators.dedup.connected_components.id_b": "test reference",
+    "operators.dedup.connected_components.max_iter": "test reference",
+    "operators.similarity.cosine_pairs_expr.id_col": "test reference",
+    "operators.similarity.cosine_pairs_expr.vec_col": "test reference",
+    "operators.similarity.hyperplane_signature.seed": "test reference",
+}
+
+# function -> the green sweep closures it sits in. Editing it would
+# re-stale those queries (CLAUDE.md "Sweep-cap discipline"); its unset
+# parameters fold into constants in a round that re-stales them anyway.
+PENDING = {
+    "plans.intervals.plan_slices": "green closure: c2, c5",
+    "streaming.balance.drain_to_memory": (
+        "green closure: mm10, mm12, mm14, pipe5, pipe6, pipe7, "
+        "t5, t6, t7, t9, t13, t14"
+    ),
+    "streaming.balance.qualifying": "green closure: t5",
+    "streaming.balance.streaming_balance": "green closure: t5",
+    "streaming.balance.session_window_stats": "green closure: t7",
+    "streaming.balance.windowed_event_counts": "green closure: t6",
+    "streaming.balance.sliding_event_counts": "green closure: t13",
+    "streaming.balance.enriched_segment_rollup": "green closure: t14",
+    "streaming.dedupe.dedup_within_watermark": "green closure: t9",
+    "streaming.dedupe.stream_ingest_curation": "green closure: pipe5",
+    "streaming.dedupe.semantic_screen_stream": "green closure: pipe6",
+    "streaming.dedupe.image_screen_stream": "green closure: mm10, pipe7",
+    "streaming.dedupe.audio_screen_stream": "green closure: mm12",
+    "streaming.dedupe.video_screen_stream": "green closure: mm14",
+    "operators.windowed.distributed_row_number": "green closure: w1c",
+    "operators.dedup.paragraph_dedup": "green closure: d15, pipe9",
+    "operators.dedup.with_shingles": "green closure: tx3",
+    "operators.dedup.simhash_pairs": "green closure: d4",
+    "operators.incremental.incremental_dedup_bloom": "green closure: d16",
+    "operators.packing.packed_offsets": "green closure: pipe4, pipe8",
+    "operators.packing.pack_chunks": "green closure: pipe4, pipe8",
+    "operators.multimodal.with_binary_payload": "green closure: mm1, mm2, mm3",
+    "operators.multimodal.frame_sample": "green closure: mm2",
+    "operators.multimodal.extract_binary_features": "green closure: mm1",
+    "operators.multimodal.resize_signature": "green closure: mm3",
+    "operators.multimodal.with_image_payload": "green closure: mm4, mm7",
+    "operators.multimodal.with_audio_payload": "green closure: mm5, mm8",
+    "operators.multimodal.with_video_payload": "green closure: mm6",
+    "operators.multimodal.audio_window_energy": "green closure: mm8",
+    "operators.rangejoin.range_join": "green closure: c5",
+    "operators.asof.asof_join": "green closure: j13",
+    "operators.similarity.lsh_ann_topk": "green closure: v4",
+    "operators.similarity.ivf_assign": "green closure: d14, pipe4, v5, v8, v14, v15",
+    "operators.similarity.ivf_topk": "green closure: v5, v8",
+    "operators.similarity.cell_cosine_pairs": "green closure: d14, pipe4",
+    "operators.similarity.cosine_scores_seq": "green closure: pipe6",
+    "operators.similarity.sq8_approx_scores": "green closure: v13, v14",
+    "operators.similarity.sq8_index_write": "green closure: v15",
+    "operators.similarity.sq8_index_topk": "green closure: v15",
+    "operators.skew.distinct_count_two_stage": "green closure: a13",
+    "sources.partitioned.with_event_date": "green closure: s4b, s9",
+    "sources.partitioned.write_date_partitioned": "green closure: s4b, s9",
+    "sources.files.read_table": "green closure: s10",
+    "sources.files.write_table": "green closure: s10",
+    "sources.bucketed.write_bucketed": "green closure: s3c",
+    "functions.text.c4_line_clean": "green closure: pipe9, tx18",
+    "queries.textops.dsir_weights": "green closure: pipe8, tx17",
+}
+
+
+def _defaulted(args: ast.arguments):
+    """``(positional index or None, name)`` of each defaulted parameter."""
+    pos = args.posonlyargs + args.args
+    first = len(pos) - len(args.defaults)
+    for i, a in enumerate(pos[first:], first):
+        yield i, a.arg
+    for a, default in zip(args.kwonlyargs, args.kw_defaults):
+        if default is not None:
+            yield None, a.arg
+
+
+def _passes(call: ast.Call, index: int | None, name: str) -> bool:
+    if any(isinstance(a, ast.Starred) for a in call.args):
+        return True
+    if any(k.arg in (None, name) for k in call.keywords):
+        return True
+    return index is not None and len(call.args) > index
+
+
+def unset_params() -> set[str]:
+    """``module.function.parameter`` of every defaulted parameter of a
+    package module-level ``def`` that no call of that name passes."""
+    trees = {p: ast.parse(p.read_text(), str(p)) for p in CALLER_FILES + TEST_FILES}
+    calls = defaultdict(list)
+    for tree in trees.values():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                name = getattr(node.func, "id", getattr(node.func, "attr", None))
+                calls[name].append(node)
+    out = set()
+    for path in PKG.rglob("*.py"):
+        mod = ".".join(path.relative_to(PKG).with_suffix("").parts)
+        for node in trees[path].body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for index, arg in _defaulted(node.args):
+                if not any(_passes(c, index, arg) for c in calls[node.name]):
+                    out.add(f"{mod}.{node.name}.{arg}")
+    return out
+
+
+def test_every_parameter_has_a_setter():
+    unset = sorted(
+        p
+        for p in unset_params()
+        if p not in KEEP_PARAMS and p.rsplit(".", 1)[0] not in PENDING
+    )
+    assert not unset, (
+        "defaulted parameters that no call passes; fold each into a "
+        f"constant, or list it in KEEP_PARAMS or PENDING with a reason: {unset}"
+    )
+
+
+def test_setter_exceptions_name_unset_parameters():
+    unset = unset_params()
+    stale = sorted(p for p in KEEP_PARAMS if p not in unset)
+    stale += sorted(
+        f for f in PENDING if not any(p.rsplit(".", 1)[0] == f for p in unset)
+    )
+    assert not stale, f"KEEP_PARAMS/PENDING entries with no unset parameter: {stale}"
