@@ -489,16 +489,19 @@ def s1_pysource_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "s4c_pysink_batched_write",
     bench=35,
-    survey="S4",
+    survey="S3,S4",
     doc="Batched destination writes through the Python DataSource V2 "
-    "write protocol (sources/pysource.py SqlBatchArrowWriter): every "
-    "task streams its partition's Arrow batches through one staged "
-    "cursor, the driver's commit() publishes all staged files at "
-    "once, abort() leaves nothing (pytest-asserted) — the reference's "
-    "per-worker batched INSERT made transactional. The query writes "
-    "the events table through the sink, reads it back, and aggregates; "
-    "the oracle states the expected aggregate of what must have "
-    "arrived exactly-once.",
+    "write protocol (sources/pysource.py SqlUpsertArrowWriter, the "
+    "pypgsync_upsert sink): every task streams its partition's Arrow "
+    "batches through one staged cursor, the driver's commit() runs one "
+    "INSERT .. ON CONFLICT (event_id) DO UPDATE over all staged files "
+    "inside the destination engine (DuckDB), abort() leaves nothing "
+    "(pytest-asserted) — the reference's only write path, per-worker "
+    "batched upserts, made transactional. The query writes the events "
+    "table through the sink into a fresh database file, reads it back "
+    "through the range-partitioned SQL source, and aggregates; the "
+    "oracle states the expected aggregate of what must have arrived "
+    "exactly-once.",
     oracle="""
     SELECT event_type,
            count(*) AS n,
@@ -508,20 +511,30 @@ def s1_pysource_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s4c_pysink_batched_write(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
-    import tempfile
 
-    from pypgsync_spark.sources.pysource import register_sql_sink
+    from pypgsync_spark.sources.pysource import read_sql_table, register_upsert_sink
 
-    register_sql_sink(spark)
-    # pid-scoped (r10 review — see s3c)
-    dest = _pid_scratch_dir("pypgsync_pysink", sf_dir)
+    register_upsert_sink(spark)
+    # pid-scoped (r10 review — see s3c); a fresh database file per call
+    scratch = _pid_scratch_dir("pypgsync_pysink", sf_dir)
+    os.makedirs(scratch, exist_ok=True)
+    db = os.path.join(scratch, "events.duckdb")
+    for old in (db, db + ".wal"):
+        if os.path.exists(old):
+            os.remove(old)
     src = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    src.write.format("pypgsync_sink").option("path", dest).mode("overwrite").save()
-    back = spark.read.parquet(dest)
+    (
+        src.write.format("pypgsync_upsert")
+        .option("db_path", db)
+        .option("table", "events")
+        .option("keys", "event_id")
+        .mode("append")
+        .save()
+    )
+    back = read_sql_table(spark, "events", "event_id", db_path=db)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total"),

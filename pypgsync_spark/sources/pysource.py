@@ -21,20 +21,18 @@ sandbox*, with DuckDB standing in for the RDBMS:
   analogue of predicate pushdown reaching the scan; unsupported filters
   are handed back for Spark to evaluate post-scan.
 
-The module carries the full source/sink matrix on this contract:
+The module carries two sources and one sink on this contract:
 
 - ``pypgsync_sql`` — batch reader (S1/S2, above);
 - ``pypgsync_cdc`` — the continuous polling loop as a streaming
   source: MAX-probe per micro-batch, delta sliced by the same interval
   planner, offsets in the checkpoint (:class:`SqlCdcStreamReader`);
-- ``pypgsync_sink`` — batched file destination with a real two-phase
-  commit, batch and streaming (staged per-task Arrow cursors, driver
-  publish, abort leaves nothing; streaming epochs are replay-guarded
-  by a batch-id marker);
-- ``pypgsync_upsert`` — the reference's ``INSERT .. ON CONFLICT``
-  EXECUTED in the destination engine at commit, batch and streaming
-  (version-guarded last-writer-wins: stale or replayed deltas are
-  semantic no-ops, so the streaming form needs no marker bookkeeping).
+- ``pypgsync_upsert`` — the reference's only write path, batched
+  ``INSERT .. ON CONFLICT``, EXECUTED in the destination engine at a
+  two-phase commit, batch and streaming (staged per-task Arrow cursors,
+  one driver-side merge, abort leaves nothing; version-guarded
+  last-writer-wins makes stale or replayed deltas semantic no-ops, so
+  the streaming form needs no marker bookkeeping).
 
 At 100 TB the same class points at a real warehouse (any DB-API/ADBC
 engine that emits Arrow); the slice planner, chunked fetch, and filter
@@ -68,7 +66,6 @@ from pyspark.sql.datasource import (
 
 SOURCE_NAME = "pypgsync_sql"
 CDC_SOURCE_NAME = "pypgsync_cdc"
-SINK_NAME = "pypgsync_sink"
 UPSERT_SINK_NAME = "pypgsync_upsert"
 
 # DuckDB → Spark DDL (the fixture tables' surface; extend as needed).
@@ -113,6 +110,11 @@ def _sql_literal(v) -> str | None:
     return None  # Decimal, bytes, lists, ... — decline, never str(v)
 
 
+def _sql_ident(name: str) -> str:
+    """One quoted SQL identifier, embedded ``"`` doubled."""
+    return '"' + name.replace('"', '""') + '"'
+
+
 def _compile_filter(f: Filter) -> str | None:
     """One supported filter → SQL, or None when unsupported. Only
     top-level columns (len(attribute) == 1) — nested paths go back to
@@ -120,7 +122,7 @@ def _compile_filter(f: Filter) -> str | None:
     attr = getattr(f, "attribute", None)
     if not attr or len(attr) != 1:
         return None
-    col = '"' + attr[0].replace('"', '""') + '"'
+    col = _sql_ident(attr[0])
     ops = {
         EqualTo: "=",
         GreaterThan: ">",
@@ -178,10 +180,11 @@ def _sql_from_clause(table_path: str, db_path: str | None) -> str:
     """One FROM-clause policy: in db mode ``table_path`` names a TABLE
     inside the database (quoted; schema-qualified names are NOT
     supported — the whole string is one quoted identifier), otherwise
-    it is a parquet path served through read_parquet."""
+    it is a parquet path (a string literal) served through
+    read_parquet."""
     if db_path:
-        return '"' + table_path.replace('"', '""') + '"'
-    return f"read_parquet('{table_path}')"
+        return _sql_ident(table_path)
+    return f"read_parquet({_sql_literal(table_path)})"
 
 
 @dataclass
@@ -189,25 +192,60 @@ class SqlSlicePartition(InputPartition):
     sql: str
 
 
-class SqlSliceReader(DataSourceReader):
-    def __init__(self, schema, options):
-        self.options = options
+class _SqlSlices:
+    """What the batch and the CDC reader share: the options, the slice
+    plan and the per-slice cursor.
+
+    Options: ``table_path`` (parquet path, or in db mode a TABLE inside
+    the DuckDB database file at ``db_path`` — the reference's live-RDBMS
+    shape, session.py:127-151), ``partition_column`` (integer column to
+    range-slice), ``num_partitions`` (default 4), ``fetch_size`` rows
+    per Arrow batch (default 10000)."""
+
+    def __init__(self, options):
         self.table_path = options["table_path"]
         self.partition_column = options["partition_column"]
         self.num_partitions = int(options.get("num_partitions", 4))
         self.fetch_size = int(options.get("fetch_size", 10_000))
-        # db mode (r13, symmetric with the CDC source): table_path
-        # names a TABLE inside the DuckDB database file at db_path —
-        # the reference's live-RDBMS shape for the BATCH slice read
-        # too (session.py:127-151). Parquet stand-in is the default.
         self.db_path = options.get("db_path")
-        self.pushed_sql: list[str] = []
-
-    def _connect(self):
-        return _duck_connect(self.db_path)
 
     def _from_clause(self) -> str:
         return _sql_from_clause(self.table_path, self.db_path)
+
+    def _select(self, where) -> str:
+        sql = f"SELECT * FROM {self._from_clause()}"
+        return sql + (" WHERE " + " AND ".join(where) if where else "")
+
+    def _slices(self, lo: int, hi: int, where=()) -> list[SqlSlicePartition]:
+        """One cursor per closed slice of ``[lo, hi]``, each with
+        ``where`` appended; an empty range (``lo > hi``) plans one cursor
+        that reads nothing (Spark requires ≥1 partition)."""
+        from pypgsync_spark.plans.intervals import plan_slices
+
+        # rows ≈ span is the uniform-density assumption the reference
+        # makes; target sized so the plan yields num_partitions slices
+        span = hi - lo + 1
+        target = max(1, -(-span // self.num_partitions))
+        plan = plan_slices(lo, hi, estimated_rows=span, target_rows_per_slice=target)
+        col = _sql_ident(self.partition_column)
+        return [
+            SqlSlicePartition(self._select([f"{col} >= {a}", f"{col} <= {b}", *where]))
+            for a, b in plan.slices or [(lo, hi)]
+        ]
+
+    def read(self, partition):
+        from contextlib import closing
+
+        with closing(_duck_connect(self.db_path)) as con:
+            yield from con.execute(partition.sql).fetch_record_batch(
+                rows_per_batch=self.fetch_size
+            )
+
+
+class SqlSliceReader(_SqlSlices, DataSourceReader):
+    def __init__(self, schema, options):
+        super().__init__(options)
+        self.pushed_sql: list[str] = []
 
     def pushFilters(self, filters):  # noqa: N802 (Spark API name)
         # replace, never append: Spark holds ONE reader instance per
@@ -230,53 +268,25 @@ class SqlSliceReader(DataSourceReader):
         one metadata-scale query on the driver."""
         from contextlib import closing
 
-        with closing(self._connect()) as con:
+        col = _sql_ident(self.partition_column)
+        with closing(_duck_connect(self.db_path)) as con:
             lo, hi = con.execute(
-                f'SELECT min("{self.partition_column}"), '
-                f'max("{self.partition_column}") '
-                f"FROM {self._from_clause()}"
+                f"SELECT min({col}), max({col}) FROM {self._from_clause()}"
             ).fetchone()
         if lo is None:
             return None
         return int(lo), int(hi)
 
     def partitions(self):
-        from pypgsync_spark.plans.intervals import plan_slices
-
         bounds = self._bounds()
-        base = f"SELECT * FROM {self._from_clause()}"
-        where = list(self.pushed_sql)
         if bounds is None:
-            sql = base + (" WHERE " + " AND ".join(where) if where else "")
-            return [SqlSlicePartition(sql)]
-        lo, hi = bounds
-        # rows ≈ span is the uniform-density assumption the reference
-        # makes; target sized so the plan yields num_partitions slices
-        span = hi - lo + 1
-        target = max(1, -(-span // self.num_partitions))
-        plan = plan_slices(lo, hi, estimated_rows=span, target_rows_per_slice=target)
-        parts = []
-        for slo, shi in plan.slices:
-            preds = [
-                f'"{self.partition_column}" >= {slo}',
-                f'"{self.partition_column}" <= {shi}',
-                *where,
-            ]
-            parts.append(SqlSlicePartition(base + " WHERE " + " AND ".join(preds)))
-        return parts
-
-    def read(self, partition):
-        yield from _read_arrow_slices(partition.sql, self.fetch_size, self.db_path)
+            return [SqlSlicePartition(self._select(self.pushed_sql))]
+        return self._slices(*bounds, self.pushed_sql)
 
 
 class SqlSliceDataSource(DataSource):
-    """``spark.read.format("pypgsync_sql")`` — see module docstring.
-
-    Required options: ``table_path`` (parquet file the stand-in engine
-    serves), ``partition_column`` (integer column to range-slice).
-    Optional: ``num_partitions`` (default 4), ``fetch_size`` rows per
-    Arrow batch (default 10000).
-    """
+    """``spark.read.format("pypgsync_sql")`` — see module docstring and
+    :class:`_SqlSlices` for the options."""
 
     @classmethod
     def name(cls):
@@ -345,7 +355,7 @@ def read_sql_table(
     return reader.load()
 
 
-class SqlCdcStreamReader(DataSourceStreamReader):
+class SqlCdcStreamReader(_SqlSlices, DataSourceStreamReader):
     """The reference's continuous mode as a REAL streaming source.
 
     The reference polls in a loop: probe ``MAX(watermark)``, read the
@@ -372,16 +382,7 @@ class SqlCdcStreamReader(DataSourceStreamReader):
     """
 
     def __init__(self, schema, options):
-        self.options = options
-        self.table_path = options["table_path"]
-        self.partition_column = options["partition_column"]
-        self.num_partitions = int(options.get("num_partitions", 4))
-        self.fetch_size = int(options.get("fetch_size", 10_000))
-        # db mode (r12 verdict #5): table_path names a TABLE inside the
-        # DuckDB database file at db_path — the reference's actual
-        # shape (session.py:127-133 slices a live RDBMS table, not an
-        # export). The parquet stand-in remains the default.
-        self.db_path = options.get("db_path")
+        super().__init__(options)
         start = options.get("start_offset")
         self._start = int(start) if start is not None else -1
         # Highest offset this instance has ever RETURNED from
@@ -394,15 +395,12 @@ class SqlCdcStreamReader(DataSourceStreamReader):
     def initialOffset(self):  # noqa: N802
         return {"last": self._start}
 
-    def _from_clause(self) -> str:
-        return _sql_from_clause(self.table_path, self.db_path)
-
     def _max_id(self) -> int | None:
         from contextlib import closing
 
         with closing(_duck_connect(self.db_path)) as con:
             (hi,) = con.execute(
-                f'SELECT max("{self.partition_column}") '
+                f"SELECT max({_sql_ident(self.partition_column)}) "
                 f"FROM {self._from_clause()}"
             ).fetchone()
         return None if hi is None else int(hi)
@@ -434,26 +432,7 @@ class SqlCdcStreamReader(DataSourceStreamReader):
         return {"last": last}
 
     def partitions(self, start: dict, end: dict):
-        from pypgsync_spark.plans.intervals import plan_slices
-
-        lo, hi = int(start["last"]) + 1, int(end["last"])
-        if lo > hi:
-            # empty micro-batch: one no-op cursor (Spark requires ≥1)
-            return [SqlSlicePartition(self._slice_sql(0, -1))]
-        span = hi - lo + 1
-        target = max(1, -(-span // self.num_partitions))
-        plan = plan_slices(lo, hi, estimated_rows=span, target_rows_per_slice=target)
-        return [SqlSlicePartition(self._slice_sql(a, b)) for a, b in plan.slices]
-
-    def _slice_sql(self, lo: int, hi: int) -> str:
-        return (
-            f"SELECT * FROM {self._from_clause()} "
-            f'WHERE "{self.partition_column}" >= {lo} '
-            f'AND "{self.partition_column}" <= {hi}'
-        )
-
-    def read(self, partition):
-        yield from _read_arrow_slices(partition.sql, self.fetch_size, self.db_path)
+        return self._slices(int(start["last"]) + 1, int(end["last"]))
 
     def commit(self, end: dict) -> None:
         # offset durability is the checkpoint's job; the source keeps
@@ -513,10 +492,9 @@ class _StagedFile(WriterCommitMessage):
 
 
 def _stage_arrow(staging_dir: str, iterator) -> _StagedFile:
-    """Stage one task's Arrow batches as a parquet cursor file — THE
-    task-side half of every sink here (r10 review: it had drifted into
-    three near-identical copies). Empty partitions stage nothing and
-    report zero rows."""
+    """Stage one task's Arrow batches as a parquet cursor file — the
+    task-side half of the upsert sink. Empty partitions stage nothing
+    and report zero rows."""
     import os
     import uuid
 
@@ -537,199 +515,41 @@ def _stage_arrow(staging_dir: str, iterator) -> _StagedFile:
     return _StagedFile(path=path, rows=rows)
 
 
-def _read_arrow_slices(sql: str, fetch_size: int, db_path: str | None = None):
-    """Execute one slice's SQL and stream Arrow record batches — the
-    shared cursor body of the batch and CDC readers. ``db_path`` points
-    the cursor at a real DuckDB database FILE (read-only: many reader
-    processes may share it, the task-parallel shape; the upsert writer
-    must have released the file first — DuckDB's single-writer rule);
-    None keeps the parquet stand-in (anonymous in-memory engine)."""
-    from contextlib import closing
-
-    with closing(_duck_connect(db_path)) as con:
-        reader = con.execute(sql).fetch_record_batch(rows_per_batch=fetch_size)
-        for batch in reader:
-            yield batch
-
-
-def _message_staging_dirs(messages) -> set[str]:
-    """The staging directories the commit messages actually name —
-    cleanup scoped to THESE, never a destination-wide glob (r10
-    review: a glob sweep could reap a CONCURRENT writer's staging for
-    the same destination while its tasks were still running)."""
+def _drop_staging(staging: str, messages) -> None:
+    """Remove a writer's staging directory and the ones its commit
+    messages name (driver and pickled task copies of a writer may not
+    share one staging uuid). Scoped to THESE, never a destination-wide
+    glob (r10 review: a glob sweep could reap a CONCURRENT writer's
+    staging for the same destination while its tasks were still
+    running)."""
     import os
+    import shutil
 
-    return {os.path.dirname(m.path) for m in messages if m and m.path}
-
-
-class SqlBatchArrowWriter(DataSourceArrowWriter):
-    """S4 — batched executor-side writes with a real two-phase commit.
-
-    The reference batches INSERTs through one connection per worker
-    (reference session.py:127-151's executemany path). Spark's V2 write
-    protocol is that, made transactional: every task writes its
-    partition's Arrow batches to a STAGED file under
-    ``<dest>/_staging_<uuid>/`` (one cursor per task, rows flowing
-    batch-by-batch — never materialized whole), returns a commit
-    message, and only the DRIVER's ``commit()`` publishes all staged
-    files into the destination atomically-enough (rename within one
-    filesystem); ``abort()`` removes the staging dir so failed jobs
-    leave NOTHING behind. Against a real warehouse the same protocol
-    is staging tables + ``INSERT ... SELECT`` on commit.
-    """
-
-    def __init__(self, options, overwrite: bool):
-        import uuid
-
-        self.dest = options["path"]
-        self.overwrite = overwrite
-        self.staging = f"{self.dest}/_staging_{uuid.uuid4().hex}"
-
-    def write(self, iterator):
-        return _stage_arrow(self.staging, iterator)
-
-    def commit(self, messages):
-        import glob
-        import os
-        import shutil
-
-        os.makedirs(self.dest, exist_ok=True)
-        if self.overwrite:
-            for old in glob.glob(f"{self.dest}/*.parquet"):
-                os.remove(old)
-            # a fresh overwritten destination must not inherit a prior
-            # streaming query's idempotency markers — they would make a
-            # NEW stream to this dest silently drop its early batches
-            # (r10 review)
-            for marker in glob.glob(f"{self.dest}/_committed_*"):
-                os.remove(marker)
-        for m in messages:
-            if m and m.path:
-                shutil.move(m.path, f"{self.dest}/{os.path.basename(m.path)}")
-        shutil.rmtree(self.staging, ignore_errors=True)
-        for d in _message_staging_dirs(messages):
-            shutil.rmtree(d, ignore_errors=True)
-
-    def abort(self, messages):
-        import shutil
-
-        shutil.rmtree(self.staging, ignore_errors=True)
-        for d in _message_staging_dirs(messages):
-            shutil.rmtree(d, ignore_errors=True)
-
-
-class SqlBatchSinkDataSource(DataSource):
-    """``df.write.format("pypgsync_sink").option("path", dest)`` —
-    the batched, two-phase-commit destination (S4)."""
-
-    @classmethod
-    def name(cls):
-        return SINK_NAME
-
-    def writer(self, schema, overwrite: bool):
-        return SqlBatchArrowWriter(self.options, overwrite)
-
-    def streamWriter(self, schema, overwrite: bool):  # noqa: N802
-        return SqlBatchStreamArrowWriter(self.options)
-
-
-def register_sql_sink(spark) -> None:
-    try:
-        spark.dataSource.register(SqlBatchSinkDataSource)
-    except Exception:
-        pass
-
-
-class SqlBatchStreamArrowWriter(DataSourceStreamArrowWriter):
-    """Streaming side of the batched sink: per-micro-batch two-phase
-    commit with batch-id idempotency.
-
-    Tasks stage their Arrow batches exactly like the batch writer; the
-    driver's ``commit(messages, batchId)`` publishes them under
-    ``batch=<id>-`` prefixed names and drops a ``_committed_<id>``
-    marker FIRST — a replayed micro-batch (crash between sink commit
-    and checkpoint advance) sees its marker and publishes nothing, so
-    the destination holds each batch's rows exactly once. This is the
-    effectively-once contract the reference's non-atomic
-    watermark-then-write loop cannot give (a crash between its two
-    steps re-applies rows)."""
-
-    def __init__(self, options):
-        import uuid
-
-        self.dest = options["path"]
-        # marker namespace: distinct streaming queries writing the SAME
-        # destination must not share idempotency markers (r10 review: a
-        # new query starting at batchId 0 would see the old query's
-        # _committed_0 and silently drop its first batches). The tag
-        # must be stable across RESTARTS of one query, so it cannot be
-        # a uuid — callers set query_tag per logical query; the default
-        # keeps the single-query-per-destination contract.
-        self.tag = options.get("query_tag", "q0")
-        self.staging = f"{self.dest}/_staging_stream_{uuid.uuid4().hex}"
-
-    def write(self, iterator):
-        return _stage_arrow(self.staging, iterator)
-
-    def _marker(self, batch_id: int) -> str:
-        return f"{self.dest}/_committed_{self.tag}_{batch_id}"
-
-    def commit(self, messages, batchId):  # noqa: N803 (Spark API name)
-        import os
-        import shutil
-
-        os.makedirs(self.dest, exist_ok=True)
-        if os.path.exists(self._marker(batchId)):
-            # replayed micro-batch: already published — drop the stage
-            self._clean_staging(messages)
-            return
-        # DETERMINISTIC publish names keyed by (tag, batchId, message
-        # index) — messages arrive indexed by partition id, so a replay
-        # after a crash MID-publish rewrites the same names instead of
-        # accreting a second copy of the partially-published files
-        # (r10 review: task-uuid basenames made replays duplicate rows).
-        for i, m in enumerate(messages):
-            if m and m.path:
-                shutil.move(
-                    m.path,
-                    f"{self.dest}/batch={self.tag}-{batchId}-part-{i:05d}.parquet",
-                )
-        with open(self._marker(batchId), "w") as f:
-            f.write("")
-        self._clean_staging(messages)
-
-    def _clean_staging(self, messages) -> None:
-        import shutil
-
-        # scoped to THIS writer's dir plus the dirs the messages name
-        # (driver and pickled task copies may not share one staging
-        # uuid) — never a destination-wide glob, which could reap a
-        # concurrent writer's staging (r10 review)
-        shutil.rmtree(self.staging, ignore_errors=True)
-        for d in _message_staging_dirs(messages):
-            shutil.rmtree(d, ignore_errors=True)
-
-    def abort(self, messages, batchId):  # noqa: N803
-        self._clean_staging(messages)
+    dirs = {staging} | {os.path.dirname(m.path) for m in messages if m and m.path}
+    for d in dirs:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 class SqlUpsertArrowWriter(DataSourceArrowWriter):
-    """S3 — the reference's ``INSERT ... ON CONFLICT`` upsert sink,
-    EXECUTED against the stand-in SQL engine.
+    """S3/S4 — the reference's batched ``INSERT ... ON CONFLICT`` upsert,
+    EXECUTED against the stand-in SQL engine with a two-phase commit.
 
-    Tasks stage their partitions as Arrow-written parquet (parallel,
-    batched — S4); the driver's ``commit()`` then runs ONE
-    ``INSERT ... SELECT ... ON CONFLICT (keys) DO UPDATE`` over all
-    staged files inside the destination engine: batch-internal
-    duplicates collapse to the highest version first (QUALIFY
-    row_number), and the conflict clause applies last-writer-wins —
-    ``WHERE excluded.version > current.version`` — so replaying a
-    stale delta cannot regress a row (the reference applies deltas in
-    ``ORDER BY updated`` and has no such guard; its semantics are
-    reproduced, its order-sensitivity is not). Staging + driver-side
-    merge is exactly the "staging table + INSERT..SELECT" shape the
-    two-phase sink documents for real warehouses — here the merge SQL
-    actually runs.
+    The reference batches INSERTs through one connection per worker
+    (reference session.py:135-151). Here every task stages its
+    partition's Arrow batches as parquet under ``<db_path>_staging_<uuid>``
+    (one cursor per task, rows flowing batch-by-batch — never
+    materialized whole) and returns a commit message; the driver's
+    ``commit()`` then runs ONE ``INSERT ... SELECT ... ON CONFLICT (keys)
+    DO UPDATE`` over all staged files inside the destination engine:
+    batch-internal duplicates collapse to the highest version first
+    (QUALIFY row_number), and the conflict clause applies
+    last-writer-wins — ``WHERE excluded.version > current.version`` — so
+    replaying a stale delta cannot regress a row (the reference applies
+    deltas in ``ORDER BY updated`` and has no such guard; its semantics
+    are reproduced, its order-sensitivity is not). ``abort()`` removes
+    the staging so a failed job leaves the table untouched. Against a
+    real warehouse the same protocol is staging tables +
+    ``INSERT ... SELECT`` on commit.
     """
 
     def __init__(self, options):
@@ -739,28 +559,22 @@ class SqlUpsertArrowWriter(DataSourceArrowWriter):
         self.table = options["table"]
         self.keys = [k.strip() for k in options["keys"].split(",") if k.strip()]
         self.version_col = options.get("version_col")
-        staging_root = options.get(
-            "staging_dir", self.db_path + "_staging"
-        )
-        self.staging = f"{staging_root}_{uuid.uuid4().hex}"
+        self.staging = f"{self.db_path}_staging_{uuid.uuid4().hex}"
 
     def write(self, iterator):
         return _stage_arrow(self.staging, iterator)
 
-    def _q(self, name: str) -> str:
-        return '"' + name.replace('"', '""') + '"'
-
     def commit(self, messages):
-        import shutil
+        files = [m.path for m in messages if m and m.path]
+        if files:
+            self._merge(files)
+        _drop_staging(self.staging, messages)
 
+    def _merge(self, files: list[str]) -> None:
         import duckdb
 
-        files = [m.path for m in messages if m and m.path]
-        if not files:
-            shutil.rmtree(self.staging, ignore_errors=True)
-            return
-        file_list = ", ".join(f"'{p}'" for p in files)
-        src = f"read_parquet([{file_list}])"
+        q = _sql_ident
+        src = f"read_parquet([{', '.join(_sql_literal(p) for p in files)}])"
         con = duckdb.connect(self.db_path)
         try:
             cols = [
@@ -773,43 +587,34 @@ class SqlUpsertArrowWriter(DataSourceArrowWriter):
                 "SELECT count(*) FROM duckdb_tables() WHERE table_name = ?",
                 [self.table],
             ).fetchone()[0]
+            pk_list = ", ".join(q(k) for k in self.keys)
             if not exists:
-                ddl_cols = ", ".join(f"{self._q(n)} {t}" for n, t in cols)
-                pk = ", ".join(self._q(k) for k in self.keys)
+                ddl_cols = ", ".join(f"{q(n)} {t}" for n, t in cols)
                 con.execute(
-                    f"CREATE TABLE {self._q(self.table)} "
-                    f"({ddl_cols}, PRIMARY KEY ({pk}))"
+                    f"CREATE TABLE {q(self.table)} ({ddl_cols}, PRIMARY KEY ({pk_list}))"
                 )
             non_keys = [n for n, _ in cols if n not in self.keys]
-            set_clause = ", ".join(
-                f"{self._q(c)} = excluded.{self._q(c)}" for c in non_keys
-            )
-            pk_list = ", ".join(self._q(k) for k in self.keys)
+            set_clause = ", ".join(f"{q(c)} = excluded.{q(c)}" for c in non_keys)
             # explicit column lists (r10 review): INSERT ... SELECT *
             # binds POSITIONALLY, so a later batch whose column order
             # differs from the table silently swaps same-typed values
-            col_list = ", ".join(self._q(n) for n, _ in cols)
+            col_list = ", ".join(q(n) for n, _ in cols)
             if self.version_col:
                 # deterministic intra-batch collapse: version first,
                 # then every remaining column — two rows carrying the
                 # SAME (key, version) must not pick a winner by input
                 # order (task scheduling would decide the table's
                 # content)
-                others = [
-                    n
-                    for n, _ in cols
-                    if n not in self.keys and n != self.version_col
-                ]
+                others = [c for c in non_keys if c != self.version_col]
                 order = ", ".join(
-                    [f"{self._q(self.version_col)} DESC"]
-                    + [f"{self._q(c)} DESC" for c in others]
+                    f"{q(c)} DESC" for c in [self.version_col, *others]
                 )
                 guard = (
-                    f" WHERE excluded.{self._q(self.version_col)} > "
-                    f"{self._q(self.table)}.{self._q(self.version_col)}"
+                    f" WHERE excluded.{q(self.version_col)} > "
+                    f"{q(self.table)}.{q(self.version_col)}"
                 )
             else:
-                order = ", ".join(f"{self._q(n)} DESC" for n, _ in cols)
+                order = ", ".join(f"{q(n)} DESC" for n, _ in cols)
                 guard = ""
             # all-columns-are-keys: 'DO UPDATE SET' with an empty list
             # is a parse error — degrade to DO NOTHING, the same shape
@@ -819,7 +624,7 @@ class SqlUpsertArrowWriter(DataSourceArrowWriter):
                 f"DO UPDATE SET {set_clause}{guard}" if non_keys else "DO NOTHING"
             )
             con.execute(
-                f"INSERT INTO {self._q(self.table)} ({col_list}) "
+                f"INSERT INTO {q(self.table)} ({col_list}) "
                 f"SELECT {col_list} FROM {src} "
                 f"QUALIFY row_number() OVER "
                 f"(PARTITION BY {pk_list} ORDER BY {order}) = 1 "
@@ -827,20 +632,9 @@ class SqlUpsertArrowWriter(DataSourceArrowWriter):
             )
         finally:
             con.close()
-        shutil.rmtree(self.staging, ignore_errors=True)
-        # cleanup scoped to the staging dirs the messages actually name
-        # (r10 review: the old destination-wide glob could reap a
-        # CONCURRENT writer's staging for the same warehouse file while
-        # its tasks were still running)
-        for d in _message_staging_dirs(messages):
-            shutil.rmtree(d, ignore_errors=True)
 
     def abort(self, messages):
-        import shutil
-
-        shutil.rmtree(self.staging, ignore_errors=True)
-        for d in _message_staging_dirs(messages):
-            shutil.rmtree(d, ignore_errors=True)
+        _drop_staging(self.staging, messages)
 
 
 class SqlUpsertSinkDataSource(DataSource):

@@ -174,16 +174,14 @@ def pin_num_buckets(
     )
     fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(marker):
-        stream = fs.open(marker)
+        # one readLine round trip, not one Py4J call per byte
+        reader = jvm.java.io.BufferedReader(
+            jvm.java.io.InputStreamReader(fs.open(marker))
+        )
         try:
-            raw = bytearray()
-            b = stream.read()
-            while b != -1 and len(raw) < 64:
-                raw.append(b)
-                b = stream.read()
+            pinned = int(reader.readLine().strip())
         finally:
-            stream.close()
-        pinned = int(bytes(raw).decode().strip())
+            reader.close()
         if num_buckets != "auto" and int(num_buckets) != pinned:
             raise ValueError(
                 f"num_buckets={num_buckets} conflicts with the value pinned in "

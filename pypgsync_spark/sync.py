@@ -348,10 +348,10 @@ class ParquetSyncedTable:
     the written schema as JSON, plus ``version_col`` and its
     ``max_version`` when the writer passes them. ``read()`` reads with
     that schema instead of running a schema-inference job, and
-    :meth:`committed_max` hands ``sync_table`` its low watermark
-    without a scan — Delta Lake's design of keeping schema and
-    statistics in the commit instead of re-deriving them from the data
-    files. ``sync_table`` also records the source files the generation
+    ``sync_table`` takes its low watermark from the recorded
+    ``max_version`` (read off :meth:`head`) without a scan — Delta
+    Lake's design of keeping schema and statistics in the commit
+    instead of re-deriving them from the data files. ``sync_table`` also records the source files the generation
     consumed (``source_files``, ``{path: [size, mtime]}``), so its next
     pass can skip an unchanged source or read only new files, and
     ``compact_store`` carries both records over. A generation without
@@ -433,16 +433,6 @@ class ParquetSyncedTable:
         one written without a commit file."""
         cur = self._current()
         return cur, None if cur is None else self._commit(cur)
-
-    def commit_meta(self) -> dict | None:
-        """The current generation's commit file, or None (no generation,
-        or one written without it)."""
-        return self.head()[1]
-
-    def committed_max(self, version_col: str) -> int | None:
-        """``MAX(version_col)`` as recorded at the current generation's
-        commit; None when no commit file records it for that column."""
-        return _recorded(self.commit_meta(), version_col, "max_version")
 
     def read(self, head: tuple[str | None, dict | None] | None = None) -> DataFrame | None:
         """The current generation, or None. ``head``: a :meth:`head`

@@ -187,6 +187,12 @@ def test_sql_from_clause_quoting():
     assert _sql_from_clause('we"ird', "/x.db") == '"we""ird"'
     assert _sql_from_clause("a.b", "/x.db") == '"a.b"'
     assert _sql_from_clause("/p/t.parquet", None) == "read_parquet('/p/t.parquet')"
+    # a parquet path is a string literal: an apostrophe is doubled, not
+    # left to end the literal early (a directory named o'b)
+    assert (
+        _sql_from_clause("/p/o'b/t.parquet", None)
+        == "read_parquet('/p/o''b/t.parquet')"
+    )
 
 
 def test_cdc_offset_probe_tolerates_mid_stream_writer_lock(tmp_path):

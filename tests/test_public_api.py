@@ -52,8 +52,6 @@ KEEP = {
     # tests/test_ddl.py executes its DDL on DuckDB
     "ddl.ensure_destination": "deploy-time destination clone",
     "ddl.clone_table_ddl": "the DDL ensure_destination renders",
-    # public entry point of the version-guarded ``pypgsync_upsert`` sink
-    "sources.pysource.register_upsert_sink": "registers the pypgsync_upsert sink",
     # the SQL -> store streaming sync (SCALE.md)
     "streaming.continuous.stream_sync_cdc": "SQL-source streaming sync",
     # test references that other tests compare the catalog operators against

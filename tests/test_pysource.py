@@ -216,57 +216,79 @@ def test_cdc_stream_end_to_end(spark, sf_small):
     assert got == want
 
 
-# ---------------- batched two-phase-commit sink ----------------
+# ---------------- two-phase commit of the upsert sink ----------------
+
+
+def _upsert_write(df, db, **opts):
+    w = (
+        df.write.format("pypgsync_upsert")
+        .option("db_path", db)
+        .option("table", "dst")
+        .option("keys", "event_id")
+    )
+    for k, v in opts.items():
+        w = w.option(k, v)
+    w.mode("append").save()
 
 
 def test_sink_writes_and_commits(spark, sf_small, tmp_path):
-    from pypgsync_spark.sources.pysource import register_sql_sink
+    """Every task's staged file lands in the destination table at
+    commit, string columns included (the table is created from the
+    staged schema), and commit leaves no staging directory behind."""
+    import glob
 
-    register_sql_sink(spark)
-    dest = str(tmp_path / "sink_out")
-    src = spark.read.parquet(table_path(sf_small, "events"))
-    src.write.format("pypgsync_sink").option("path", dest).mode("append").save()
-    back = spark.read.parquet(dest)
-    assert back.count() == src.count()
-    import os
+    import duckdb
 
-    # staging fully cleaned after commit
-    assert not [d for d in os.listdir(dest) if d.startswith("_staging_")]
+    from pypgsync_spark.sources.pysource import register_upsert_sink
 
-
-def test_sink_overwrite_replaces(spark, sf_small, tmp_path):
-    from pypgsync_spark.sources.pysource import register_sql_sink
-
-    register_sql_sink(spark)
-    dest = str(tmp_path / "sink_ovw")
-    src = spark.read.parquet(table_path(sf_small, "events")).limit(100)
-    src.write.format("pypgsync_sink").option("path", dest).mode("append").save()
-    src.write.format("pypgsync_sink").option("path", dest).mode("overwrite").save()
-    assert spark.read.parquet(dest).count() == 100
+    register_upsert_sink(spark)
+    db = str(tmp_path / "sink_out.duckdb")
+    src = spark.read.parquet(table_path(sf_small, "events")).select(
+        "event_id", "user_id", "event_type", "value"
+    )
+    _upsert_write(src.repartition(4), db)
+    with duckdb.connect(db) as con:
+        got = sorted(con.execute("SELECT * FROM dst").fetchall())
+    assert got == sorted(map(tuple, src.collect()))
+    assert not glob.glob(f"{db}_staging_*"), "staging must be cleaned"
 
 
 def test_sink_abort_leaves_nothing(spark, sf_small, tmp_path):
-    """A failing write job must not publish partial output (the
-    two-phase protocol's whole point)."""
-    import os
+    """A write job that fails mid-job publishes nothing (the two-phase
+    protocol's whole point): abort() removes the staged files and the
+    destination table keeps exactly what it held before."""
+    import glob
 
-    from pyspark.sql import functions as F
+    import duckdb
 
-    from pypgsync_spark.sources.pysource import register_sql_sink
+    from pypgsync_spark.sources.pysource import register_upsert_sink
 
-    register_sql_sink(spark)
-    dest = str(tmp_path / "sink_abort")
-    src = spark.read.parquet(table_path(sf_small, "events")).withColumn(
-        "boom",
-        F.udf(lambda v: (_ for _ in ()).throw(RuntimeError("boom")) if v is None or True else 1)(
-            F.col("event_id")
-        ),
+    register_upsert_sink(spark)
+    db = str(tmp_path / "sink_abort.duckdb")
+    events = spark.read.parquet(table_path(sf_small, "events")).select(
+        "event_id", "event_type", "value"
     )
-    with pytest.raises(Exception):
-        src.write.format("pypgsync_sink").option("path", dest).mode("append").save()
-    assert not os.path.exists(dest) or not [
-        f for f in os.listdir(dest) if f.endswith(".parquet")
-    ]
+    _upsert_write(events.limit(10), db)
+    with duckdb.connect(db) as con:
+        before = sorted(con.execute("SELECT * FROM dst").fetchall())
+
+    last = events.agg(F.max("event_id")).first()[0]
+
+    def boom(event_id):
+        if event_id == last:  # the partition's final row: mid-write
+            raise RuntimeError("boom")
+        return event_id
+
+    # one partition: the task stages its rows, then fails; no straggler
+    # task can stage after abort() ran
+    failing = events.coalesce(1).withColumn(
+        "event_id", F.udf(boom, "long")(F.col("event_id"))
+    )
+    with pytest.raises(Exception, match="boom"):
+        _upsert_write(failing, db)
+    assert not glob.glob(f"{db}_staging_*"), "abort must drop the staging"
+    with duckdb.connect(db) as con:
+        assert sorted(con.execute("SELECT * FROM dst").fetchall()) == before
 
 
 def test_cdc_foreachbatch_sync_restart_reads_only_delta(spark, tmp_path):
@@ -322,55 +344,31 @@ def test_cdc_foreachbatch_sync_restart_reads_only_delta(spark, tmp_path):
     assert d2 == {0: 100.0, 1: 101.0, 2: 7.0, 3: 8.0, 4: 9.0, 97: 97.0}
 
 
-def test_stream_sink_end_to_end_and_batch_markers(spark, sf_small, tmp_path):
-    """writeStream.format('pypgsync_sink'): a CDC-source stream lands
-    in the destination through per-micro-batch two-phase commits."""
-    import os
-
-    from pypgsync_spark.sources.pysource import read_cdc_stream, register_sql_sink
-
-    register_sql_sink(spark)
-    dest = str(tmp_path / "stream_sink_out")
-    src = read_cdc_stream(spark, table_path(sf_small, "events"), "event_id")
-    q = (
-        src.writeStream.format("pypgsync_sink")
-        .option("path", dest)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(f"{dest}/batch=*")
-    want = spark.read.parquet(table_path(sf_small, "events"))
-    assert got.count() == want.count()
-    markers = [f for f in os.listdir(dest) if f.startswith("_committed_")]
-    assert markers, "commit must leave a batch marker"
-    assert not [d for d in os.listdir(dest) if d.startswith("_staging_")]
-
-
 def test_stream_sink_replayed_batch_publishes_once(tmp_path):
-    """Driver-side idempotency: commit(messages, batchId) called twice
-    for the same batch id (the crash-replay shape) must publish the
-    rows exactly once."""
-    import os
-
+    """Driver-side idempotency of the streaming upsert writer:
+    commit(messages, batchId) called twice for the same batch id (the
+    crash-replay shape, a fresh writer per epoch attempt) leaves the
+    rows in the table exactly once, with no marker bookkeeping."""
+    import duckdb
     import pyarrow as pa
 
-    from pypgsync_spark.sources.pysource import SqlBatchStreamArrowWriter
+    from pypgsync_spark.sources.pysource import SqlUpsertStreamArrowWriter
 
-    dest = str(tmp_path / "replay_dst")
-    w1 = SqlBatchStreamArrowWriter({"path": dest})
-    batch = pa.record_batch({"x": pa.array([1, 2, 3], type=pa.int64())})
-    msg = w1.write(iter([batch]))
-    w1.commit([msg], batchId=7)
-    n1 = len([f for f in os.listdir(dest) if f.endswith(".parquet")])
-
-    # replay: a fresh writer instance (new epoch attempt), same batchId
-    w2 = SqlBatchStreamArrowWriter({"path": dest})
-    msg2 = w2.write(iter([batch]))
-    w2.commit([msg2], batchId=7)
-    n2 = len([f for f in os.listdir(dest) if f.endswith(".parquet")])
-    assert n1 == n2 == 1, "replayed batch must not re-publish"
+    db = str(tmp_path / "replay_dst.duckdb")
+    opts = {"db_path": db, "table": "dst", "keys": "k", "version_col": "ver"}
+    batch = pa.record_batch(
+        {
+            "k": pa.array([1, 2, 3], type=pa.int64()),
+            "ver": pa.array([5, 5, 5], type=pa.int64()),
+        }
+    )
+    for _attempt in range(2):
+        w = SqlUpsertStreamArrowWriter(opts)
+        w.commit([w.write(iter([batch]))], batchId=7)
+    with duckdb.connect(db) as con:
+        assert con.execute("SELECT k, ver FROM dst ORDER BY k").fetchall() == [
+            (1, 5), (2, 5), (3, 5)
+        ]
 
 
 # ---------------- SQL upsert sink (INSERT .. ON CONFLICT) ----------------
@@ -705,61 +703,38 @@ def test_upsert_sink_all_columns_are_keys(spark, tmp_path):
     assert got == [(1, 2), (3, 4), (5, 6)]
 
 
-def test_stream_sink_partial_publish_replay_does_not_duplicate(tmp_path):
-    """r10 review: publish names are deterministic per (tag, batchId,
-    message index), so a replay after a crash MID-publish (some files
-    moved, marker never written) rewrites the same names instead of
-    accreting a second copy of the partially published files."""
-    import os
-
+def test_quoted_paths_and_names_end_to_end(spark, tmp_path):
+    """Paths are SQL string literals and names are quoted identifiers
+    everywhere the module renders SQL: a source parquet and a
+    destination database under a directory named o'b, a partition
+    column named i"d. Unquoted, the slice read and the upsert commit's
+    staged-file list both end a literal early (ParserException)."""
     import duckdb
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    from pypgsync_spark.sources.pysource import SqlBatchStreamArrowWriter
+    from pypgsync_spark.sources.pysource import register_upsert_sink
 
-    dest = str(tmp_path / "crash_dst")
-    batch = pa.record_batch({"x": pa.array([1, 2, 3], type=pa.int64())})
+    d = tmp_path / "o'b"
+    d.mkdir()
+    src = str(d / "t.parquet")
+    pq.write_table(pa.table({'i"d': list(range(20)), "v": [float(i) for i in range(20)]}), src)
+    r = SqlSliceReader(
+        schema=None,
+        options={"table_path": src, "partition_column": 'i"d', "num_partitions": "3"},
+    )
+    parts = r.partitions()
+    assert len(parts) == 3
+    assert sorted(i for p in parts for b in r.read(p) for i in b.column(0).to_pylist()) == list(range(20))
 
-    # attempt 1 "crashes mid-publish": simulate by publishing the files
-    # manually with the writer's naming and NOT writing the marker
-    w1 = SqlBatchStreamArrowWriter({"path": dest})
-    m1 = w1.write(iter([batch]))
-    os.makedirs(dest, exist_ok=True)
-    import shutil
+    register_upsert_sink(spark)
+    db = str(d / "dst.duckdb")
+    (
+        read_sql_table(spark, src, 'i"d', num_partitions=3)
+        .write.format("pypgsync_upsert")
+        .option("db_path", db).option("table", "dst").option("keys", 'i"d')
+        .mode("append").save()
+    )
+    with duckdb.connect(db) as con:
+        assert con.execute("SELECT count(*), sum(v) FROM dst").fetchone() == (20, 190.0)
 
-    shutil.move(m1.path, f"{dest}/batch={w1.tag}-3-part-00000.parquet")
-
-    # attempt 2: full replay of batch 3 through commit()
-    w2 = SqlBatchStreamArrowWriter({"path": dest})
-    m2 = w2.write(iter([batch]))
-    w2.commit([m2], batchId=3)
-
-    files = [f for f in os.listdir(dest) if f.endswith(".parquet")]
-    assert files == ["batch=q0-3-part-00000.parquet"]
-    n = duckdb.connect().execute(
-        f"SELECT count(*) FROM read_parquet('{dest}/*.parquet')"
-    ).fetchone()[0]
-    assert n == 3  # rows exactly once, not 6
-
-
-def test_stream_sink_query_tag_namespaces_markers(tmp_path):
-    """r10 review: markers keyed only by batchId made a NEW query to a
-    reused destination silently drop its early batches (old markers
-    suppressed them). Distinct query_tags keep both queries' batches."""
-    import duckdb
-    import pyarrow as pa
-
-    from pypgsync_spark.sources.pysource import SqlBatchStreamArrowWriter
-
-    dest = str(tmp_path / "reuse_dst")
-    batch = pa.record_batch({"x": pa.array([1], type=pa.int64())})
-
-    a = SqlBatchStreamArrowWriter({"path": dest, "query_tag": "qa"})
-    a.commit([a.write(iter([batch]))], batchId=0)
-    b = SqlBatchStreamArrowWriter({"path": dest, "query_tag": "qb"})
-    b.commit([b.write(iter([batch]))], batchId=0)
-
-    n = duckdb.connect().execute(
-        f"SELECT count(*) FROM read_parquet('{dest}/*.parquet')"
-    ).fetchone()[0]
-    assert n == 2  # the second query's batch 0 was NOT suppressed

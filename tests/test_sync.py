@@ -540,7 +540,7 @@ def test_boundary_rows_at_watermark_still_apply(spark, sf_small, tmp_path):
     src = events_ms(spark, sf_small)
     store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
     sync_table(src, store, KEYS, VER)
-    wm = store.committed_max(VER)
+    wm = store.head()[1]["max_version"]
     assert wm == src.agg(F.max(VER)).first()[0]
     at_wm = src.filter(F.col(VER) == wm).limit(1)
     old_id = at_wm.first()["event_id"]
@@ -568,7 +568,7 @@ def test_store_read_schema_matches_inference(spark, sf_small, tmp_path):
     src = events_ms(spark, sf_small)
     store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
     sync_table(src, store, KEYS, VER)
-    assert store.commit_meta()["version_col"] == VER
+    assert store.head()[1]["version_col"] == VER
     assert store.read().schema == spark.read.parquet(store._current()).schema
 
 
@@ -585,13 +585,13 @@ def test_generation_without_commit_file_reads_and_syncs(spark, sf_small, tmp_pat
     sync_table(src.filter(F.col(VER) < cutoff), store, KEYS, VER)
     gen = store._current()
     os.remove(os.path.join(gen, COMMIT_FILE))
-    assert store.commit_meta() is None and store.committed_max(VER) is None
+    assert store.head()[1] is None
     assert store.read().schema == spark.read.parquet(gen).schema
     stats = sync_table(src, store, KEYS, VER)
     assert stats.low == src.filter(F.col(VER) < cutoff).agg(F.max(VER)).first()[0]
     assert stats.wrote
     assert {tuple(r) for r in store.read().collect()} == {tuple(r) for r in src.collect()}
-    assert store.committed_max(VER) == src.agg(F.max(VER)).first()[0]
+    assert store.head()[1]["max_version"] == src.agg(F.max(VER)).first()[0]
 
 
 def test_crash_before_pointer_flip_keeps_old_generation(spark, sf_small, tmp_path, monkeypatch):
@@ -603,7 +603,7 @@ def test_crash_before_pointer_flip_keeps_old_generation(spark, sf_small, tmp_pat
     src = events_ms(spark, sf_small)
     store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
     sync_table(src, store, KEYS, VER)
-    cur, meta = store._current(), store.commit_meta()
+    cur, meta = store._current(), store.head()[1]
     rows = sorted(map(tuple, store.read().collect()))
 
     real_jpath = store._jpath
@@ -619,7 +619,7 @@ def test_crash_before_pointer_flip_keeps_old_generation(spark, sf_small, tmp_pat
         store.write(newer, VER, 1)
     monkeypatch.setattr(store, "_jpath", real_jpath)
     assert store._current() == cur
-    assert store.commit_meta() == meta
+    assert store.head()[1] == meta
     assert sorted(map(tuple, store.read().collect())) == rows
 
 
@@ -630,11 +630,11 @@ def test_compact_carries_watermark(spark, sf_small, tmp_path):
     store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
     listing = {"file:/landing/part-0.parquet": [1024, 1700000000000]}
     store.write(src.repartition(8), VER, src.agg(F.max(VER)).first()[0], listing)
-    meta = store.commit_meta()
+    meta = store.head()[1]
     assert meta["source_files"] == listing
     assert compact_store(store, target_file_bytes=256 << 20)["compacted"]
-    assert store.commit_meta() == meta
-    assert store.committed_max(VER) == src.agg(F.max(VER)).first()[0]
+    assert store.head()[1] == meta
+    assert store.head()[1]["max_version"] == src.agg(F.max(VER)).first()[0]
 
 
 def test_cold_start_keeps_latest_version_per_key(spark, sf_small, tmp_path):
@@ -753,7 +753,7 @@ def test_unchanged_listing_runs_no_job(spark, tmp_path):
     _land(spark, d, [(3, 2, "c")])
     store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
     assert sync_table(spark.read.parquet(str(d)), store, ["id"], "v").wrote
-    assert len(store.commit_meta()["source_files"]) == 2
+    assert len(store.head()[1]["source_files"]) == 2
     src = spark.read.parquet(str(d))
     before = _job_ids(spark)
     stats = sync_table(src, store, ["id"], "v")
@@ -775,12 +775,12 @@ def test_added_files_read_only_the_new_rows(spark, tmp_path, monkeypatch):
         p.rsplit("/", 1)[1] for p in new
     )
     assert scan.count() == stats.delta_rows == 3
-    assert stats.wrote and stats.rows_changed == 3 and store.committed_max("v") == 7
+    assert stats.wrote and stats.rows_changed == 3 and store.head()[1]["max_version"] == 7
     want = {(i, 5, "old") for i in range(20) if i != 3} | {
         (3, 6, "upd"), (100, 7, "ins"), (101, 6, "ins")
     }
     assert _rows(store) == want
-    assert len(store.commit_meta()["source_files"]) == 3
+    assert len(store.head()[1]["source_files"]) == 3
 
 
 def test_file_rewritten_in_place_takes_the_full_path(spark, tmp_path, monkeypatch):
@@ -845,12 +845,12 @@ def test_row_above_high_in_a_consumed_file_applies_later(spark, tmp_path):
     _land(spark, d, [(1, 1, "a"), (2, 100, "future")])
     store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
     first = sync_table(spark.read.parquet(str(d)), store, ["id"], "v", high=50)
-    assert first.rows_above_high == 1 and "source_files" not in store.commit_meta()
+    assert first.rows_above_high == 1 and "source_files" not in store.head()[1]
     assert _rows(store) == {(1, 1, "a")}
     later = sync_table(spark.read.parquet(str(d)), store, ["id"], "v", high=200)
     assert later.wrote and later.rows_above_high == 0
     assert _rows(store) == {(1, 1, "a"), (2, 100, "future")}
-    assert len(store.commit_meta()["source_files"]) == 1
+    assert len(store.head()[1]["source_files"]) == 1
 
 
 def test_no_change_pass_records_its_new_files(spark, tmp_path):
@@ -876,7 +876,7 @@ def test_no_change_pass_records_its_new_files(spark, tmp_path):
     stats = sync_table(src, store, ["id"], "v")
     assert _job_ids(spark) - before == set()
     assert stats.delta_rows == 0 and not stats.wrote
-    after = store.commit_meta()
+    after = store.head()[1]
     assert sorted(os.path.basename(p) for p in after["source_files"]) == sorted(
         os.path.basename(p) for p in glob.glob(f"{d}/*.parquet")
     )
@@ -907,7 +907,7 @@ def test_non_plain_sources_take_the_full_path(spark, tmp_path, monkeypatch):
     for name, make in sources.items():
         store = ParquetSyncedTable(spark, str(tmp_path / f"dst_{name}"))
         sync_table(make(), store, ["id"], "v")
-        assert "source_files" not in store.commit_meta(), name
+        assert "source_files" not in store.head()[1], name
         seen = _spy_sync_once(monkeypatch)
         src = make()
         assert sync_table(src, store, ["id"], "v").delta_rows == 1, name
@@ -918,7 +918,7 @@ def test_non_plain_sources_take_the_full_path(spark, tmp_path, monkeypatch):
     store = ParquetSyncedTable(spark, str(tmp_path / "dst_empty"))
     shutil.copytree(d, empty)
     sync_table(spark.read.parquet(str(empty)), store, ["id"], "v")
-    assert store.commit_meta()["source_files"]
+    assert store.head()[1]["source_files"]
     for f in empty.glob("*.parquet"):
         f.unlink()
     seen = _spy_sync_once(monkeypatch)
@@ -953,10 +953,10 @@ def test_stream_sync_commits_its_watermark(spark, tmp_path):
 
     first_jobs = drain("dst")
     store = ParquetSyncedTable(spark, str(tmp_path / "dst"))
-    assert store.committed_max("v") == 7
+    assert store.head()[1]["max_version"] == 7
     _land(spark, d, [(1, 9, "a2")])
     drain("dst")
-    assert store.committed_max("v") == 9
+    assert store.head()[1]["max_version"] == 9
     assert _rows(store) == {(1, 9, "a2"), (2, 7, "b")}
 
     # the first drain's one batch, merged and written by hand with no
